@@ -396,8 +396,8 @@ object StreamVecProbe {
         // concurrent with the query stream below)
         val append = graft.api.Graft.bucketedIndexAppender(idxTbl,
           buckets = 256, centroids = Some(cents), idCol = "vec_id",
-          vecCol = "embedding", nlistHint = nlist,
-          compactEvery = compactEvery, maintainEvery = maintainEvery)
+          vecCol = "embedding", compactEvery = compactEvery,
+          maintainEvery = maintainEvery)
         (batch: DataFrame, id: Long) => append(batch, id)
       }
       .option("checkpointLocation", cpI)
@@ -450,19 +450,16 @@ object StreamVecProbe {
         // frames) only when a swap actually landed, not per probe.
         var cachedGen: String = null
         var cachedQuant: DataFrame = null
-        var cachedQn: Int = 0
-        def quantFor(sess: SparkSession, g: String): (DataFrame, Int) = {
-          if (maintainEvery == 0) return (cents, nlist)
+        def quantFor(sess: SparkSession, g: String): DataFrame = {
+          if (maintainEvery == 0) return cents
           if (g != cachedGen) {
             if (cachedQuant != null && cachedQuant.ne(cents))
               graft.ops.ListingCache.release(cachedQuant)
             cachedQuant = graft.api.Graft.loadQuantizer(sess, idxTbl)
               .getOrElse(cents)
-            cachedQn = if (cachedQuant.ne(cents))
-              cachedQuant.count().toInt else nlist
             cachedGen = g
           }
-          (cachedQuant, cachedQn)
+          cachedQuant
         }
         (batch: DataFrame, id: Long) =>
         val sess = batch.sparkSession
@@ -473,11 +470,11 @@ object StreamVecProbe {
         def probeOnce(): (Long, Long) = {
           val g0 = graft.api.Graft.indexGeneration(sess, idxTbl)
           sess.catalog.refreshTable(idxTbl)
-          val (quant, qn) = quantFor(sess, g0)
+          val quant = quantFor(sess, g0)
           val seen = sess.table(idxTbl).count()
           val rows = graft.ops.Vector.ivfProbeSearch(q,
             sess.table(idxTbl), quant, nProbe = 16, k = 5,
-            nlistHint = qn, pruneLists = true).count()
+            pruneLists = true).count()
           if (maintainEvery > 0 &&
               graft.api.Graft.indexGeneration(sess, idxTbl) != g0) {
             cachedGen = null // the pair may be torn: force a reload
@@ -597,7 +594,7 @@ object StreamVecProbe {
         .filter(col("vec_id") >= lo && col("vec_id") < hi)
       val tA = System.nanoTime()
       graft.api.Graft
-        .assignToCentroids(batch, "vec_id", "embedding", cents, nlist)
+        .assignToCentroids(batch, "vec_id", "embedding", cents)
         .withColumn("nrm", sqrt(graft.functions.VectorExpressions
           .dotF32(col("embedding"), col("embedding"))))
         .select(col("vec_id"), col("embedding"), col("nrm"),
@@ -646,7 +643,7 @@ object StreamVecProbe {
       val served = graft.api.Graft.applyTombstones(spark, idxTbl)
       val tP = System.nanoTime()
       val hits = graft.ops.Vector.ivfProbeSearch(probeQ, served, cents,
-        nProbe = 16, k = 5, nlistHint = nlist, pruneLists = true)
+        nProbe = 16, k = 5, pruneLists = true)
         .collect()
       val wProbe = (System.nanoTime() - tP) / 1e9
       val bad = hits.map(_.getLong(1)).filter(deletedIds.contains)
@@ -715,8 +712,7 @@ object StreamVecProbe {
     def ingestPhase(name: String, rows: DataFrame,
         quant: DataFrame): Unit = {
       val append = graft.api.Graft.bucketedIndexAppender(idxTbl,
-        buckets, Some(quant), "vec_id", "embedding",
-        nlistHint = nlist0)
+        buckets, Some(quant), "vec_id", "embedding")
       val withSlice = rows.withColumn("__slice",
         pmod(col("vec_id"), lit(10)))
       val t = System.nanoTime()
@@ -770,8 +766,7 @@ object StreamVecProbe {
       val walls = (1 to 3).map { _ =>
         val t = System.nanoTime()
         val got = graft.ops.Vector.ivfProbeSearch(q,
-            spark.table(idxTbl), quant, nProbe = nProbe, k = k,
-            nlistHint = quant.count().toInt)
+            spark.table(idxTbl), quant, nProbe = nProbe, k = k)
           .select("query_id", "neighbor_id")
           .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
         ((System.nanoTime() - t) / 1e9,
@@ -848,8 +843,7 @@ object StreamVecProbe {
       buckets = buckets)
 
     val append = graft.api.Graft.bucketedIndexAppender(idxTbl, buckets,
-      Some(cents0), "vec_id", "embedding", nlistHint = nlist0,
-      maintainEvery = 5)
+      Some(cents0), "vec_id", "embedding", maintainEvery = 5)
 
     val qDrift = drifted
       .filter(pmod(col("vec_id"), lit(math.max(1L, nDrift / 64))) === 0)
@@ -873,8 +867,7 @@ object StreamVecProbe {
       val quant = graft.api.Graft.loadQuantizer(spark, idxTbl).get
       val t = System.nanoTime()
       val got = graft.ops.Vector.ivfProbeSearch(qDrift,
-          spark.table(idxTbl), quant, nProbe = 16, k = 5,
-          nlistHint = s.quantizerLists.getOrElse(0))
+          spark.table(idxTbl), quant, nProbe = 16, k = 5)
         .select("query_id", "neighbor_id")
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       val wall = (System.nanoTime() - t) / 1e9
@@ -987,7 +980,7 @@ object StreamVecProbe {
       .foreachBatch { (batch: DataFrame, id: Long) =>
         val t = System.nanoTime()
         val assigned = graft.api.Graft
-          .assignToCentroids(batch, "vec_id", "embedding", cents, nlist)
+          .assignToCentroids(batch, "vec_id", "embedding", cents)
           .withColumn("nrm", sqrt(graft.functions.VectorExpressions
             .dotF32(col("embedding"), col("embedding"))))
           .select(col("vec_id"), col("embedding"), col("nrm"),
@@ -1030,7 +1023,7 @@ object StreamVecProbe {
       .select(col("vec_id").as("query_id"),
         col("embedding").as("qe"), col("nrm").as("qn"))
     val hits = graft.ops.Vector.ivfProbeSearch(queries, listed, cents,
-        nProbe = 64, k = 5, nlistHint = nlist)
+        nProbe = 64, k = 5)
       .count()
     println(f"[ingest] post-drain probe rows=$hits " +
       f"wall=${(System.nanoTime() - t1) / 1e9}%.1f")
@@ -1046,7 +1039,7 @@ object StreamVecProbe {
     def probe(prune: Boolean): (Double, Array[org.apache.spark.sql.Row]) = {
       val t = System.nanoTime()
       val rows = graft.ops.Vector.ivfProbeSearch(q8, listed, cents,
-        nProbe = 16, k = 5, nlistHint = nlist, pruneLists = prune)
+        nProbe = 16, k = 5, pruneLists = prune)
         .collect()
       ((System.nanoTime() - t) / 1e9, rows)
     }
@@ -1076,7 +1069,7 @@ object StreamVecProbe {
     for (rep <- 1 to 2) {
       val t = System.nanoTime()
       val rows = graft.ops.Vector.ivfProbeSearch(q8, recompacted, cents,
-        nProbe = 16, k = 5, nlistHint = nlist, pruneLists = true)
+        nProbe = 16, k = 5, pruneLists = true)
         .collect()
       val wc = (System.nanoTime() - t) / 1e9
       require(rows.toSeq == rFrag.toSeq, "compacted probe diverged")

@@ -90,7 +90,7 @@ object VecProbe {
           .kmeansCentroids(train, "vec_id", "embedding", nlistU, iters = 2)
           .localCheckpoint(true)
         val assigned = graft.api.Graft
-          .assignToCentroids(emb, "vec_id", "embedding", cents, nlistU)
+          .assignToCentroids(emb, "vec_id", "embedding", cents)
           .select(col("vec_id"), col("list_id"))
           .localCheckpoint(true)
         val tBuild = (System.nanoTime() - t0) / 1e9
@@ -101,8 +101,7 @@ object VecProbe {
             col("embedding").as("qe"), col("nrm").as("qn"))
         val nProbe = math.max(2, math.ceil(nlistU * 0.4).toInt)
         val listing = graft.ops.Vector.ivfProbeSearch(
-          q, nrm.join(assigned, "vec_id"), cents, nProbe, K,
-          nlistHint = nlistU)
+          q, nrm.join(assigned, "vec_id"), cents, nProbe, K)
         val r = recallOf(listing)
         val tSearch = (System.nanoTime() - t1) / 1e9
         println(f"s04u build=$tBuild%.1f search=$tSearch%.1f " +
@@ -123,7 +122,7 @@ object VecProbe {
           .kmeansCentroids(train, "vec_id", "embedding", nlist, iters = 2)
           .localCheckpoint(true)
         val assigned = graft.api.Graft
-          .assignToCentroids(emb, "vec_id", "embedding", cents, nlist)
+          .assignToCentroids(emb, "vec_id", "embedding", cents)
           .select(col("vec_id"), col("list_id"))
           .localCheckpoint(true)
         val tBuild = (System.nanoTime() - t0) / 1e9
@@ -134,8 +133,7 @@ object VecProbe {
             col("embedding").as("qe"), col("nrm").as("qn"))
         val nProbe = math.max(2, math.ceil(nlist * 0.4).toInt)
         val listing = graft.ops.Vector.ivfProbeSearch(
-          q, nrm.join(assigned, "vec_id"), cents, nProbe, K,
-          nlistHint = nlist)
+          q, nrm.join(assigned, "vec_id"), cents, nProbe, K)
         val r = recallOf(listing)
         val tSearch = (System.nanoTime() - t1) / 1e9
         println(f"s04d build=$tBuild%.1f search=$tSearch%.1f " +
@@ -594,7 +592,7 @@ object VecProbe {
         for (nProbe <- Seq(16, 64, 256)) {
           val t1 = System.nanoTime()
           val r = recall64(graft.ops.Vector.ivfProbeSearch(q64, listed03,
-            cents03, nProbe, K, nlistHint = nlist03))
+            cents03, nProbe, K))
           println(f"recallx s03 nlist=$nlist03 nProbe=$nProbe%-4d " +
             f"probe_pct=${100.0 * nProbe / nlist03}%5.2f " +
             f"wall=${(System.nanoTime() - t1) / 1e9}%6.1f recall=$r%.3f")
@@ -608,7 +606,7 @@ object VecProbe {
           "embedding", nlist = nlist04, iters = 2).localCheckpoint(true)
         val listed04 = normed
           .join(graft.api.Graft.assignToCentroids(emb, "vec_id",
-              "embedding", cents04, nlistHint = nlist04)
+              "embedding", cents04)
               .select(col("vec_id"), col("list_id")), "vec_id")
           .localCheckpoint(true)
         println(f"recallx s04-build wall=" +
@@ -616,7 +614,7 @@ object VecProbe {
         for (nProbe <- Seq(16, 64, 256)) {
           val t1 = System.nanoTime()
           val r = recall64(graft.ops.Vector.ivfProbeSearch(q64, listed04,
-            cents04, nProbe, K, nlistHint = nlist04))
+            cents04, nProbe, K))
           println(f"recallx s04 nlist=$nlist04 nProbe=$nProbe%-4d " +
             f"probe_pct=${100.0 * nProbe / nlist04}%5.2f " +
             f"wall=${(System.nanoTime() - t1) / 1e9}%6.1f recall=$r%.3f")

@@ -1415,7 +1415,7 @@ object Graft {
     * vector splits into `m` contiguous `dim/m`-dim subvectors, and each
     * subspace trains its own `ksub`-centroid quantizer with the
     * distributed Lloyd loop ([[kmeansCentroids]] — deterministic init,
-    * no driver collect). Returns (m, list_id, centroid, cnrm). At
+    * the corpus never collected). Returns (m, list_id, centroid, cnrm). At
     * corpus scale codebooks are trained on a SAMPLE (they are a few KB
     * of state describing the space, not the data); encoding the full
     * corpus is then one map pass.
@@ -1426,7 +1426,7 @@ object Graft {
     * round i's subplan), so the training jobs run when this DataFrame
     * is CONSTRUCTED, not at the first action, and upstream errors
     * surface at call time. Documented build-time driver cost, same
-    * class as [[kmeansCentroids]] above [[KernelNlist]].
+    * class as [[kmeansCentroids]].
     *
     * `l2 = true` trains under the L2 objective (Lloyd assignment by
     * argmin ‖sub − c‖², the Jégou/Faiss PQ formulation) — REQUIRED for
@@ -1477,7 +1477,7 @@ object Graft {
       // a 1M-vector s11 build; PqCodebooksKernelSpec pins parity).
       // Collecting the codebook per round (m·ksub rows, a few KB) also
       // keeps each round's plan flat — the Faiss-style bounded
-      // build-time driver state, same as kmeansCentroids' kernel path.
+      // build-time driver state, same as kmeansCentroids.
       val rows = cents
         .select(col("mi").cast("int"), col("list_id").cast("int"),
           col("centroid"))
@@ -1596,7 +1596,7 @@ object Graft {
     * dead code, so those cells are never read). Feeds the codegen'd
     * [[graft.functions.PqEncodeF32]] encode kernel and the rnorm
     * computation via [[graft.functions.PqAdcLut]]. */
-  private def pqFlatLookup(lookup: DataFrame, m: Int,
+  private[graft] def pqFlatLookup(lookup: DataFrame, m: Int,
       ksub: Int): DataFrame =
     lookup.select(expr(
       s"""array_sort(flatten(transform(map_entries(mb), me ->
@@ -1639,16 +1639,20 @@ object Graft {
     * zero broadcast jobs. */
   private def pqEncodeWithFrozen(df: DataFrame, idCol: String,
       vecCol: String, cells: Column, cbCents: Column, cbCnrms: Column,
-      cnrm2: Column, m: Int, ksub: Int, dsub: Int,
-      carry: Seq[String] = Nil, l2: Boolean = false): DataFrame =
+      cnrm2: Column, dim: Int, m: Int, ksub: Int,
+      carry: Seq[String] = Nil, l2: Boolean = false): DataFrame = {
+    require(m > 0 && dim % m == 0 && ksub > 1,
+      s"pqEncodeWithFrozen(dim=$dim, m=$m, ksub=$ksub)")
+    val dsub = dim / m
     df.withColumn("code", graft.functions.VectorExpressions.pqEncodeF32(
         col(vecCol), cells, cbCents, cbCnrms, m, ksub, dsub, l2 = l2))
       .withColumn("rnorm", sqrt(graft.functions.VectorExpressions
         .pqAdcLut(cnrm2, col("code"), ksub)))
       .select(col(idCol) +: carry.map(col) :+ col(vecCol) :+
         col("code") :+ col("rnorm"): _*)
+  }
 
-  private def pqEncodeWith(df: DataFrame, idCol: String, vecCol: String,
+  private[graft] def pqEncodeWith(df: DataFrame, idCol: String, vecCol: String,
       lookup: DataFrame, dim: Int, m: Int, ksub: Int,
       carry: Seq[String] = Nil, l2: Boolean = false): DataFrame = {
     require(m > 0 && dim % m == 0 && ksub > 1,
@@ -1709,7 +1713,7 @@ object Graft {
     val lookup = iterCheckpoint(pqLookup(cb))
     val (cells, cbc, cbn, cn2) = freezeFlatLookup(lookup, m, ksub)
     val enc = pqEncodeWithFrozen(df, idCol, vecCol, cells, cbc, cbn,
-      cn2, m, ksub, dsub)
+      cn2, dim, m, ksub)
     val q = normalized(df.filter(queryPred), idCol, vecCol)
       .select(col(idCol).as("query_id"), col(vecCol).as("qe"),
         col("nrm").as("qn"))
@@ -1902,7 +1906,7 @@ object Graft {
       dim: Int = -1)
 
   /** Build an [[IvfSqIndex]]: sampled-Lloyd coarse centroids, then ONE
-    * corpus pass that assigns (broadcast argmax) and SQ8-encodes
+    * corpus pass that assigns (kernel argmax) and SQ8-encodes
     * map-side. Zero-direction rows (mx = 0) are excluded, the
     * [[sq8Encode]] convention. */
   def ivfSqBuild(df: DataFrame, idCol: String, vecCol: String,
@@ -1947,35 +1951,10 @@ object Graft {
     IvfSqIndex(cents,
       // frozen-literal encode (r17): one bounded centroid collect,
       // zero broadcast jobs on the corpus encode pass — bit-identical
-      // to the broadcast-join [[sqEncodeAgainst]] (FrozenEncodeSpec)
-      sqEncodeFrozen(df, idCol, vecCol, freezeCents(cents, nl), payload),
+      // to the broadcast-join reference encode (FrozenEncodeSpec)
+      sqEncodeFrozen(df, idCol, vecCol, freezeCents(cents), payload),
       idCol, nl, n, dim = dim)
   }
-
-  /** The IVF-SQ8 ENCODE pass against a FIXED coarse quantizer,
-    * broadcast-join formulation (the [[pqEncodeAgainst]] discipline,
-    * minus codebooks: SQ8 has NOTHING trainable in its encode, so
-    * frozen-state growth is the pure Faiss `add` case). One corpus
-    * pass: assign (broadcast argmax, payload carried) + the max-abs
-    * int8 kernels map-side. Zero-direction rows (mx = 0) are excluded,
-    * the [[sq8Encode]] convention. Output:
-    * (idCol, list_id, mx, q, nrm, payload...).
-    *
-    * Since r17 production paths run [[sqEncodeFrozen]] (same values,
-    * plan literals, zero broadcast jobs); this formulation is RETAINED
-    * as the reference implementation FrozenEncodeSpec pins against. */
-  private[graft] def sqEncodeAgainst(src: DataFrame, idCol: String,
-      vecCol: String, cents: DataFrame, nlist: Int,
-      payload: Seq[String]): DataFrame =
-    assignToCentroids(src, idCol, vecCol, cents, nlist, carry = payload)
-      .withColumn("nrm", sqrt(dot(col(vecCol), col(vecCol))))
-      .withColumn("mx",
-        graft.functions.VectorExpressions.maxAbsF32(col(vecCol)))
-      .filter(col("mx") > 0)
-      .withColumn("q", graft.functions.VectorExpressions
-        .sq8EncodeF32(col(vecCol), col("mx")))
-      .select(col(idCol) +: col("list_id") +: col("mx") +: col("q") +:
-        col("nrm") +: payload.map(col): _*)
 
   /** Probe + scan + rerank against a built [[IvfSqIndex]] — the
     * [[ivfPqSearch]] serving discipline with the int8 dot kernel in
@@ -2023,8 +2002,7 @@ object Graft {
     val q0 = sq8Encode(queries, qidCol, qvecCol)
       .select(col(qidCol).as("query_id"), col(qvecCol).as("qe"),
         col("nrm").as("qn"), col("mx").as("qmx"), col("q").as("qq"))
-    val probes0 = probeTopN(q0, "qe", Some("qn"), index.cents, nProbe,
-        nlistHint = index.nlist)
+    val probes0 = probeTopN(q0, "qe", Some("qn"), index.cents, nProbe)
       .select(col("query_id"), col("qn"), col("qmx"), col("qq"),
         col("list_id"))
     // the shared serving tail ([[pruneToProbedLists]]/[[shortlistCut]]/
@@ -2100,7 +2078,7 @@ object Graft {
     val fz = frozenIdx(spark, "ivfsq", dir, tree, () => {
       val i = ivfSqLoadTree(spark, tree)
       val (vpl, sf) = pqSavedDerivation(spark, tree)
-      FrozenSqIdx(i, freezeCents(i.cents, i.nlist), vpl, sf)
+      FrozenSqIdx(i, freezeCents(i.cents), vpl, sf)
     })
     val idx = fz.idx
     require(idx.buckets > 0,
@@ -2286,14 +2264,14 @@ object Graft {
     * ADC ever touch the whole corpus.
     *
     * Pipeline: (1) `nlist` coarse centroids by distributed Lloyd
-    * ([[kmeansCentroids]] — no driver collect); (2) every corpus vector
+    * ([[kmeansCentroids]] — the corpus never visits the driver);
+    * (2) every corpus vector
     * joins its argmax list ([[assignToCentroids]], map-only); (3) PQ
     * codebooks train in one Lloyd loop and encode each vector as `m`
     * codes ([[pqCodebooks]]/encode, map-only against broadcast
     * codebooks); (4) each query probes its `nProbe` max-cosine lists
-    * ([[probeTopN]] — per-row sorted slice over the broadcast centroid
-    * array at fixture nlist, the native CentroidTopNF32 kernel above
-    * [[KernelNlist]]; no window either way); (5) ADC scores ONLY the
+    * ([[probeTopN]] — the native CentroidTopNF32 kernel per row, no
+    * window); (5) ADC scores ONLY the
     * probed lists' codes — the
     * candidate join is an EQUI-JOIN on the list id, never a flat scan
     * (s10's documented gap); (6) the per-query `shortlist` reranks by
@@ -2438,10 +2416,10 @@ object Graft {
     // broadcast-join subtree each, which removes every per-build
     // broadcast-future job from the encode tail while keeping each
     // value bit-identical (FrozenEncodeSpec pins frozen == broadcast
-    // encode in both assignment regimes).
+    // encode).
     val cents =
       iterCheckpoint(kmeansCentroids(train, idCol, vecCol, nlist, iters))
-    val fc = freezeCents(cents, nlist)
+    val fc = freezeCents(cents)
     // assignment + residual: literal-table argmax + O(1) element_at
     // centroid fetch, subtraction through the codegen'd VecSubF32
     // kernel (an interpreted zip_with here would put a lambda on the
@@ -2464,57 +2442,6 @@ object Graft {
       freezePq(fc, cents, lookup, dim, m, ksub), dim, m, ksub, payload)
     IvfPqIndex(cents, enc, lookup, idCol, nlist, dim, m, ksub,
       rows = nRows)
-  }
-
-  /** The IVF-PQ ENCODE pass against a FIXED quantizer + codebook pair,
-    * broadcast-join formulation: assign each row to its argmax list,
-    * residual-encode against the list centroid, and attach the full
-    * reconstruction norm. Map-side throughout: the centroid table, the
-    * codebook lookup, and the nlist-row reconstruction-term table all
-    * broadcast; the corpus streams once.
-    * Output schema: (idCol, list_id, code, rnorm, payload...).
-    *
-    * Since r17 production paths ([[ivfPqBuild]]'s tail and
-    * [[ivfPqAppend]]) run [[pqEncodeFrozen]] — the same pipeline with
-    * the frozen tables as plan literals, zero broadcast-future jobs.
-    * This formulation is RETAINED as the reference implementation:
-    * FrozenEncodeSpec pins the two bit-identical row for row, which is
-    * the value-equality argument the frozen path rests on. */
-  private[graft] def pqEncodeAgainst(src: DataFrame, idCol: String,
-      vecCol: String, cents: DataFrame, lookup: DataFrame, dim: Int,
-      m: Int, ksub: Int, nlist: Int, payload: Seq[String]): DataFrame = {
-    val dsub = dim / m
-    val centSide = broadcast(cents
-      .select(col("list_id"), col("centroid").as("__cent")))
-    val residuals = assignToCentroids(src, idCol, vecCol, cents, nlist,
-        carry = payload)
-      .join(centSide, "list_id")
-      .withColumn("__res", graft.functions.VectorExpressions
-        .vecSubF32(col(vecCol), col("__cent")))
-    // per-list reconstruction terms for rnorm: clut[cell] =
-    // c_sub(mi)·codebook(mi, code) (the query-LUT kernel run with the
-    // centroid as the "query"), cn2 = ‖c‖² — nlist rows, built once
-    val centTerms = cents
-      .join(broadcast(pqFlatLookup(lookup, m, ksub)
-        .select(col("cells").as("__ctcells"),
-          col("cents").as("__ctcents"))), lit(true))
-      .select(col("list_id"),
-        graft.functions.VectorExpressions.pqQueryLutF32(col("centroid"),
-          col("__ctcells"), col("__ctcents"), m, ksub, dsub).as("__clut"),
-        dot(col("centroid"), col("centroid")).as("__cn2"))
-    val payloadCols = payload.map(col)
-    pqEncodeWith(residuals, idCol, "__res",
-      lookup, dim, m, ksub, carry = Seq("list_id") ++ payload, l2 = true)
-      .select(col(idCol) +: col("list_id") +: col("code") +:
-        col("rnorm") +: payloadCols: _*)
-      .join(broadcast(centTerms), "list_id")
-      // greatest(0, ·): the three LUT terms are float-rounded; a zero
-      // reconstruction must read 0.0, not √(-1e-17) = NaN
-      .select(col(idCol) +: col("list_id") +: col("code") +:
-        sqrt(greatest(lit(0.0), col("__cn2") +
-          lit(2.0) * graft.functions.VectorExpressions
-            .pqAdcLut(col("__clut"), col("code"), ksub) +
-          col("rnorm") * col("rnorm"))).as("rnorm") +: payloadCols: _*)
   }
 
   /** Persist an [[IvfPqIndex]] as plain parquet under `dir` — the
@@ -2779,43 +2706,23 @@ object Graft {
       .map[String](e => e.getValue._1)
       .toArray.toSeq.map(_.toString)
 
-  /** FROZEN quantizer state for literal-plan encodes (r17): the
-    * bounded centroid table collected ONCE and re-embedded as plan
-    * literals / kernel arrays, so re-encoding a batch against it runs
-    * ZERO side jobs per call. The broadcast-join shape launched one
-    * broadcast-future job per frozen subtree per call — 4-5 per
-    * append, per MICRO-BATCH, measured as the dominant job count on
-    * the p18/p19/p20/s17 ingest gates (guide §1.2-1/§3: the frozen
-    * tables are immutable within a generation, so re-executing their
-    * subtrees per batch buys nothing). Values come from executing the
-    * SAME Spark expressions the join shape broadcast (one bounded job
-    * at freeze time), so every downstream float is bit-identical —
-    * p18/p19's grown-equals-built multiset gates pin this. The
-    * literals ride the task binary (TorrentBroadcast once per stage)
-    * exactly like the broadcast relation they replace — same bytes
-    * moved at scale, fewer driver round trips per batch. nlist is
-    * bounded by the deriveNlist 4√n cap, the same driver-size class as
-    * [[collectCentroids]] (which the kernel path already collected PER
-    * CALL; freezing collects once per generation). */
+  /** FROZEN quantizer state (r17): the bounded centroid table collected
+    * ONCE and re-embedded as kernel arrays and plan literals, so
+    * re-encoding a batch against it runs ZERO side jobs per call. The
+    * broadcast-join shape launched one broadcast-future job per frozen
+    * subtree per call — 4-5 per append, per MICRO-BATCH, measured as
+    * the dominant job count on the p18/p19/p20/s17 ingest gates (guide
+    * §1.2-1/§3: the frozen tables are immutable within a generation,
+    * so re-executing their subtrees per batch buys nothing). Values
+    * come from executing the SAME Spark expressions the join shape
+    * broadcast (one bounded job at freeze time), so every downstream
+    * float is bit-identical — p18/p19's grown-equals-built multiset
+    * gates pin this. nlist is bounded by the deriveNlist 4√n cap. */
   private[graft] final case class FrozenCents(
-      nlist: Int,
       rows: Array[(Int, scala.collection.Seq[Float], Double)],
       centroidType: org.apache.spark.sql.types.DataType) {
     import org.apache.spark.sql.types._
     def isEmpty: Boolean = rows.isEmpty
-    private def litCol(v: Any, dt: DataType): Column =
-      org.apache.spark.sql.graft.Bridge.column(
-        org.apache.spark.sql.catalyst.expressions.Literal.create(v, dt))
-    /** array<struct<list_id,centroid,cnrm>> literal — the identical
-      * array the one-row collect_list broadcast carried, feeding the
-      * shared [[centroidArgmaxFold]]. */
-    lazy val structsLit: Column = litCol(
-      rows.toSeq.map { case (id, c, nr) =>
-        org.apache.spark.sql.Row(id, c, nr) },
-      ArrayType(StructType(Seq(
-        StructField("list_id", IntegerType, nullable = false),
-        StructField("centroid", centroidType),
-        StructField("cnrm", DoubleType, nullable = false)))))
     /** Dense array<array<float>> literal indexed by list_id + 1 —
       * replaces the broadcast equi-join that re-attached the centroid
       * for the residual step. Gaps (a Lloyd list can die) are null and
@@ -2825,10 +2732,14 @@ object Graft {
       val size = if (rows.isEmpty) 0 else rows.map(_._1).max + 1
       val dense = new Array[Any](size)
       rows.foreach { case (id, c, _) => dense(id) = c }
-      litCol(dense.toSeq, ArrayType(centroidType, containsNull = true))
+      org.apache.spark.sql.graft.Bridge.column(
+        org.apache.spark.sql.catalyst.expressions.Literal.create(
+          dense.toSeq, ArrayType(centroidType, containsNull = true)))
     }
-    /** The [[collectCentroids]] shape for the native kernel above
-      * [[KernelNlist]], from the same collected values. */
+    /** The [[graft.functions.CentroidTopNF32]] constructor data: (flat
+      * row-major float matrix, cnrm per row, list_id per row, dim).
+      * Short centroids are zero-padded, which the dot product and norm
+      * cannot observe. */
     lazy val kernelArrays: (Array[Float], Array[Double], Array[Int], Int) = {
       val dim = if (rows.isEmpty) 0 else rows.map(_._2.length).max
       val flat = new Array[Float](rows.length * dim)
@@ -2845,14 +2756,25 @@ object Graft {
       }
       (flat, cnrms, ids, dim)
     }
+    /** The `probes` best list ids per `vec` (ARRAY<INT>, best first):
+      * cosine against `nrm` when given, the raw dot product (unit norms
+      * on both sides) when None. Callers handle [[isEmpty]] first. */
+    def topN(vec: Column, nrm: Option[Column], probes: Int,
+        nanWins: Boolean): Column = {
+      val (flat, cnrms, ids, dim) = kernelArrays
+      graft.functions.VectorExpressions.centroidTopN(vec,
+        nrm.getOrElse(lit(1.0)), flat,
+        if (nrm.isDefined) cnrms else Array.fill(cnrms.length)(1.0),
+        ids, dim, probes, nanWins)
+    }
   }
 
-  /** Collect a bounded centroid table once (ONE job). cnrm is computed
-    * by the same sqrt(dotF32) expression the broadcast one-row
-    * aggregation evaluated, so the frozen fold sees bit-identical
-    * values; rows sort by list_id so the embedded literal is
-    * deterministic across runs (the fold itself is order-independent). */
-  private[graft] def freezeCents(cents: DataFrame, nlist: Int): FrozenCents = {
+  /** Collect a bounded centroid table once (ONE job). cnrm is
+    * sqrt(dotF32(centroid, centroid)), the same double-accumulated
+    * fold the kernel applies to each vector; rows sort by list_id so
+    * the embedded literals are deterministic across runs (the kernel
+    * itself is order-independent). */
+  private[graft] def freezeCents(cents: DataFrame): FrozenCents = {
     val rows = cents
       .select(col("list_id").cast("int"), col("centroid"),
         sqrt(dot(col("centroid"), col("centroid"))).as("cnrm"))
@@ -2861,15 +2783,16 @@ object Graft {
         r.getSeq[Float](1): scala.collection.Seq[Float],
         r.getDouble(2)))
       .sortBy(_._1)
-    FrozenCents(nlist, rows, cents.schema("centroid").dataType)
+    FrozenCents(rows, cents.schema("centroid").dataType)
   }
 
-  /** [[assignToCentroids]] against a FROZEN quantizer: the identical
-    * regime switch and expressions (the shared [[centroidArgmaxFold]]
-    * below [[KernelNlist]]; the [[graft.functions.CentroidTopNF32]]
-    * kernel above), minus the per-call one-row aggregation + broadcast
-    * — the cents array is a plan literal. Output schema and every
-    * value match [[assignToCentroids]] row for row. */
+  /** [[assignToCentroids]] against a FROZEN quantizer: the argmax
+    * kernel (`nanWins = true`) over the collected table, no per-call
+    * collect. `carry`: extra columns to pass through the assignment
+    * (payload columns of an index row); a carried column named `nrm`
+    * is RECOMPUTED as the L2 norm of `vecCol` — identical when it held
+    * that norm already (the index layouts all do). Output: (idCol,
+    * vecCol, carry..., list_id INT). */
   private def assignFrozen(df: DataFrame, idCol: String, vecCol: String,
       fc: FrozenCents, carry: Seq[String] = Nil): DataFrame = {
     val n =
@@ -2877,27 +2800,15 @@ object Graft {
       else df.select(col(idCol) +: col(vecCol) +:
         carry.filterNot(_ == "nrm").map(col) :+
         sqrt(dot(col(vecCol), col(vecCol))).as("nrm"): _*)
-    val carried = carry.map(col)
-    if (fc.isEmpty)
-      // empty quantizer => zero assignments, the assignToCentroids
-      // empty-table contract (same schema, zero rows)
-      n.filter(lit(false)).select(col(idCol) +: col(vecCol) +: carried :+
-        lit(0).cast("int").as("list_id"): _*)
-    else if (fc.nlist > KernelNlist) {
-      val (flat, cnrms, ids, dim) = fc.kernelArrays
-      n.select(col(idCol) +: col(vecCol) +: carried :+
-        graft.functions.VectorExpressions.centroidTopN(
-          col(vecCol), col("nrm"), flat, cnrms, ids, dim,
-          probes = 1, nanWins = true).getItem(0).as("list_id"): _*)
-    } else
-      n.withColumn("cents", fc.structsLit)
-        .select(col(idCol) +: col(vecCol) +: carried :+
-          centroidArgmaxFold(col(vecCol), col("nrm")).as("list_id"): _*)
+    val keep = col(idCol) +: col(vecCol) +: carry.map(col)
+    if (fc.isEmpty) noLists(n, keep)
+    else n.select(keep :+ fc.topN(col(vecCol), Some(col("nrm")), 1,
+      nanWins = true).getItem(0).as("list_id"): _*)
   }
 
-  /** The frozen-literal twin of [[pqEncodeAgainst]]'s per-generation
-    * state: codebook arrays ([[pqFlatLookup]]'s one row) plus the
-    * per-list reconstruction terms, dense-indexed by list_id. */
+  /** A generation's frozen IVF-PQ encode state: codebook arrays
+    * ([[pqFlatLookup]]'s one row) plus the per-list reconstruction
+    * terms, dense-indexed by list_id. */
   private[graft] final case class FrozenPq(cents: FrozenCents,
       cellsLit: Column, cbCentsLit: Column, cbCnrmsLit: Column,
       cnrm2Lit: Column, clutByList: Column, cn2ByList: Column)
@@ -2911,20 +2822,11 @@ object Graft {
       lookup: DataFrame, dim: Int, m: Int, ksub: Int): FrozenPq = {
     import org.apache.spark.sql.types._
     val dsub = dim / m
-    val flatDf = pqFlatLookup(lookup, m, ksub)
-    val fSchema = flatDf.schema
-    val fRow = flatDf.head()
-    def flit(i: Int): Column =
-      org.apache.spark.sql.graft.Bridge.column(
-        org.apache.spark.sql.catalyst.expressions.Literal.create(
-          fRow.get(i), fSchema(i).dataType))
-    val cellsLit = flit(fSchema.fieldIndex("cells"))
-    val cbCentsLit = flit(fSchema.fieldIndex("cents"))
-    val cbCnrmsLit = flit(fSchema.fieldIndex("cnrms"))
-    val cnrm2Lit = flit(fSchema.fieldIndex("cnrm2"))
-    // per-list reconstruction terms ([[pqEncodeAgainst]]'s centTerms
-    // subtree), computed ONCE from the already-frozen codebook
-    // literals — same kernel, same inputs, bit-identical values
+    val (cellsLit, cbCentsLit, cbCnrmsLit, cnrm2Lit) =
+      freezeFlatLookup(lookup, m, ksub)
+    // per-list reconstruction terms (c_sub(mi)·codebook(mi, code) — the
+    // query-LUT kernel run with the centroid as the "query" — and
+    // ‖c‖²), computed ONCE from the already-frozen codebook literals
     val ctDf = cents.select(col("list_id").cast("int"),
       graft.functions.VectorExpressions.pqQueryLutF32(col("centroid"),
         cellsLit, cbCentsLit, m, ksub, dsub).as("__clut"),
@@ -2946,16 +2848,22 @@ object Graft {
       dlit(clutDense, clutType), dlit(cn2Dense, DoubleType))
   }
 
-  /** [[pqEncodeAgainst]] against a FROZEN generation — the identical
-    * assign → residual → encode → rnorm pipeline and kernels, with
-    * every per-generation table a plan literal instead of a broadcast
-    * join: the whole encode is ONE map-only stage with zero
-    * broadcast-future jobs. Dense element_at lookups replace the two
-    * nlist-row equi-joins (O(1) per row; list_id always indexes a live
-    * entry — it came from the argmax over the same table). */
+  /** The IVF-PQ ENCODE pass against a FROZEN generation: assign each
+    * row to its argmax list, residual-encode against the list centroid,
+    * and attach the full reconstruction norm. Every per-generation
+    * table is a plan literal instead of a broadcast join, so the whole
+    * encode is ONE map-only stage with zero broadcast-future jobs;
+    * dense element_at lookups replace the two nlist-row equi-joins
+    * (O(1) per row; list_id always indexes a live entry — it came from
+    * the argmax over the same table). FrozenEncodeSpec pins it
+    * bit-identical to the broadcast-join formulation, kept in test
+    * scope as the oracle. Output: (idCol, list_id, code, rnorm,
+    * payload...). */
   private[graft] def pqEncodeFrozen(src: DataFrame, idCol: String,
       vecCol: String, st: FrozenPq, dim: Int, m: Int, ksub: Int,
       payload: Seq[String]): DataFrame = {
+    require(m > 0 && dim % m == 0 && ksub > 1,
+      s"pqEncodeFrozen(dim=$dim, m=$m, ksub=$ksub)")
     val dsub = dim / m
     val payloadCols = payload.map(col)
     assignFrozen(src, idCol, vecCol, st.cents, carry = payload)
@@ -2979,8 +2887,11 @@ object Graft {
           col("rnorm") * col("rnorm"))).as("rnorm") +: payloadCols: _*)
   }
 
-  /** [[sqEncodeAgainst]] against a FROZEN quantizer — same kernels,
-    * literal centroid table, zero side jobs per batch. */
+  /** The IVF-SQ8 ENCODE pass against a FROZEN quantizer: one corpus
+    * pass of assign (payload carried) + the max-abs int8 kernels
+    * map-side, zero side jobs per batch. Zero-direction rows (mx = 0)
+    * are excluded, the [[sq8Encode]] convention. Output:
+    * (idCol, list_id, mx, q, nrm, payload...). */
   private[graft] def sqEncodeFrozen(src: DataFrame, idCol: String,
       vecCol: String, fc: FrozenCents, payload: Seq[String]): DataFrame =
     assignFrozen(src, idCol, vecCol, fc, carry = payload)
@@ -3033,9 +2944,9 @@ object Graft {
   /** Grow a SAVED IVF-PQ index in place — Faiss `IndexIVFPQ.add`
     * semantics: the coarse quantizer and PQ codebooks stay FROZEN
     * (training is batch work on historical data), each new row is
-    * assigned + residual-encoded map-side against the broadcast
-    * frozen tables ([[pqEncodeAgainst]] — the exact encode the build
-    * ran, so an append-built index is row-identical to a batch build
+    * assigned + residual-encoded map-side against the frozen tables
+    * ([[pqEncodeFrozen]] — the exact encode the build ran, so an
+    * append-built index is row-identical to a batch build
     * over the union given the same trained state), and the codes
     * append into the existing `bucket=` hive partitions. The EXISTING
     * codes never read or shuffle — per-append cost is O(batch).
@@ -3064,7 +2975,7 @@ object Graft {
     val fz = frozenIdx(spark, "ivfpq", dir, tree, () => {
       val i = ivfPqLoadTree(spark, tree)
       val (vpl, sf) = pqSavedDerivation(spark, tree)
-      FrozenPqIdx(i, freezePq(freezeCents(i.cents, i.nlist), i.cents,
+      FrozenPqIdx(i, freezePq(freezeCents(i.cents), i.cents,
         i.lookup, i.dim, i.m, i.ksub), vpl, sf)
     })
     val idx = fz.idx
@@ -4020,7 +3931,7 @@ object Graft {
     *     [[kmeansCentroids]] — bounded driver/train cost, identical to
     *     the build path),
     *  4. ONE full-corpus re-assignment pass (map-side against the
-    *     broadcast centroid table; payload columns carried through),
+    *     collected centroid table; payload columns carried through),
     *  5. bucketed rewrite + catalog-pointer swap ([[compactBucketedIndex]]'s
     *     no-absence-window commit), with the NEW quantizer written
     *     into the new generation dir before the swap — rows and
@@ -4077,7 +3988,7 @@ object Graft {
         val payload = cleaned.columns
           .filterNot(c => c == idCol || c == vecCol || c == "list_id")
         assignToCentroids(cleaned, idCol, vecCol, cents,
-          nlistHint = nl, carry = payload.toSeq)
+          carry = payload.toSeq)
       },
       beforeSwap = (newLoc, _) => {
         // write, not copy: the new generation's rows are encoded under
@@ -4125,8 +4036,7 @@ object Graft {
     * (the pubsub source's replay cache provides it). */
   def bucketedIndexAppender(table: String, buckets: Int,
       centroids: Option[DataFrame], idCol: String, vecCol: String,
-      nlistHint: Int = 0, compactEvery: Int = 0,
-      maintainEvery: Int = 0)
+      compactEvery: Int = 0, maintainEvery: Int = 0)
       : (DataFrame, Long) => Unit = {
     require(buckets > 0, s"bucketedIndexAppender(buckets=$buckets)")
     require(compactEvery >= 0,
@@ -4152,7 +4062,10 @@ object Graft {
     // [[saveQuantizer]] at setup (the retrain path keeps it current
     // from then on).
     var quant = centroids
-    var quantNlist = nlistHint
+    // `quant`'s collected kernel state: frozen by the first batch and
+    // re-frozen when a retrain swaps `quant`, so a steady-state batch
+    // runs no centroid-collect job
+    var frozen: Option[FrozenCents] = None
     // true once `quant` is a frame THIS loop pinned (loadQuantizer
     // localCheckpoints); the caller's `centroids` arg is never released
     // here — the caller may still hold it
@@ -4176,7 +4089,9 @@ object Graft {
           s"appender ($buckets, list_id)")
       val assigned = quant match {
         case Some(c) =>
-          assignToCentroids(batch, idCol, vecCol, c, quantNlist)
+          val fc = frozen.getOrElse(freezeCents(c))
+          frozen = Some(fc)
+          assignFrozen(batch, idCol, vecCol, fc)
         case None =>
           require(batch.columns.contains("list_id"),
             s"bucketedIndexAppender($table): no centroids given and " +
@@ -4225,7 +4140,7 @@ object Graft {
         val skewActionable = advice.skewed &&
           skewRetrainActionable(curSkew, postRetrainSkew)
         if (advice.outgrown || skewActionable) {
-          val stats = retrainIndex(spark, table, idCol, vecCol)
+          retrainIndex(spark, table, idCol, vecCol)
           // swap THIS appender onto the retrained quantizer — the next
           // batch must route under the lists the table now holds.
           // Release the frame the PREVIOUS swap pinned (unpersist is a
@@ -4238,8 +4153,8 @@ object Graft {
               s"bucketedIndexAppender($table): retrainIndex published " +
                 "no quantizer")))
           quantPinned = true
+          frozen = quant.map(freezeCents)
           prev.foreach(graft.ops.ListingCache.release)
-          quantNlist = stats.nlist
           val after = indexStats(spark, table)
           postRetrainSkew =
             if (after.occMean > 0) after.occP99 / after.occMean else 0.0
@@ -4252,8 +4167,8 @@ object Graft {
   }
 
   /** Steps (4)–(6) of [[ivfPqTopK]] against a built [[IvfPqIndex]]:
-    * probe selection ([[probeTopN]] — the CentroidTopNF32 kernel above
-    * [[KernelNlist]]), ADC over ONLY the probed lists' codes (equi-join
+    * probe selection ([[probeTopN]] — the CentroidTopNF32 kernel),
+    * ADC over ONLY the probed lists' codes (equi-join
     * on the list id, never a flat scan), exact-cosine rerank of the
     * per-query `shortlist`. `queries` carries (`qidCol`, `qvecCol`);
     * `vectors` is the full-vector store (`index.idCol`, `vecCol`) the
@@ -4424,8 +4339,7 @@ object Graft {
     // coarse term of the residual ADC score (see [[ivfPqBuild]]) — one
     // broadcast equi-join on the bounded centroid table, one extra
     // double per probe row.
-    val probes0 = probeTopN(q, "qe", Some("qn"), index.cents, nProbe,
-      nlistHint = index.nlist)
+    val probes0 = probeTopN(q, "qe", Some("qn"), index.cents, nProbe)
       .join(broadcast(index.cents
         .select(col("list_id"), col("centroid").as("__qcent"))), "list_id")
       .select(col("query_id"), col("qlut"), col("list_id"),
@@ -4630,14 +4544,13 @@ object Graft {
     // over the normalized frame — the old shape joined each back to
     // normalized(df) on id, paying two corpus-sized hash joins for
     // columns the assignment pass already had in hand.
-    val listed = assignToCentroids(df, idCol, vecCol, cents, nlist,
+    val listed = assignToCentroids(df, idCol, vecCol, cents,
       carry = Seq("nrm"))
     val qProbes = probeTopN(
       normalized(df, idCol, vecCol)
         .select(col(idCol).as("query_id"), col(vecCol).as("qe"),
           col("nrm").as("qn")),
-      "qe", Some("qn"), cents, math.min(effProbes, nlist),
-      nlistHint = nlist)
+      "qe", Some("qn"), cents, math.min(effProbes, nlist))
     // Two-phase top-k. The candidate join emits n·probes·occupancy
     // rows; a single global window over query_id would SHUFFLE all of
     // them (the op's one unbounded shuffle — ~10¹⁰ rows past the
@@ -4774,8 +4687,8 @@ object Graft {
   /** SemDeDup-style semantic near-dup pairs (Abbas et al., "SemDeDup:
     * Data-efficient learning at web-scale through semantic
     * deduplication"): cluster the embedding space with the distributed
-    * k-means quantizer ([[kmeansCentroids]] — deterministic init, no
-    * driver collect), assign each vector to its `probes` nearest
+    * k-means quantizer ([[kmeansCentroids]] — deterministic init, the
+    * corpus never collected), assign each vector to its `probes` nearest
     * clusters ([[assignToCentroidsTopN]] — multi-probe assignment
     * recovers the near-dups that sit just across a cluster boundary;
     * probes=1 is the paper's plain single-assignment), then compute
@@ -4790,8 +4703,8 @@ object Graft {
     * by the d12 contract.
     *
     * Scale shape: k-means is `iters` rounds of map-side assignment
-    * against a broadcast nlist-row centroid table plus one aggregation;
-    * multi-probe assignment is a map-side sorted slice; the pair join
+    * against the collected nlist-row centroid table plus one aggregation;
+    * multi-probe assignment is a map-side kernel top-N; the pair join
     * is an equi-join shuffled by list id. The classic blocked-dedup
     * skew — a dominant cluster degenerating toward the quadratic
     * baseline — is AUTO-HANDLED: lists hotter than `hotFactor` × the
@@ -4803,8 +4716,8 @@ object Graft {
       probes: Int = 2, hotFactor: Double = 8.0): DataFrame = {
     val cents = kmeansCentroids(df, idCol, vecCol, nlist, iters)
     val assigned =
-      if (probes <= 1) assignToCentroids(df, idCol, vecCol, cents, nlist)
-      else assignToCentroidsTopN(df, idCol, vecCol, cents, probes, nlist)
+      if (probes <= 1) assignToCentroids(df, idCol, vecCol, cents)
+      else assignToCentroidsTopN(df, idCol, vecCol, cents, probes)
     val contained = containHotClusters(
       assigned.select(col(idCol), col(vecCol), col("list_id")),
       idCol, vecCol, hotFactor)
@@ -5204,166 +5117,38 @@ object Graft {
       .select(col("list_id"),
         expr("transform(pm, x -> CAST(x.m AS FLOAT))").as("centroid"))
 
-  /** nlist above which the centroid-assignment ops leave the HOF
-    * broadcast fold for the native [[graft.functions.CentroidTopNF32]]
-    * kernel: the fold's interpreted lambdas cost ~µs per (row,
-    * centroid), invisible at fixture layouts but n·nlist ≈ 10¹⁰
-    * evaluations once deriveNlist's √n regime puts nlist in the
-    * thousands. Every committed fixture resolves below this (largest:
-    * 500 lists at the 100× slice), so gate plans and rows are
-    * unchanged; CentroidKernelSpec pins the two paths equal. */
-  private val KernelNlist = 1024
-
-  /** The centroid table collected for the kernel path: (flat row-major
-    * float matrix, cnrm per row, list_id per row, dim), or None when
-    * empty. Bounded driver data by construction — nlist never exceeds
-    * deriveNlist's 4√n cap (32 MB at 10⁹ vectors), the same class of
-    * build-time driver action as [[resolveLshDim]]'s LIMIT 1. cnrm is
-    * the identical double-accumulated float fold the HOF path computes
-    * via sqrt(dotF32(centroid, centroid)), so cosines agree bit for
-    * bit; short centroids are zero-padded, which the dot product and
-    * norm cannot observe. */
-  private def collectCentroids(centroids: DataFrame):
-      Option[(Array[Float], Array[Double], Array[Int], Int)] = {
-    val rows = centroids
-      .select(col("list_id").cast("int"), col("centroid")).collect()
-    if (rows.isEmpty) None
-    else {
-      val vecs = rows.map(r => (r.getInt(0), r.getSeq[Float](1)))
-      val dim = vecs.iterator.map(_._2.length).max
-      val flat = new Array[Float](vecs.length * dim)
-      val cnrms = new Array[Double](vecs.length)
-      val ids = new Array[Int](vecs.length)
-      var i = 0
-      while (i < vecs.length) {
-        val (id, v) = vecs(i)
-        ids(i) = id
-        var acc = 0.0
-        var k = 0
-        while (k < v.length) {
-          val f = v(k)
-          flat(i * dim + k) = f
-          acc += f.toDouble * f.toDouble
-          k += 1
-        }
-        cnrms(i) = math.sqrt(acc)
-        i += 1
-      }
-      Some((flat, cnrms, ids, dim))
-    }
-  }
-
-  /** Assign every vector to its max-cosine centroid. The centroid table
-    * (nlist rows) collapses to ONE broadcast row holding an
-    * array<(list_id, centroid, cnrm)>, and each vector computes its
-    * argmax with a per-row fold over that array — purely map-side: no
-    * explode to n×nlist rows, no aggregate, no shuffle, no sort.
-    *
-    * The previous shape expanded to n×nlist rows and ranked them with a
-    * `row_number` window (hash shuffle + sort per call, ×(iters+1)
-    * inside [[kmeansCentroids]]) — the round-3 s04 bench outlier. The
-    * fold's winner condition (cos >, or cos = and list_id <) is
-    * order-independent, so the nondeterministic `collect_list` order
-    * cannot change the result; NaN cosines (zero-norm vectors) follow
-    * Spark's NaN-is-greatest comparison on both shapes.
-    *
-    * `nlistHint`: callers that know the centroid count (every
-    * deriveNlist-driven build does) pass it; above [[KernelNlist]] the
-    * fold switches to the native kernel — same argmax, one compiled
-    * loop, centroids collected once on the driver instead of
-    * re-broadcast as an expression-tree literal. 0 (the default) keeps
-    * the HOF plan. */
+  /** Assign every vector to its max-cosine centroid through the native
+    * [[graft.functions.CentroidTopNF32]] kernel: the centroid table
+    * (nlist rows, bounded by deriveNlist's 4√n cap) is collected once
+    * on the driver ([[freezeCents]] — ONE job, so this is eager) and
+    * rides the plan as kernel constructor data, and each vector takes
+    * its argmax in one compiled loop — purely map-side: no explode to
+    * n×nlist rows, no aggregate, no shuffle, no sort (a ranking window
+    * here paid a shuffle + sort per Lloyd round inside
+    * [[kmeansCentroids]]). Ties go to the lower list_id. A NaN cosine
+    * (zero-norm vector) WINS (`nanWins = true`), so a zero vector lands
+    * deterministically on the lowest list_id instead of raising
+    * DIVIDE_BY_ZERO under ANSI. An empty centroid table gives zero rows
+    * with the same schema. */
   def assignToCentroids(df: DataFrame, idCol: String, vecCol: String,
-      centroids: DataFrame, nlistHint: Int = 0,
-      carry: Seq[String] = Nil): DataFrame = {
-    // `carry`: extra columns to pass through the assignment (payload
-    // columns of an index row). A carried column named `nrm` is
-    // RECOMPUTED as the L2 norm of `vecCol` — identical when it held
-    // that norm already (the index layouts all do).
-    val n =
-      if (carry.isEmpty) normalized(df, idCol, vecCol)
-      else df.select(col(idCol) +: col(vecCol) +:
-        carry.filterNot(_ == "nrm").map(col) :+
-        sqrt(dot(col(vecCol), col(vecCol))).as("nrm"): _*)
-    val carried = carry.map(col)
-    if (nlistHint > KernelNlist) collectCentroids(centroids) match {
-      case Some((flat, cnrms, ids, dim)) =>
-        return n.select(col(idCol) +: col(vecCol) +: carried :+
-          graft.functions.VectorExpressions.centroidTopN(
-            col(vecCol), col("nrm"), flat, cnrms, ids, dim,
-            probes = 1, nanWins = true).getItem(0).as("list_id"): _*)
-      case None => // empty centroid table: fall through (zero rows out)
-    }
-    val cn = centroids.agg(collect_list(struct(
-      col("list_id"), col("centroid"),
-      sqrt(dot(col("centroid"), col("centroid"))).as("cnrm"))).as("cents"))
-    n.join(broadcast(cn), lit(true)) // 1-row build side: adds one column
-      // collect_list over zero centroid rows yields an empty array, and
-      // the fold would then "assign" every vector to the Int.MaxValue
-      // sentinel — an empty centroid table must mean zero assignments
-      .filter(size(col("cents")) > 0)
-      .select(col(idCol) +: col(vecCol) +: carried :+
-        centroidArgmaxFold(col(vecCol), col("nrm")).as("list_id"): _*)
-  }
-
-  /** The HOF argmax fold over a `cents` array column
-    * (array<struct<list_id, centroid, cnrm>>) — shared by
-    * [[assignToCentroids]] (broadcast one-row build side) and the
-    * frozen-literal path ([[assignFrozen]]), so both evaluate the
-    * IDENTICAL expression tree over the same values. */
-  private def centroidArgmaxFold(vec: Column, nrm: Column): Column =
-    aggregate(
-      // cosine computed ONCE per (vector, centroid): HOF lambdas run
-      // interpreted with no common-subexpression elimination, so a
-      // fold that embeds the dot product in both comparisons and the
-      // winner struct evaluates it 3x in the Lloyd hot loop
-      transform(col("cents"), c => struct(
-        c("list_id").cast("int").as("list_id"),
-        (dot(vec, c("centroid")) / (nrm * c("cnrm")))
-          .cast("double").as("cos"))),
-      struct(lit(Int.MaxValue).as("list_id"),
-        lit(-2.0).cast("double").as("cos")),
-      (acc, e) =>
-        when(e("cos") > acc("cos") ||
-            (e("cos") === acc("cos") && e("list_id") < acc("list_id")),
-          e).otherwise(acc))("list_id")
+      centroids: DataFrame, carry: Seq[String] = Nil): DataFrame =
+    assignFrozen(df, idCol, vecCol, freezeCents(centroids), carry)
 
   /** Multi-probe assignment: each vector joins its `probes` nearest
     * centroids (cos desc, list asc tie-break) instead of only the
     * argmax. Map-only like [[assignToCentroids]] — the per-vector
-    * centroid ranking is a sorted array slice inside the row, no window,
-    * no shuffle — at the cost of a ≤`probes`× row amplification
-    * downstream. This is the spill-tree/overlapping-clusters recall fix
-    * for cluster-blocked operations: near-dups sitting just across a
-    * cluster boundary share a probe with high probability. */
+    * centroid ranking is [[probeTopN]]'s kernel call inside the row, no
+    * window, no shuffle — at the cost of a ≤`probes`× row amplification
+    * downstream. A NaN cosine LOSES. This is the
+    * spill-tree/overlapping-clusters recall fix for cluster-blocked
+    * operations: near-dups sitting just across a cluster boundary share
+    * a probe with high probability. */
   def assignToCentroidsTopN(df: DataFrame, idCol: String, vecCol: String,
-      centroids: DataFrame, probes: Int, nlistHint: Int = 0): DataFrame = {
+      centroids: DataFrame, probes: Int): DataFrame = {
     require(probes > 0, s"assignToCentroidsTopN(probes=$probes)")
-    val n = normalized(df, idCol, vecCol)
-    if (nlistHint > KernelNlist) collectCentroids(centroids) match {
-      case Some((flat, cnrms, ids, dim)) =>
-        // nanWins = false: the sorted-slice HOF orders by (negcos,
-        // list_id) ascending, where a NaN negcos sorts GREATEST — the
-        // opposite NaN placement from the argmax fold; each path keeps
-        // its historical semantics (see CentroidTopNF32)
-        return n.select(col(idCol), col(vecCol),
-          explode(graft.functions.VectorExpressions.centroidTopN(
-            col(vecCol), col("nrm"), flat, cnrms, ids, dim,
-            probes = probes, nanWins = false)).as("list_id"))
-      case None => // empty centroid table: fall through (zero rows out)
-    }
-    val cn = centroids.agg(collect_list(struct(
-      col("list_id"), col("centroid"),
-      sqrt(dot(col("centroid"), col("centroid"))).as("cnrm"))).as("cents"))
-    n.join(broadcast(cn), lit(true))
-      .filter(size(col("cents")) > 0)
-      .select(col(idCol), col(vecCol),
-        explode(slice(array_sort(transform(col("cents"), c => struct(
-          (-(dot(col(vecCol), c("centroid")) / (col("nrm") * c("cnrm"))))
-            .cast("double").as("negcos"),
-          c("list_id").cast("int").as("list_id")))), 1, probes))
-          .as("probe"))
-      .select(col(idCol), col(vecCol), col("probe.list_id").as("list_id"))
+    probeTopN(normalized(df, idCol, vecCol), vecCol, Some("nrm"),
+        centroids, probes)
+      .select(col(idCol), col(vecCol), col("list_id"))
   }
 
   /** QUERY-side probe selection shared by the IVF family ([[ivfPqTopK]]
@@ -5377,58 +5162,30 @@ object Graft {
     * norm is constant within a query and cannot change its own probe
     * ranking, so that core never divides).
     *
-    * At or below [[KernelNlist]] this is the broadcast single-row HOF
-    * sorted slice — map-only, and one Exchange LIGHTER than the
-    * row_number window it replaced in the probe core (probe selection
-    * is per-row; it never needed a shuffle). Above the threshold it
-    * switches to the [[graft.functions.CentroidTopNF32]] kernel: the
-    * r10 corpus-side fix applied to the query side. The HOF's
-    * interpreted lambdas cost ~µs per (row, centroid) — invisible at
-    * the 8 fixture queries, but a real retrieval or SemDeDup batch
-    * probes 10⁴–10⁶ queries against a 4√n-capped nlist (~126k lists at
-    * 10⁹ vectors), the identical n·nlist interpreter cliff measured at
-    * 604 s on the corpus assignment side before its kernel.
-    * QueryProbeKernelSpec pins the two paths equal row for row in both
-    * scoring modes; a NaN score (NaN vector components — under ANSI
-    * the cosine path raises DIVIDE_BY_ZERO on a zero norm before any
-    * NaN exists) loses on both paths (array_sort's NaN-last placement;
-    * kernel `nanWins = false`). */
+    * One [[graft.functions.CentroidTopNF32]] call per row against the
+    * collected centroid table (one bounded job at call time): map-only,
+    * no window, no join. A real retrieval or SemDeDup batch probes
+    * 10⁴–10⁶ queries against a 4√n-capped nlist (~126k lists at 10⁹
+    * vectors) — the n·nlist product an interpreted per-row lambda
+    * would pay was measured at 604 s on the corpus assignment side.
+    * A NaN score loses (`nanWins = false`). An empty centroid table
+    * gives zero probe rows with the same schema. */
   private[graft] def probeTopN(q: DataFrame, vecCol: String,
-      nrmCol: Option[String], centroids: DataFrame, nProbe: Int,
-      nlistHint: Int = 0): DataFrame = {
+      nrmCol: Option[String], centroids: DataFrame,
+      nProbe: Int): DataFrame = {
     require(nProbe > 0, s"probeTopN(nProbe=$nProbe)")
+    val fc = freezeCents(centroids)
     val keep = q.columns.toSeq.map(col)
-    if (nlistHint > KernelNlist) collectCentroids(centroids) match {
-      case Some((flat, cnrms, ids, dim)) =>
-        val (nrm, cn) = nrmCol match {
-          case Some(c) => (col(c).cast("double"), cnrms)
-          case None => (lit(1.0), Array.fill(cnrms.length)(1.0))
-        }
-        return q.select((keep :+
-          explode(graft.functions.VectorExpressions.centroidTopN(
-            col(vecCol), nrm, flat, cn, ids, dim,
-            probes = nProbe, nanWins = false)).as("list_id")): _*)
-      case None => // empty centroid table: zero probe rows, same schema
-        return q.filter(lit(false))
-          .select((keep :+ lit(0).as("list_id")): _*)
-    }
-    val cn = centroids.agg(collect_list(struct(
-      col("list_id"), col("centroid"),
-      sqrt(dot(col("centroid"), col("centroid"))).as("cnrm"))).as("cents"))
-    def score(c: Column): Column = nrmCol match {
-      case Some(nc) =>
-        dot(col(vecCol), c("centroid")) / (col(nc) * c("cnrm"))
-      case None => dot(col(vecCol), c("centroid"))
-    }
-    q.join(broadcast(cn), lit(true)) // 1-row build side: adds one column
-      .filter(size(col("cents")) > 0)
-      .select((keep :+
-        explode(slice(array_sort(transform(col("cents"), c => struct(
-          (-score(c)).cast("double").as("negscore"),
-          c("list_id").cast("int").as("list_id")))), 1, nProbe))
-          .as("probe")): _*)
-      .select((keep :+ col("probe.list_id").as("list_id")): _*)
+    if (fc.isEmpty) noLists(q, keep)
+    else q.select(keep :+ explode(fc.topN(col(vecCol),
+      nrmCol.map(col(_).cast("double")), nProbe, nanWins = false))
+      .as("list_id"): _*)
   }
+
+  /** Zero rows of `keep` plus an INT `list_id` — every assignment's
+    * answer to an empty centroid table. */
+  private def noLists(df: DataFrame, keep: Seq[Column]): DataFrame =
+    df.filter(lit(false)).select(keep :+ lit(0).as("list_id"): _*)
 
   /** Distributed Lloyd refinement for an IVF coarse quantizer:
     * deterministic FORGY init — each initial centroid is a REAL data
@@ -5441,17 +5198,15 @@ object Graft {
     * 999 lists of which only 277 ended nonempty — 3.6× the intended
     * occupancy crowded into the survivors; point-init covers the
     * clusters because every initial centroid already sits inside one).
-    * Every step is joins and aggregations — the CORPUS never visits
-    * the driver, so the shape holds at any scale. (Above [[KernelNlist]]
-    * each round's
-    * assignment collects the bounded nlist-row centroid table for the
-    * native argmax kernel — ≤ 4√n rows by the deriveNlist discipline,
-    * the Faiss-style build-time driver cost — which also keeps each
-    * round's plan flat: the collected values replace the nested
-    * centroid subplan, so round i+1 never re-executes round i. That
-    * path is therefore NOT lazy — the Lloyd jobs run at DataFrame
-    * construction, and upstream errors surface at call time; below
-    * the threshold the loop stays fully lazy joins/aggregations.)
+    * The CORPUS never visits the driver, so the shape holds at any
+    * scale. Each round's assignment ([[assignToCentroids]]) collects
+    * the bounded nlist-row centroid table for the native argmax kernel
+    * — ≤ 4√n rows by the deriveNlist discipline, the Faiss-style
+    * build-time driver cost — which also keeps each round's plan flat:
+    * the collected values replace the nested centroid subplan, so
+    * round i+1 never re-executes round i. This is therefore NOT lazy:
+    * the Lloyd jobs (one nlist-row collect per round) run at DataFrame
+    * construction, and upstream errors surface at call time.
     * Returns (list_id, centroid). */
   def kmeansCentroids(df: DataFrame, idCol: String, vecCol: String,
       nlist: Int, iters: Int): DataFrame = {
@@ -5465,7 +5220,7 @@ object Graft {
       .agg(min_by(col(vecCol), hash(col(idCol))).as("centroid"))
     (0 until iters).foreach { _ =>
       cents = meanCentroids(
-        assignToCentroids(df, idCol, vecCol, cents, nlist)
+        assignToCentroids(df, idCol, vecCol, cents)
           .select(col("list_id"), col(vecCol)), vecCol)
     }
     cents

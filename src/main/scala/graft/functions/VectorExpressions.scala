@@ -609,9 +609,10 @@ object LshProbesAll {
   * the deriveNlist √n crossover put nlist in the thousands and the
   * assignment pass at n·nlist ≈ 10¹⁰ lambda evaluations — hours of
   * interpreter overhead for ~1 minute of actual flops. This kernel is
-  * the same argmax/top-N as one JIT-compiled loop; [[graft.api.Graft]]
-  * switches to it above a fixed nlist threshold, so every committed
-  * fixture keeps the HOF plan bit for bit.
+  * the same argmax/top-N as one JIT-compiled loop, and
+  * [[graft.api.Graft]] runs every centroid assignment and probe
+  * selection through it; the HOF shapes live on in test scope as its
+  * oracles.
   *
   * Semantics match the two HOF shapes exactly (CentroidKernelSpec
   * pins both against random data):

@@ -23,7 +23,7 @@ object Vector {
   private val NQueries = 8 // query vectors: vec_id < 8
 
   /** IVF probe + rerank shared by s03/s04: queries pick their nProbe
-    * max-cosine lists from the (broadcast) centroid table, then ONLY the
+    * max-cosine lists from the collected centroid table, then ONLY the
     * probed lists are searched and reranked by exact cosine — the
     * candidate join is an equi-join on the list id, never a cross
     * product. `assignments` = (vec_id, list_id). */
@@ -42,19 +42,17 @@ object Vector {
     * from a micro-batch): `q` = (query_id, qe, qn), `listed` = the
     * searchable index (vec_id, embedding, nrm, list_id). Queries pick
     * their nProbe max-dot lists through [[graft.api.Graft.probeTopN]]
-    * — per-row map-side selection (no window shuffle; the native
-    * CentroidTopNF32 kernel above the KernelNlist threshold, so a
-    * 10⁴⁺-query batch against a √n-capped nlist never runs the
-    * interpreted HOF cliff), then ONLY the probed lists are searched
-    * and reranked by exact cosine — the candidate join is an equi-join
-    * on the list id, never a cross product. `nlistHint`: callers that
-    * know the centroid count pass it to engage the kernel switch (the
-    * fixture callers' nlist ≤ 10 keeps the HOF plan either way). */
+    * — per-row map-side selection by the native CentroidTopNF32 kernel
+    * (no window shuffle, no join; the centroid table is collected once
+    * per call, so a 10⁴⁺-query batch against a √n-capped nlist never
+    * runs an interpreted per-centroid lambda), then ONLY the probed
+    * lists are searched and reranked by exact cosine — the candidate
+    * join is an equi-join on the list id, never a cross product. */
   private[graft] def ivfProbeSearch(q: DataFrame, listed: DataFrame,
       centroids: DataFrame, nProbe: Int, k: Int,
-      nlistHint: Int = 0, pruneLists: Boolean = false): DataFrame = {
+      pruneLists: Boolean = false): DataFrame = {
     val probes0 = graft.api.Graft
-      .probeTopN(q, "qe", nrmCol = None, centroids, nProbe, nlistHint)
+      .probeTopN(q, "qe", nrmCol = None, centroids, nProbe)
       .select(col("query_id"), col("qe"), col("qn"), col("list_id"))
     // pruneLists: the online-serving path. The broadcast equi-join
     // already touches only the probed lists' ROWS, but the index SCAN
@@ -562,8 +560,8 @@ object Vector {
       // IVF with a TRAINED coarse quantizer: instead of trusting the
       // label column (s03), the centroids come from two distributed
       // Lloyd iterations — deterministic id%nlist init, then
-      // assign-to-nearest + element-wise mean, all joins/aggregations
-      // with no driver collect (graft.api.Graft.kmeansCentroids). The
+      // assign-to-nearest + element-wise mean, the corpus never
+      // collected (graft.api.Graft.kmeansCentroids). The
       // probe + rerank tail is identical to s03's. SketchAccuracySpec
       // additionally asserts that training does not degrade the
       // quantizer (mean assigned cosine >= the untrained init's).

@@ -349,21 +349,27 @@ class PlanPropertiesSpec extends AnyFunSuite with Matchers {
       .queryExecution.explainString(FormattedMode)
     (p should not).include("CartesianProduct")
     p should include("BroadcastHashJoin")
-    // Round-4: centroid assignment is a per-row fold over the broadcast
-    // centroid array, not a row_number window — the window paid a full
-    // sort + shuffle per Lloyd round (×(iters+1)) and was the r3 s04
-    // bench outlier. Assert on the assignment subplan itself: the only
-    // windows left in s04 are ivfSearch's probe pick and final top-k
-    // rank. (The HashAggregates below are centroid training's, which
-    // feeds the assignment plan.)
+    // Centroid assignment is one native kernel call per row against
+    // the collected centroid table — not a row_number window (which
+    // paid a full sort + shuffle per Lloyd round, ×(iters+1), the r3
+    // s04 bench outlier), and not a join of a one-row centroid array
+    // ranked by interpreted lambdas. Assert on the assignment subplan
+    // itself: the only window left in s04 is the final top-k rank.
     val emb = graft.Tables.load(spark, sfDir, "embeddings")
     val cents = graft.api.Graft
       .kmeansCentroids(emb, "vec_id", "embedding", nlist = 10, iters = 2)
-    val assignPlan = graft.api.Graft
-      .assignToCentroids(emb, "vec_id", "embedding", cents)
-      .queryExecution.executedPlan.toString
+    val assignQe = graft.api.Graft
+      .assignToCentroids(emb, "vec_id", "embedding", cents).queryExecution
+    val assignExprs = assignQe.optimizedPlan
+      .flatMap(_.expressions.flatMap(_.collect { case e => e }))
+    assignExprs.exists(
+      _.isInstanceOf[graft.functions.CentroidTopNF32]) shouldBe true
+    assignExprs.exists(_.isInstanceOf[
+      org.apache.spark.sql.catalyst.expressions.LambdaFunction]) shouldBe
+      false
+    val assignPlan = assignQe.executedPlan.toString
     (assignPlan should not).include("Window")
-    assignPlan should include("HashAggregate")
+    (assignPlan should not).include("Join")
   }
 
   test("t09 curation pipeline: every stage joins on doc_id — equi-joins " +

@@ -295,11 +295,31 @@ class CompactIndexSpec extends AnyFunSuite with Matchers {
       "embedding", nlist = 4, iters = 1).localCheckpoint(true)
     val append = Graft.bucketedIndexAppender(tbl, Buckets,
       Some(cents), "vec_id", "embedding", compactEvery = 3)
-    (0 until 6).foreach { i =>
+    // the job feed per batch, to count the quantizer's collect jobs
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.add(js.stageInfos.map(_.name).mkString("|")); ()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val collectsPerBatch = try (0 until 6).map { i =>
       append(vecs(i * 200L, 200), i)
       if (i == 3) // a delete mid-stream, purged by the next cadence hit
         Graft.ivfDelete(spark, tbl, Seq(0L, 777L).toDF("vec_id"))
-    }
+      // listener bus is async: wait for the job feed to go quiet
+      var last = -1
+      while (jobs.size != last) { last = jobs.size; Thread.sleep(200) }
+      val names = jobs.toArray(Array.empty[String])
+      jobs.clear()
+      names.count(_.contains("collect at Graft"))
+    } finally spark.sparkContext.removeSparkListener(listener)
+    // the first batch freezes the quantizer (one collect); batches with
+    // no compaction or delete run no collect at all — a steady-state
+    // batch never re-collects the centroid table
+    collectsPerBatch(0) shouldBe 1
+    Seq(1, 4).map(collectsPerBatch) shouldBe Seq(0, 0)
     // two cadence compactions ran (after batches 2 and 5): bounded
     // files, exact rows (1200 ingested − 2 tombstoned), nothing pending
     parquetFiles(liveDir(tbl)).size should be <= Buckets

@@ -10,11 +10,10 @@ import org.scalatest.matchers.should.Matchers
   * micro-batch). These tests pin the two properties that make that
   * optimization safe:
   *
-  *  1. the frozen-literal encode is BIT-IDENTICAL to the batch build's
-  *     broadcast-join encode — append-grown codes equal a batch build
-  *     over the union, row for row, in BOTH assignment regimes (the
-  *     HOF fold at fixture nlist and the native kernel above
-  *     KernelNlist = 1024);
+  *  1. the frozen-literal encode is BIT-IDENTICAL to the broadcast-join
+  *     reference encode ([[ReferenceEncodes]]), and append-grown codes
+  *     equal a batch build over the union, row for row, at a fixture
+  *     nlist and at a √n-regime nlist (1,100 lists);
   *  2. the generation cache holds ONE live entry per index dir — a
   *     publish (retrain/compact) REPLACES the entry instead of
   *     accumulating one per dead generation (the r16-verdict eviction
@@ -53,7 +52,7 @@ class FrozenEncodeSpec extends AnyFunSuite with Matchers {
   }
 
   test("PQ append-grown codes are bit-identical to the batch build " +
-      "over the union (HOF assignment regime, payload carried)") {
+      "over the union (fixture nlist, payload carried)") {
     val a = mkCorpus(0 until 250, seed = 71)
     val b = mkCorpus(250 until 400, seed = 72)
     val union = a.unionByName(b)
@@ -74,8 +73,8 @@ class FrozenEncodeSpec extends AnyFunSuite with Matchers {
     sameRows(grown, pinned.enc)
   }
 
-  test("PQ frozen encode stays bit-identical in the KERNEL assignment " +
-      "regime (nlist above KernelNlist = 1024)") {
+  test("PQ frozen encode stays bit-identical at a sqrt(n)-regime nlist " +
+      "(1,100 lists)") {
     val a = mkCorpus(0 until 2400, seed = 81)
     val union = a
     val dir = java.nio.file.Files
@@ -119,8 +118,8 @@ class FrozenEncodeSpec extends AnyFunSuite with Matchers {
     val built = Graft.ivfPqBuild(corpus, "vec_id", "embedding",
       dim = Dim, nlist = 6, m = 4, ksub = 8, iters = 1,
       payload = Seq("lang"))
-    val reference = Graft.pqEncodeAgainst(corpus, "vec_id", "embedding",
-      built.cents, built.lookup, Dim, 4, 8, 6, Seq("lang"))
+    val reference = ReferenceEncodes.pqEncodeAgainst(corpus, "vec_id",
+      "embedding", built.cents, built.lookup, Dim, 4, 8, Seq("lang"))
     sameRows(built.enc, reference)
   }
 
@@ -129,9 +128,22 @@ class FrozenEncodeSpec extends AnyFunSuite with Matchers {
     val corpus = mkCorpus(0 until 400, seed = 121)
     val built = Graft.ivfSqBuild(corpus, "vec_id", "embedding",
       nlist = 6, iters = 1, payload = Seq("lang"))
-    val reference = Graft.sqEncodeAgainst(corpus, "vec_id", "embedding",
-      built.cents, 6, Seq("lang"))
+    val reference = ReferenceEncodes.sqEncodeAgainst(corpus, "vec_id",
+      "embedding", built.cents, Seq("lang"))
     sameRows(built.enc, reference)
+  }
+
+  test("pqEncodeFrozen rejects a dim that m does not divide by name, " +
+      "instead of mis-slicing the subvectors") {
+    val corpus = mkCorpus(0 until 120, seed = 131)
+    val built = Graft.ivfPqBuild(corpus, "vec_id", "embedding",
+      dim = Dim, nlist = 4, m = 4, ksub = 8, iters = 1)
+    val st = Graft.freezePq(Graft.freezeCents(built.cents), built.cents,
+      built.lookup, Dim, 4, 8)
+    val e = the[IllegalArgumentException] thrownBy
+      Graft.pqEncodeFrozen(corpus, "vec_id", "embedding", st,
+        dim = Dim, m = 3, ksub = 8, payload = Nil)
+    e.getMessage should include("pqEncodeFrozen(dim=16, m=3, ksub=8)")
   }
 
   test("the generation cache keeps ONE live entry per dir: a retrain " +

@@ -5,12 +5,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
-/** The native centroid-assignment kernel ([[CentroidTopNF32]]) against
-  * the HOF broadcast-fold paths it replaces above the KernelNlist
-  * threshold: argmax parity, top-N order parity, tie-break by list_id,
-  * the NaN-placement split between the two HOF shapes, and codegen vs
-  * interpreted agreement. The hint parameter is the ONLY switch — same
-  * data through both paths must be identical row for row. */
+/** The native centroid-assignment kernel ([[CentroidTopNF32]]) — the
+  * only path behind `Graft.assignToCentroids` / `assignToCentroidsTopN`
+  * — against the HOF broadcast-fold oracles it replaced
+  * ([[CentroidOracle]]): argmax parity, top-N order parity, tie-break
+  * by list_id, the NaN-placement split between the two shapes, and
+  * codegen vs interpreted agreement. Same data through the kernel and
+  * the oracle must be identical row for row. */
 class CentroidKernelSpec extends AnyFunSuite with Matchers {
 
   private lazy val spark = SparkSession.builder()
@@ -20,7 +21,6 @@ class CentroidKernelSpec extends AnyFunSuite with Matchers {
     .getOrCreate()
 
   private val Dim = 16
-  private val ForceKernel = 100000 // any hint above KernelNlist
 
   private def vecDf(n: Int, seed: Int,
       withZero: Boolean = false): DataFrame = {
@@ -49,33 +49,44 @@ class CentroidKernelSpec extends AnyFunSuite with Matchers {
     rows.toDF("list_id", "centroid")
   }
 
-  private def argmaxRows(vecs: DataFrame, cents: DataFrame,
-      hint: Int): Seq[(Long, Int)] =
-    graft.api.Graft.assignToCentroids(vecs, "vec_id", "embedding",
-        cents, hint)
-      .select(col("vec_id"), col("list_id"))
+  private def argmaxRows(assigned: DataFrame): Seq[(Long, Int)] =
+    assigned.select(col("vec_id"), col("list_id"))
       .collect().map(r => (r.getLong(0), r.getInt(1))).toSeq.sorted
 
-  private def topNRows(vecs: DataFrame, cents: DataFrame, probes: Int,
-      hint: Int): Map[Long, Seq[Int]] =
-    graft.api.Graft.assignToCentroidsTopN(vecs, "vec_id", "embedding",
-        cents, probes, hint)
-      .select(col("vec_id"), col("list_id"))
+  private def kernelArgmax(vecs: DataFrame,
+      cents: DataFrame): Seq[(Long, Int)] = argmaxRows(
+    graft.api.Graft.assignToCentroids(vecs, "vec_id", "embedding", cents))
+
+  private def oracleArgmax(vecs: DataFrame,
+      cents: DataFrame): Seq[(Long, Int)] = argmaxRows(
+    CentroidOracle.argmax(vecs, "vec_id", "embedding", cents))
+
+  private def topNRows(assigned: DataFrame): Map[Long, Seq[Int]] =
+    assigned.select(col("vec_id"), col("list_id"))
       .collect().map(r => (r.getLong(0), r.getInt(1)))
       .groupBy(_._1).map { case (k, v) => k -> v.map(_._2).toSeq }
+
+  private def kernelTopN(vecs: DataFrame, cents: DataFrame,
+      probes: Int): Map[Long, Seq[Int]] = topNRows(
+    graft.api.Graft.assignToCentroidsTopN(vecs, "vec_id", "embedding",
+      cents, probes))
+
+  private def oracleTopN(vecs: DataFrame, cents: DataFrame,
+      probes: Int): Map[Long, Seq[Int]] = topNRows(
+    CentroidOracle.topN(vecs, "vec_id", "embedding", cents, probes))
 
   test("kernel argmax equals the HOF fold on random data") {
     val vecs = vecDf(200, seed = 1)
     val cents = centDf(50, seed = 2)
-    argmaxRows(vecs, cents, ForceKernel) shouldBe argmaxRows(vecs, cents, 0)
+    kernelArgmax(vecs, cents) shouldBe oracleArgmax(vecs, cents)
   }
 
   test("kernel top-N equals the HOF sorted slice, per-query order " +
     "included (explode preserves best-first)") {
     val vecs = vecDf(150, seed = 3)
     val cents = centDf(40, seed = 4)
-    val k = topNRows(vecs, cents, probes = 3, hint = ForceKernel)
-    val h = topNRows(vecs, cents, probes = 3, hint = 0)
+    val k = kernelTopN(vecs, cents, probes = 3)
+    val h = oracleTopN(vecs, cents, probes = 3)
     k.keySet shouldBe h.keySet
     k.foreach { case (id, lists) => lists shouldBe h(id) }
   }
@@ -83,9 +94,9 @@ class CentroidKernelSpec extends AnyFunSuite with Matchers {
   test("identical centroids tie-break by lower list_id on both paths") {
     val vecs = vecDf(80, seed = 5)
     val cents = centDf(30, seed = 6, dupEvery = 7)
-    argmaxRows(vecs, cents, ForceKernel) shouldBe argmaxRows(vecs, cents, 0)
-    val k = topNRows(vecs, cents, probes = 4, hint = ForceKernel)
-    val h = topNRows(vecs, cents, probes = 4, hint = 0)
+    kernelArgmax(vecs, cents) shouldBe oracleArgmax(vecs, cents)
+    val k = kernelTopN(vecs, cents, probes = 4)
+    val h = oracleTopN(vecs, cents, probes = 4)
     k.foreach { case (id, lists) => lists shouldBe h(id) }
   }
 
@@ -94,22 +105,29 @@ class CentroidKernelSpec extends AnyFunSuite with Matchers {
     "ids (the HOF paths cannot run this case at all: ANSI mode turns " +
     "the 0/0 into DIVIDE_BY_ZERO)") {
     val vecs = vecDf(18, seed = 7, withZero = true) // ids 0, 17 are zero
+    // a fixture-sized nlist: the HOF fold once served this regime, and
+    // the zero vectors made it raise instead of assign
     val cents = centDf(25, seed = 8)
-    // hint forces the kernel; NaN ties resolve by list_id on both shapes
-    val am = argmaxRows(vecs, cents, ForceKernel).toMap
+    // NaN ties resolve by list_id on both shapes
+    val am = kernelArgmax(vecs, cents).toMap
     am(0L) shouldBe 0
     am(17L) shouldBe 0
-    val tn = topNRows(vecs, cents, probes = 3, hint = ForceKernel)
+    val tn = kernelTopN(vecs, cents, probes = 3)
     tn(0L) shouldBe Seq(0, 1, 2)
     tn(17L) shouldBe Seq(0, 1, 2)
+    // the oracle fold on the same rows: ANSI's DIVIDE_BY_ZERO
+    val e = intercept[Exception](oracleArgmax(vecs, cents))
+    Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage)
+        .contains("DIVIDE_BY_ZERO")) shouldBe true
   }
 
   test("probes beyond nlist returns nlist assignments, like the HOF " +
     "slice") {
     val vecs = vecDf(20, seed = 9)
     val cents = centDf(3, seed = 10)
-    val k = topNRows(vecs, cents, probes = 5, hint = ForceKernel)
-    val h = topNRows(vecs, cents, probes = 5, hint = 0)
+    val k = kernelTopN(vecs, cents, probes = 5)
+    val h = oracleTopN(vecs, cents, probes = 5)
     k.foreach { case (id, lists) =>
       lists.length shouldBe 3
       lists shouldBe h(id)
@@ -119,10 +137,10 @@ class CentroidKernelSpec extends AnyFunSuite with Matchers {
   test("codegen and interpreted kernel paths agree") {
     val vecs = vecDf(40, seed = 11)
     val cents = centDf(20, seed = 12)
-    val onWS = argmaxRows(vecs, cents, ForceKernel)
+    val onWS = kernelArgmax(vecs, cents)
     spark.conf.set("spark.sql.codegen.wholeStage", "false")
     spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    try argmaxRows(vecs, cents, ForceKernel) shouldBe onWS
+    try kernelArgmax(vecs, cents) shouldBe onWS
     finally {
       spark.conf.set("spark.sql.codegen.wholeStage", "true")
       spark.conf.unset("spark.sql.codegen.factoryMode")

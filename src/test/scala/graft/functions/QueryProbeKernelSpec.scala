@@ -6,16 +6,13 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
 /** The QUERY-side probe selection (`graft.api.Graft.probeTopN` — the
-  * shared s03/s04/s11/p16 probe core) across its two paths: the HOF
-  * sorted slice (fixture nlist) and the [[CentroidTopNF32]] kernel
-  * (above KernelNlist). The hint parameter is the ONLY switch — same
-  * queries and centroids through both paths must produce identical
-  * probe rows in identical per-query order, in BOTH scoring modes
-  * (cosine with a norm column, raw dot without), with every ride-along
-  * column preserved. The r10 CentroidKernelSpec pins the CORPUS
-  * assignment side; this is its query-side twin (r10 verdict finding
-  * #1: the interpreted-HOF cliff was fixed for corpus assignment but
-  * still live for 10⁴⁺-query probe batches). */
+  * shared s03/s04/s11/p16 probe core, the [[CentroidTopNF32]] kernel)
+  * against the HOF sorted-slice oracle it replaced
+  * ([[CentroidOracle.probeTopN]]): same queries and centroids must
+  * produce identical probe rows in identical per-query order, in BOTH
+  * scoring modes (cosine with a norm column, raw dot without), with
+  * every ride-along column preserved. CentroidKernelSpec pins the
+  * CORPUS assignment side; this is its query-side twin. */
 class QueryProbeKernelSpec extends AnyFunSuite with Matchers {
 
   private lazy val spark = SparkSession.builder()
@@ -25,7 +22,6 @@ class QueryProbeKernelSpec extends AnyFunSuite with Matchers {
     .getOrCreate()
 
   private val Dim = 16
-  private val ForceKernel = 100000 // any hint above KernelNlist
 
   private def queryDf(n: Int, seed: Int): DataFrame = {
     import spark.implicits._
@@ -50,10 +46,12 @@ class QueryProbeKernelSpec extends AnyFunSuite with Matchers {
     rows.toDF("list_id", "centroid")
   }
 
-  /** Ordered probe lists per query, plus the ride-along column. */
+  /** Ordered probe lists per query, plus the ride-along column —
+    * through the kernel, or through the oracle when `oracle`. */
   private def probeRows(q: DataFrame, cents: DataFrame, nrmCol: Option[String],
-      nProbe: Int, hint: Int): Map[Long, (Seq[Int], Set[String])] =
-    graft.api.Graft.probeTopN(q, "qe", nrmCol, cents, nProbe, hint)
+      nProbe: Int, oracle: Boolean): Map[Long, (Seq[Int], Set[String])] =
+    (if (oracle) CentroidOracle.probeTopN(q, "qe", nrmCol, cents, nProbe)
+     else graft.api.Graft.probeTopN(q, "qe", nrmCol, cents, nProbe))
       .select(col("query_id"), col("list_id"), col("ride"))
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2)))
       .groupBy(_._1)
@@ -63,8 +61,8 @@ class QueryProbeKernelSpec extends AnyFunSuite with Matchers {
     "probe order and ride-along columns included") {
     val q = queryDf(120, seed = 1)
     val cents = centDf(40, seed = 2)
-    val k = probeRows(q, cents, Some("qn"), nProbe = 4, hint = ForceKernel)
-    val h = probeRows(q, cents, Some("qn"), nProbe = 4, hint = 0)
+    val k = probeRows(q, cents, Some("qn"), nProbe = 4, oracle = false)
+    val h = probeRows(q, cents, Some("qn"), nProbe = 4, oracle = true)
     k.keySet shouldBe h.keySet
     k.foreach { case (id, row) => row shouldBe h(id) }
   }
@@ -73,8 +71,8 @@ class QueryProbeKernelSpec extends AnyFunSuite with Matchers {
     "kernel equals the HOF sorted slice") {
     val q = queryDf(120, seed = 3)
     val cents = centDf(40, seed = 4)
-    val k = probeRows(q, cents, None, nProbe = 4, hint = ForceKernel)
-    val h = probeRows(q, cents, None, nProbe = 4, hint = 0)
+    val k = probeRows(q, cents, None, nProbe = 4, oracle = false)
+    val h = probeRows(q, cents, None, nProbe = 4, oracle = true)
     k.keySet shouldBe h.keySet
     k.foreach { case (id, row) => row shouldBe h(id) }
   }
@@ -84,8 +82,8 @@ class QueryProbeKernelSpec extends AnyFunSuite with Matchers {
     val q = queryDf(60, seed = 5)
     val cents = centDf(30, seed = 6, dupEvery = 5)
     for (mode <- Seq(Some("qn"), None)) {
-      val k = probeRows(q, cents, mode, nProbe = 6, hint = ForceKernel)
-      val h = probeRows(q, cents, mode, nProbe = 6, hint = 0)
+      val k = probeRows(q, cents, mode, nProbe = 6, oracle = false)
+      val h = probeRows(q, cents, mode, nProbe = 6, oracle = true)
       k.foreach { case (id, row) => row shouldBe h(id) }
     }
   }
@@ -93,8 +91,8 @@ class QueryProbeKernelSpec extends AnyFunSuite with Matchers {
   test("nProbe beyond nlist probes every list, like the HOF slice") {
     val q = queryDf(20, seed = 7)
     val cents = centDf(3, seed = 8)
-    val k = probeRows(q, cents, Some("qn"), nProbe = 9, hint = ForceKernel)
-    val h = probeRows(q, cents, Some("qn"), nProbe = 9, hint = 0)
+    val k = probeRows(q, cents, Some("qn"), nProbe = 9, oracle = false)
+    val h = probeRows(q, cents, Some("qn"), nProbe = 9, oracle = true)
     k.foreach { case (id, (lists, ride)) =>
       lists.length shouldBe 3
       (lists, ride) shouldBe h(id)
@@ -105,9 +103,9 @@ class QueryProbeKernelSpec extends AnyFunSuite with Matchers {
     "present, on both paths") {
     val q = queryDf(5, seed = 9)
     val cents = centDf(4, seed = 10).filter(lit(false))
-    for (hint <- Seq(0, ForceKernel)) {
-      val out = graft.api.Graft.probeTopN(q, "qe", Some("qn"), cents,
-        nProbe = 3, hint)
+    for (out <- Seq(
+        graft.api.Graft.probeTopN(q, "qe", Some("qn"), cents, nProbe = 3),
+        CentroidOracle.probeTopN(q, "qe", Some("qn"), cents, nProbe = 3))) {
       out.columns should contain("list_id")
       out.count() shouldBe 0L
     }
@@ -128,12 +126,24 @@ class QueryProbeKernelSpec extends AnyFunSuite with Matchers {
     val q = n.filter(col("vec_id") < 8)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
         col("nrm").as("qn"))
-    def listing(hint: Int): Seq[(Long, Long, Long)] =
-      graft.ops.Vector.ivfProbeSearch(q, n.join(assigned, "vec_id"),
-          cents, nProbe = 4, k = 5, nlistHint = hint)
-        .select(col("query_id"), col("neighbor_id"), col("rnk"))
+    val listed = n.join(assigned, "vec_id")
+    def rows(df: DataFrame): Seq[(Long, Long, Long)] =
+      df.select(col("query_id"), col("neighbor_id"), col("rnk"))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
         .toSeq.sorted
-    listing(ForceKernel) shouldBe listing(0)
+    // the reference listing: oracle probes, then the exact-cosine
+    // rerank over the probed lists' members (self excluded)
+    val dotF = VectorExpressions.dotF32(col("qe"), col("embedding"))
+    val reference = CentroidOracle.probeTopN(q, "qe", None, cents, 4)
+      .join(listed, "list_id")
+      .filter(col("query_id") =!= col("vec_id"))
+      .select(col("query_id"), col("vec_id").as("neighbor_id"),
+        (dotF / (col("qn") * col("nrm"))).as("cos"))
+      .withColumn("rnk", row_number().over(
+        org.apache.spark.sql.expressions.Window.partitionBy("query_id")
+          .orderBy(col("cos").desc, col("neighbor_id"))).cast("bigint"))
+      .filter(col("rnk") <= 5)
+    rows(graft.ops.Vector.ivfProbeSearch(q, listed, cents,
+      nProbe = 4, k = 5)) shouldBe rows(reference)
   }
 }
