@@ -1534,39 +1534,9 @@ object Graft {
       s"pmod(conv(substring(md5(CAST($idCol AS STRING)), 1, 8), 16, 10)," +
         s" 1000000) < ${math.max(1L, cap * 1000000L / n)}"))
 
-  /** Per-query ADC lookup table (Jégou et al.'s table trick): for each
-    * query, precompute the query⋅sub-centroid dot product for EVERY
-    * (subspace, code) cell — m·ksub doubles, a few KB, computed once on
-    * the tiny query side — flattened as
-    * `qlut[mi * ksub + code] = dot(qe_sub(mi), centroid(mi, code))`.
-    * The per-CANDIDATE ADC score then degenerates to m array reads via
-    * the codegen'd [[graft.functions.PqAdcLut]] instead of the m×dsub
-    * interpreted multiply-adds the inline HOF paid per row (the r7
-    * bench's slowest per-byte code, s10). The table build itself runs
-    * as the [[graft.functions.PqQueryLutF32]] kernel against the same
-    * flattened codebook the encode kernel uses — the nested-transform
-    * HOF it replaces evaluated m·ksub·dsub interpreted lambda calls
-    * plus two map lookups PER QUERY, a per-batch term the r11
-    * many-query regime multiplies by 10⁵ (r10's codes-only ADC made
-    * the read side cheap; the build side was the leftover). Each
-    * cell's dot is the identical ascending sequential fold, so ADC
-    * scores are bit-identical and shortlist order is unchanged
-    * (QueryLutKernelSpec). Dead codebook cells (Lloyd can empty one)
-    * fill with 0.0 — no corpus row carries a dead code, so those cells
-    * are never read. */
-  private def pqQueryLut(q: DataFrame, lookup: DataFrame,
-      m: Int, ksub: Int, dsub: Int): DataFrame =
-    q.join(broadcast(pqFlatLookup(lookup, m, ksub)
-        .select(col("cells").as("__qlcells"),
-          col("cents").as("__qlcents"))), lit(true))
-      .withColumn("qlut", graft.functions.VectorExpressions
-        .pqQueryLutF32(col("qe"), col("__qlcells"), col("__qlcents"),
-          m, ksub, dsub))
-      .drop("__qlcells", "__qlcents")
-
-  /** The broadcastable codebook lookup: one row holding
+  /** The codebook lookup: one row holding
     * mb: MAP<m, MAP<list_id, STRUCT<centroid, cnrm>>>. */
-  private def pqLookup(codebooks: DataFrame): DataFrame =
+  private[graft] def pqLookup(codebooks: DataFrame): DataFrame =
     codebooks
       .groupBy("m")
       .agg(map_from_entries(collect_list(struct(col("list_id"),
@@ -1577,19 +1547,24 @@ object Graft {
 
   /** PQ encoding: every vector becomes `m` small codes — the code for
     * subspace mi is the sub-centroid with maximal cosine to the mi-th
-    * subvector. One map pass against the broadcast codebooks (the
-    * argmax is an array_min over (−cos, code) structs inside the row —
+    * subvector. One map pass against the frozen codebook (the few-KB
+    * flattened table collected once and embedded as plan literals —
     * no join, no shuffle); also emits `rnorm`, the norm of the
     * reconstruction, so ADC scores can be cosine-normalized. At 16
     * centroids per subspace a 64-dim float vector (256 bytes) becomes
     * m=8 nibble-codes — a 64× smaller index is the entire point of PQ
-    * at 100 TB. */
+    * at 100 TB. EAGER like [[pqTopK]]: freezing the codebook runs one
+    * bounded head() job at call time. */
   def pqEncode(df: DataFrame, idCol: String, vecCol: String,
       codebooks: DataFrame, dim: Int, m: Int = 8,
-      ksub: Int = 16): DataFrame =
-    pqEncodeWith(df, idCol, vecCol, pqLookup(codebooks), dim, m, ksub)
+      ksub: Int = 16): DataFrame = {
+    require(m > 0 && dim % m == 0 && ksub > 1,
+      s"pqEncode(dim=$dim, m=$m, ksub=$ksub)")
+    pqEncodeWithFrozen(df, idCol, vecCol,
+      freezeFlatLookup(pqLookup(codebooks), m, ksub), dim, m, ksub)
+  }
 
-  /** The flattened, broadcastable codebook (one row): sorted live cells
+  /** The flattened codebook (one row): sorted live cells
     * (`mi * ksub + code` — Lloyd can empty cells, so entries are
     * sparse), their centroids concatenated, their norms, and a dense
     * m·ksub cnrm² lookup (0.0 at dead cells — no corpus row carries a
@@ -1620,8 +1595,8 @@ object Graft {
     * cnrm2) — the flat-PQ member of the r17 frozen-literal family:
     * the per-call broadcast-future job the one-row join paid becomes
     * one head() at freeze time, and every consumer plan is map-only. */
-  private def freezeFlatLookup(lookup: DataFrame, m: Int, ksub: Int)
-      : (Column, Column, Column, Column) = {
+  private def freezeFlatLookup(lookup: DataFrame, m: Int,
+      ksub: Int): FrozenFlat = {
     val flatDf = pqFlatLookup(lookup, m, ksub)
     val fSchema = flatDf.schema
     val fRow = flatDf.head()
@@ -1631,46 +1606,29 @@ object Graft {
         org.apache.spark.sql.catalyst.expressions.Literal.create(
           fRow.get(i), fSchema(i).dataType))
     }
-    (flit("cells"), flit("cents"), flit("cnrms"), flit("cnrm2"))
+    FrozenFlat(flit("cells"), flit("cents"), flit("cnrms"), flit("cnrm2"))
   }
 
-  /** [[pqEncodeWith]] against a FROZEN codebook (the four
-    * [[freezeFlatLookup]] literals): identical kernels and values,
-    * zero broadcast jobs. */
+  /** [[freezeFlatLookup]]'s four plan literals, named as in
+    * [[pqFlatLookup]]. */
+  private[graft] final case class FrozenFlat(cells: Column, cents: Column,
+      cnrms: Column, cnrm2: Column)
+
+  /** The one PQ encode: the codegen'd [[graft.functions.PqEncodeF32]]
+    * kernel against a FROZEN codebook, zero broadcast jobs. rnorm reads
+    * the dense cnrm² table through the ADC-LUT kernel: the
+    * reconstruction norm is itself a code-indexed lookup sum. Output:
+    * (idCol, carry..., vecCol, code, rnorm). */
   private def pqEncodeWithFrozen(df: DataFrame, idCol: String,
-      vecCol: String, cells: Column, cbCents: Column, cbCnrms: Column,
-      cnrm2: Column, dim: Int, m: Int, ksub: Int,
+      vecCol: String, cb: FrozenFlat, dim: Int, m: Int, ksub: Int,
       carry: Seq[String] = Nil, l2: Boolean = false): DataFrame = {
     require(m > 0 && dim % m == 0 && ksub > 1,
       s"pqEncodeWithFrozen(dim=$dim, m=$m, ksub=$ksub)")
     val dsub = dim / m
     df.withColumn("code", graft.functions.VectorExpressions.pqEncodeF32(
-        col(vecCol), cells, cbCents, cbCnrms, m, ksub, dsub, l2 = l2))
+        col(vecCol), cb.cells, cb.cents, cb.cnrms, m, ksub, dsub, l2 = l2))
       .withColumn("rnorm", sqrt(graft.functions.VectorExpressions
-        .pqAdcLut(cnrm2, col("code"), ksub)))
-      .select(col(idCol) +: carry.map(col) :+ col(vecCol) :+
-        col("code") :+ col("rnorm"): _*)
-  }
-
-  private[graft] def pqEncodeWith(df: DataFrame, idCol: String, vecCol: String,
-      lookup: DataFrame, dim: Int, m: Int, ksub: Int,
-      carry: Seq[String] = Nil, l2: Boolean = false): DataFrame = {
-    require(m > 0 && dim % m == 0 && ksub > 1,
-      s"pqEncode(dim=$dim, m=$m, ksub=$ksub)")
-    val dsub = dim / m
-    // Encode is THE per-corpus-byte map pass of index build (everything
-    // else trains on bounded samples), so it runs as one codegen'd
-    // kernel against the flattened broadcast codebook instead of the
-    // interpreted per-candidate struct fold (r8: the fold allocated a
-    // struct per (subspace, centroid) candidate — m·ksub per row).
-    // rnorm reuses the ADC-LUT read over the dense cnrm² table: the
-    // reconstruction norm is itself a code-indexed lookup sum.
-    df.join(broadcast(pqFlatLookup(lookup, m, ksub)), lit(true))
-      .withColumn("code", graft.functions.VectorExpressions.pqEncodeF32(
-        col(vecCol), col("cells"), col("cents"), col("cnrms"),
-        m, ksub, dsub, l2 = l2))
-      .withColumn("rnorm", sqrt(graft.functions.VectorExpressions
-        .pqAdcLut(col("cnrm2"), col("code"), ksub)))
+        .pqAdcLut(cb.cnrm2, col("code"), ksub)))
       .select(col(idCol) +: carry.map(col) :+ col(vecCol) :+
         col("code") :+ col("rnorm"): _*)
   }
@@ -1682,13 +1640,25 @@ object Graft {
     * query, then rerank the shortlist with the exact full cosine.
     *
     * Scale shape: one corpus pass against the broadcast queries and the
-    * broadcast few-KB codebooks, reading CODES (m bytes) instead of
-    * vectors — the flat-scan cost drops by the compression factor, and
-    * at real scale the ADC pass runs over the compact code index while
-    * only the shortlist (bounded rows per query) touches the full
-    * vector store. Combine with an IVF partition (s03/s04) for
+    * frozen few-KB codebook (plan literals), reading CODES (m bytes)
+    * instead of vectors — the flat-scan cost drops by the compression
+    * factor, and at real scale the ADC pass runs over the compact code
+    * index while only the shortlist (bounded rows per query) touches
+    * the full vector store. Combine with an IVF partition (s03/s04) for
     * sub-linear candidate selection; this flat version is the exact
-    * shape of a Faiss IndexPQ. */
+    * shape of a Faiss IndexPQ.
+    *
+    * The per-query ADC lookup table `qlut` (Jégou et al.'s table trick,
+    * shared with [[ivfPqSearch]]) holds
+    * `dot(qe_sub(mi), centroid(mi, code))` at `mi * ksub + code` for
+    * EVERY cell — m·ksub doubles, built once on the tiny query side by
+    * the [[graft.functions.PqQueryLutF32]] kernel over the frozen
+    * codebook. The per-CANDIDATE score then degenerates to m array
+    * reads ([[graft.functions.PqAdcLut]]) instead of m×dsub interpreted
+    * multiply-adds per row (the r7 bench's slowest per-byte code, s10).
+    * Each cell's dot is the same ascending fold, so scores and
+    * shortlist order are bit-identical (QueryLutKernelSpec). Dead cells
+    * (Lloyd can empty one) read 0.0 and no corpus row carries them. */
   def pqTopK(df: DataFrame, idCol: String, vecCol: String,
       queryPred: Column, k: Int, dim: Int, m: Int = 8, ksub: Int = 16,
       iters: Int = 2, shortlist: Int = 50,
@@ -1706,19 +1676,16 @@ object Graft {
     val train = trainSample(df, idCol, ksub.toLong * trainPerSub,
       df.count())
     val cb = pqCodebooks(train, idCol, vecCol, dim, m, ksub, iters)
-    // The lookup appears in two subtrees (encode + query LUT);
-    // materialize the training pipeline once and FREEZE the one-row
-    // flattened codebook as plan literals (r17): the encode pass and
-    // the per-query LUT read the same values with zero broadcast jobs.
-    val lookup = iterCheckpoint(pqLookup(cb))
-    val (cells, cbc, cbn, cn2) = freezeFlatLookup(lookup, m, ksub)
-    val enc = pqEncodeWithFrozen(df, idCol, vecCol, cells, cbc, cbn,
-      cn2, dim, m, ksub)
+    // FREEZE the one-row flattened codebook as plan literals (one
+    // head() runs the training pipeline once): the encode pass and the
+    // per-query LUT read the same values with zero broadcast jobs.
+    val flat = freezeFlatLookup(pqLookup(cb), m, ksub)
+    val enc = pqEncodeWithFrozen(df, idCol, vecCol, flat, dim, m, ksub)
     val q = normalized(df.filter(queryPred), idCol, vecCol)
       .select(col(idCol).as("query_id"), col(vecCol).as("qe"),
         col("nrm").as("qn"))
       .withColumn("qlut", graft.functions.VectorExpressions
-        .pqQueryLutF32(col("qe"), cells, cbc, m, ksub, dsub))
+        .pqQueryLutF32(col("qe"), flat.cells, flat.cents, m, ksub, dsub))
     // The ADC scan reads CODES and emits only (query_id, neighbor_id,
     // adc) — m bytes scored, ~24 bytes shuffled per candidate. The raw
     // vectors join back AFTER the shortlist cut (shortlist·n_q rows):
@@ -2268,8 +2235,8 @@ object Graft {
     * (2) every corpus vector
     * joins its argmax list ([[assignToCentroids]], map-only); (3) PQ
     * codebooks train in one Lloyd loop and encode each vector as `m`
-    * codes ([[pqCodebooks]]/encode, map-only against broadcast
-    * codebooks); (4) each query probes its `nProbe` max-cosine lists
+    * codes ([[pqCodebooks]]/encode, map-only against the frozen
+    * codebook); (4) each query probes its `nProbe` max-cosine lists
     * ([[probeTopN]] — the native CentroidTopNF32 kernel per row, no
     * window); (5) ADC scores ONLY the
     * probed lists' codes — the
@@ -2331,7 +2298,8 @@ object Graft {
     *    `m` bytes of code + the reconstruction norm per vector, NO raw
     *    vectors (the 64× compression IS the index; rerank re-joins the
     *    vector store by id).
-    *  - `lookup`: the one-row broadcastable PQ codebook map.
+    *  - `lookup`: the one-row PQ codebook map; every encode and query
+    *    LUT freezes it into plan literals ([[freezeFlatLookup]]).
     *
     * Persist/restore: [[ivfPqSave]]/[[ivfPqLoad]] — plain parquet on the
     * three frames, with the codes hive-partitioned by
@@ -2810,8 +2778,7 @@ object Graft {
     * ([[pqFlatLookup]]'s one row) plus the per-list reconstruction
     * terms, dense-indexed by list_id. */
   private[graft] final case class FrozenPq(cents: FrozenCents,
-      cellsLit: Column, cbCentsLit: Column, cbCnrmsLit: Column,
-      cnrm2Lit: Column, clutByList: Column, cn2ByList: Column)
+      flat: FrozenFlat, clutByList: Column, cn2ByList: Column)
 
   /** Freeze a full PQ encode state from a (frozen-cents, lookup) pair:
     * ONE bounded job (centTerms collect) and one head() on the one-row
@@ -2822,14 +2789,13 @@ object Graft {
       lookup: DataFrame, dim: Int, m: Int, ksub: Int): FrozenPq = {
     import org.apache.spark.sql.types._
     val dsub = dim / m
-    val (cellsLit, cbCentsLit, cbCnrmsLit, cnrm2Lit) =
-      freezeFlatLookup(lookup, m, ksub)
+    val flat = freezeFlatLookup(lookup, m, ksub)
     // per-list reconstruction terms (c_sub(mi)·codebook(mi, code) — the
     // query-LUT kernel run with the centroid as the "query" — and
     // ‖c‖²), computed ONCE from the already-frozen codebook literals
     val ctDf = cents.select(col("list_id").cast("int"),
       graft.functions.VectorExpressions.pqQueryLutF32(col("centroid"),
-        cellsLit, cbCentsLit, m, ksub, dsub).as("__clut"),
+        flat.cells, flat.cents, m, ksub, dsub).as("__clut"),
       dot(col("centroid"), col("centroid")).as("__cn2"))
     val clutType = ctDf.schema("__clut").dataType
     val ct = ctDf.collect()
@@ -2844,8 +2810,8 @@ object Graft {
       org.apache.spark.sql.graft.Bridge.column(
         org.apache.spark.sql.catalyst.expressions.Literal.create(
           v.toSeq, ArrayType(elem, containsNull = true)))
-    FrozenPq(fc, cellsLit, cbCentsLit, cbCnrmsLit, cnrm2Lit,
-      dlit(clutDense, clutType), dlit(cn2Dense, DoubleType))
+    FrozenPq(fc, flat, dlit(clutDense, clutType),
+      dlit(cn2Dense, DoubleType))
   }
 
   /** The IVF-PQ ENCODE pass against a FROZEN generation: assign each
@@ -2864,18 +2830,15 @@ object Graft {
       payload: Seq[String]): DataFrame = {
     require(m > 0 && dim % m == 0 && ksub > 1,
       s"pqEncodeFrozen(dim=$dim, m=$m, ksub=$ksub)")
-    val dsub = dim / m
-    val payloadCols = payload.map(col)
-    assignFrozen(src, idCol, vecCol, st.cents, carry = payload)
-      .withColumn("__cent",
-        element_at(st.cents.centByList, col("list_id") + 1))
+    val residuals = assignFrozen(src, idCol, vecCol, st.cents,
+        carry = payload)
       .withColumn("__res", graft.functions.VectorExpressions
-        .vecSubF32(col(vecCol), col("__cent")))
-      .withColumn("code", graft.functions.VectorExpressions.pqEncodeF32(
-        col("__res"), st.cellsLit, st.cbCentsLit, st.cbCnrmsLit,
-        m, ksub, dsub, l2 = true))
-      .withColumn("rnorm", sqrt(graft.functions.VectorExpressions
-        .pqAdcLut(st.cnrm2Lit, col("code"), ksub)))
+        .vecSubF32(col(vecCol),
+          element_at(st.cents.centByList, col("list_id") + 1)))
+    // `rnorm` here is the codebook-only reconstruction norm; the full
+    // norm adds the per-list centroid terms below
+    pqEncodeWithFrozen(residuals, idCol, "__res", st.flat, dim, m, ksub,
+        carry = "list_id" +: payload, l2 = true)
       // greatest(0, ·): the three LUT terms are float-rounded; a zero
       // reconstruction must read 0.0, not √(-1e-17) = NaN
       .select(col(idCol) +: col("list_id") +: col("code") +:
@@ -2884,7 +2847,8 @@ object Graft {
           lit(2.0) * graft.functions.VectorExpressions.pqAdcLut(
             element_at(st.clutByList, col("list_id") + 1),
             col("code"), ksub) +
-          col("rnorm") * col("rnorm"))).as("rnorm") +: payloadCols: _*)
+          col("rnorm") * col("rnorm"))).as("rnorm") +:
+          payload.map(col): _*)
   }
 
   /** The IVF-SQ8 ENCODE pass against a FROZEN quantizer: one corpus
@@ -4334,7 +4298,12 @@ object Graft {
     val q0 = normalized(queries, qidCol, qvecCol)
       .select(col(qidCol).as("query_id"), col(qvecCol).as("qe"),
         col("nrm").as("qn"))
-    val q = pqQueryLut(q0, index.lookup, index.m, index.ksub, dsub)
+    // the [[pqTopK]] query LUT over the frozen codebook: one bounded
+    // head() at call time, and the per-batch plan stays map-only
+    val flat = freezeFlatLookup(index.lookup, index.m, index.ksub)
+    val q = q0.withColumn("qlut", graft.functions.VectorExpressions
+      .pqQueryLutF32(col("qe"), flat.cells, flat.cents, index.m,
+        index.ksub, dsub))
     // Each probe row also carries qc = q·centroid(list): the exact
     // coarse term of the residual ADC score (see [[ivfPqBuild]]) — one
     // broadcast equi-join on the bounded centroid table, one extra

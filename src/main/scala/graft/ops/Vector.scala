@@ -575,7 +575,7 @@ object Vector {
       // ANN path: 8 subspaces × 16-centroid codebooks turn each 256-byte
       // float vector into 8 codes; queries score the code index by ADC
       // (sum of sub-dot-products against reconstructed centroids) in one
-      // corpus pass against broadcast codebooks, then the shortlist
+      // corpus pass against the frozen codebook, then the shortlist
       // reranks by exact cosine. The flat-scan shape of a Faiss IndexPQ;
       // combine with IVF (s03/s04) for sub-linear candidates at 100 TB.
       // Gate row = hash-checked per-query contract (annContract);

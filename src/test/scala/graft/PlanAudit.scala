@@ -149,7 +149,9 @@ object PlanAudit {
       // `PartitionFilters [... bucket ...]` (only the probed lists'
       // hive partitions are read) and the probe side is a pinned
       // `Scan ExistingRDD` (the r12-advice determinism fix), so the
-      // per-batch cost is O(probed occupancy), not O(corpus).
+      // per-batch cost is O(probed occupancy), not O(corpus). The query
+      // LUT reads the frozen codebook (plan literals), so neither this
+      // plan nor the pinned probe side joins the one-row codebook.
       import org.apache.spark.sql.functions._
       val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
       val built = graft.api.Graft.ivfPqBuild(emb, "vec_id", "embedding",

@@ -98,13 +98,15 @@ class PlanPropertiesSpec extends AnyFunSuite with Matchers {
   }
 
   test("s10 PQ: codebook training aggregates (no join in the Lloyd " +
-    "loop); encode + ADC join only the broadcast one-row lookup; the " +
-    "rerank never goes cartesian against the corpus") {
+    "loop); encode + ADC read the frozen codebook and only the query " +
+    "side broadcasts; the rerank never goes cartesian against the " +
+    "corpus") {
     val p = plan("s10_pq_topk")
     (p should not).include("CartesianProduct")
-    // queries and the codebook lookup ride broadcast nested-loop joins
-    // by construction (one-row / tiny build sides); the corpus-sized
-    // flow must never appear on the probe side of a shuffled join
+    // the codebook rides as plan literals; only the tiny query side
+    // rides a broadcast nested-loop join, by construction; the
+    // corpus-sized flow must never appear on the probe side of a
+    // shuffled join
     (p should not).include("SortMergeJoin")
   }
 
@@ -168,6 +170,31 @@ class PlanPropertiesSpec extends AnyFunSuite with Matchers {
     (p should not).include("SortMergeJoin")
     (p should not).include("ShuffledHashJoin")
     (p should not).include("CartesianProduct")
+  }
+
+  test("ivfPqSearch serving batch: the query LUT reads the frozen " +
+    "codebook — no broadcast nested-loop join, no interpreted lambdas") {
+    import org.apache.spark.sql.functions.col
+    // the p18/p20 per-batch shape: a built, materialized IVF-PQ index
+    // probed by a small query batch (built directly, no streaming
+    // harness needed to audit the per-batch plan)
+    val emb = graft.Tables.load(spark, sfDir, "embeddings")
+    val built = graft.api.Graft.ivfPqBuild(emb, "vec_id", "embedding",
+      dim = 64, nlist = 4, m = 8, ksub = 16, iters = 1)
+    val index = built.copy(enc = built.enc.localCheckpoint(true))
+    val q = emb.filter(col("vec_id") < 8)
+      .select(col("vec_id").as("qid"), col("embedding"))
+    val qe = graft.api.Graft.ivfPqSearch(index, q, "qid", "embedding",
+      emb, "embedding", k = 5, nProbe = 2, shortlist = 16).queryExecution
+    // a one-row codebook cross join would put a BroadcastNestedLoopJoin
+    // (and its broadcast-future job) into every micro-batch
+    (qe.explainString(FormattedMode) should not)
+      .include("BroadcastNestedLoopJoin")
+    // the pqFlatLookup HOFs run once, at freeze time, not per batch
+    qe.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
+      case e: org.apache.spark.sql.catalyst.expressions.LambdaFunction =>
+        e
+    })) shouldBe empty
   }
 
   test("t26 bigram LM: count joins are hash-keyed equi-joins with " +

@@ -10,8 +10,9 @@ import org.scalatest.matchers.should.Matchers
   * micro-batch). These tests pin the two properties that make that
   * optimization safe:
   *
-  *  1. the frozen-literal encode is BIT-IDENTICAL to the broadcast-join
-  *     reference encode ([[ReferenceEncodes]]), and append-grown codes
+  *  1. the frozen-literal encodes (the IVF encode and the public flat
+  *     `pqEncode`) are BIT-IDENTICAL to the broadcast-join reference
+  *     encodes ([[ReferenceEncodes]]), and append-grown codes
   *     equal a batch build over the union, row for row, at a fixture
   *     nlist and at a √n-regime nlist (1,100 lists);
   *  2. the generation cache holds ONE live entry per index dir — a
@@ -144,6 +145,75 @@ class FrozenEncodeSpec extends AnyFunSuite with Matchers {
       Graft.pqEncodeFrozen(corpus, "vec_id", "embedding", st,
         dim = Dim, m = 3, ksub = 8, payload = Nil)
     e.getMessage should include("pqEncodeFrozen(dim=16, m=3, ksub=8)")
+  }
+
+  test("public pqEncode (frozen codebook) is bit-identical to the " +
+      "broadcast-join reference (pqEncodeWith) over a hand-built " +
+      "codebook with a dead cell") {
+    import spark.implicits._
+    val m = 4
+    val ksub = 4
+    val dsub = Dim / m
+    val rnd = new scala.util.Random(141)
+    // (m, list_id, centroid, cnrm); cell (mi=1, code=2) is DEAD
+    val codebooks = (for { mi <- 0 until m; ki <- 0 until ksub
+        if !(mi == 1 && ki == 2) } yield {
+      val c = Array.fill(dsub)(rnd.nextGaussian().toFloat)
+      (mi, ki, c, math.sqrt(c.map(x => x.toDouble * x).sum))
+    }).toDF("m", "list_id", "centroid", "cnrm")
+    val corpus = mkCorpus(0 until 120, seed = 142)
+    def rowsOf(df: DataFrame): Seq[(Long, Seq[Int], Long)] =
+      df.select(col("vec_id"), col("code").cast("array<int>"),
+          col("rnorm"))
+        .collect().toSeq
+        .map(r => (r.getLong(0), r.getSeq[Int](1).toSeq,
+          java.lang.Double.doubleToRawLongBits(r.getDouble(2))))
+        .sortBy(_._1)
+    val frozen = Graft.pqEncode(corpus, "vec_id", "embedding", codebooks,
+      dim = Dim, m = m, ksub = ksub)
+    val reference = ReferenceEncodes.pqEncodeWith(corpus, "vec_id",
+      "embedding", Graft.pqLookup(codebooks), Dim, m, ksub)
+    frozen.columns.toSeq shouldBe reference.columns.toSeq
+    val got = rowsOf(frozen)
+    got should have size 120
+    got shouldBe rowsOf(reference)
+    // no row reads the dead cell
+    got.exists(_._2(1) == 2) shouldBe false
+  }
+
+  test("public pqEncode rejects a dim that m does not divide by name, " +
+      "before it freezes the codebook (zero jobs)") {
+    import spark.implicits._
+    val codebooks = Seq((0, 0, Array(1f, 0f, 0f, 0f), 1.0))
+      .toDF("m", "list_id", "centroid", "cnrm")
+    val corpus = mkCorpus(0 until 10, seed = 151)
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.add(Option(js.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse("")); ()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val e = the[IllegalArgumentException] thrownBy
+        Graft.pqEncode(corpus, "vec_id", "embedding", codebooks,
+          dim = 16, m = 3, ksub = 8)
+      e.getMessage should include("pqEncode(dim=16, m=3, ksub=8)")
+      // the listener bus is async and in order: once a sentinel job's
+      // start is seen, any job the failed call ran was seen before it
+      spark.sparkContext.setJobDescription("pqEncode-sentinel")
+      spark.range(1).count()
+      spark.sparkContext.setJobDescription(null)
+      val deadline = System.nanoTime() + 30000000000L
+      while (!jobs.contains("pqEncode-sentinel") &&
+          System.nanoTime() < deadline) Thread.sleep(50)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val seen = jobs.toArray.toSeq
+    seen should contain("pqEncode-sentinel")
+    seen.filterNot(_ == "pqEncode-sentinel") shouldBe empty
   }
 
   test("the generation cache keeps ONE live entry per dir: a retrain " +

@@ -4,16 +4,43 @@ import graft.functions.{CentroidOracle, VectorExpressions}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Broadcast-join formulations of the IVF encode passes — the shape
-  * the library ran before its frozen-literal encodes
-  * (`Graft.pqEncodeFrozen` / `Graft.sqEncodeFrozen`), kept as the
-  * oracles FrozenEncodeSpec pins those against. Assignment runs the
-  * HOF fold ([[CentroidOracle.argmax]]), so the comparison also
-  * crosses the kernel against its reference. */
+/** Broadcast-join formulations of the PQ and IVF encode passes — the
+  * shape the library ran before every codebook reached its kernels as
+  * frozen plan literals (`Graft.pqEncode`, `Graft.pqEncodeFrozen`,
+  * `Graft.sqEncodeFrozen`), kept as the oracles FrozenEncodeSpec pins
+  * those against. Assignment runs the HOF fold
+  * ([[CentroidOracle.argmax]]), so the comparison also crosses the
+  * kernel against its reference. */
 object ReferenceEncodes {
 
   private def dot(a: Column, b: Column): Column =
     VectorExpressions.dotF32(a, b)
+
+  /** The flat PQ encode with the one-row flattened codebook
+    * ([[Graft.pqFlatLookup]]) broadcast and cross-joined into every
+    * row. Output: (idCol, carry..., vecCol, code, rnorm). */
+  def pqEncodeWith(df: DataFrame, idCol: String, vecCol: String,
+      lookup: DataFrame, dim: Int, m: Int, ksub: Int,
+      carry: Seq[String] = Nil, l2: Boolean = false): DataFrame = {
+    require(m > 0 && dim % m == 0 && ksub > 1,
+      s"pqEncode(dim=$dim, m=$m, ksub=$ksub)")
+    val dsub = dim / m
+    // Encode is THE per-corpus-byte map pass of index build (everything
+    // else trains on bounded samples), so it runs as one codegen'd
+    // kernel against the flattened broadcast codebook instead of the
+    // interpreted per-candidate struct fold (r8: the fold allocated a
+    // struct per (subspace, centroid) candidate — m·ksub per row).
+    // rnorm reuses the ADC-LUT read over the dense cnrm² table: the
+    // reconstruction norm is itself a code-indexed lookup sum.
+    df.join(broadcast(Graft.pqFlatLookup(lookup, m, ksub)), lit(true))
+      .withColumn("code", VectorExpressions.pqEncodeF32(
+        col(vecCol), col("cells"), col("cents"), col("cnrms"),
+        m, ksub, dsub, l2 = l2))
+      .withColumn("rnorm", sqrt(VectorExpressions
+        .pqAdcLut(col("cnrm2"), col("code"), ksub)))
+      .select(col(idCol) +: carry.map(col) :+ col(vecCol) :+
+        col("code") :+ col("rnorm"): _*)
+  }
 
   /** The IVF-SQ8 ENCODE pass against a FIXED coarse quantizer: assign
     * (payload carried) + the max-abs int8 kernels map-side.
@@ -59,7 +86,7 @@ object ReferenceEncodes {
           col("__ctcells"), col("__ctcents"), m, ksub, dsub).as("__clut"),
         dot(col("centroid"), col("centroid")).as("__cn2"))
     val payloadCols = payload.map(col)
-    Graft.pqEncodeWith(residuals, idCol, "__res",
+    pqEncodeWith(residuals, idCol, "__res",
       lookup, dim, m, ksub, carry = Seq("list_id") ++ payload, l2 = true)
       .select(col(idCol) +: col("list_id") +: col("code") +:
         col("rnorm") +: payloadCols: _*)
