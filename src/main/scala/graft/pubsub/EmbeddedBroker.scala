@@ -30,6 +30,19 @@ object EmbeddedBroker {
 
   val DefaultEndpoint = "embedded:default"
 
+  /** The ordered-publish stream key of one sink partition's epoch. */
+  private[pubsub] def streamKey(queryId: String, epochId: Long,
+      partitionId: Int): String = s"$queryId/$epochId/$partitionId"
+
+  /** (query id, epoch) of a key built by [[streamKey]]; None for any
+    * other key. */
+  private[pubsub] def queryEpoch(key: String): Option[(String, Long)] = {
+    val p = key.lastIndexOf('/')
+    val e = if (p > 0) key.lastIndexOf('/', p - 1) else -1
+    if (e < 0) None
+    else key.substring(e + 1, p).toLongOption.map(key.substring(0, e) -> _)
+  }
+
   /** Route `alias` to the broker behind `target` — the in-process analog
     * of a regional endpoint: in the reference, a region's partitions pull
     * through "$region-pubsub.googleapis.com:443" (package.scala:87-97) but
@@ -86,8 +99,19 @@ object EmbeddedBroker {
     // means the upstream plan is not attempt-deterministic — silently
     // skipping it would lose the new row and keep the old one, so the
     // mismatch fails fast instead. Lives as long as orderedHwm (one
-    // entry per query/epoch/partition stream, broker lifetime).
+    // entry per query/epoch/partition stream, until the sink's epoch
+    // commit releases it through releaseOrdered).
     private val orderedHashes = mutable.Map[String, mutable.ArrayBuffer[Long]]()
+    // queryId -> the sink released every epoch below this one. A late
+    // publish to a released epoch (a zombie task of an epoch that already
+    // committed, so whose rows were all accepted) is dropped. One Long
+    // per query, however long the stream runs.
+    private val releasedBelow = mutable.Map[String, Long]()
+
+    private def isReleased(streamKey: String): Boolean =
+      EmbeddedBroker.queryEpoch(streamKey).exists { case (q, e) =>
+        releasedBelow.get(q).exists(e < _)
+      }
 
     def createTopic(topic: String): Unit = synchronized {
       topics += topic
@@ -182,37 +206,64 @@ object EmbeddedBroker {
       * the tail rows). Ordinal claim and append run under one broker
       * lock, so a zombie attempt racing the retry can't double-publish:
       * each ordinal is accepted exactly once regardless of interleaving.
+      * A stream key of an epoch released by [[releaseOrdered]] accepts
+      * nothing.
       */
     def publishOrdered(topic: String, streamKey: String,
         startOrdinal: Long,
-        msgs: Seq[(Array[Byte], Map[String, String], String)]): Unit =
+        msgs: Seq[(Array[Byte], Map[String, String], String)]): Unit = {
+      // hashing is pure: done before the broker-wide lock, which then
+      // covers only the compare, the append and the mark
+      val msgHashes = msgs.iterator.map(contentHash).toArray
       synchronized {
-        val hwm = orderedHwm.getOrElse(streamKey, 0L)
-        val skip = math.min(math.max(hwm - startOrdinal, 0L),
-          msgs.size.toLong).toInt
-        val hashes =
-          orderedHashes.getOrElseUpdate(streamKey, mutable.ArrayBuffer())
-        // The skipped prefix must be byte-identical to what claimed those
-        // ordinals: exactly-once by ordinal is only sound when row content
-        // at each ordinal is stable across attempts. A mismatch is a
-        // non-deterministic upstream (e.g. a shuffle whose intra-partition
-        // order changed on retry) — data WOULD be lost, so fail the task.
-        msgs.take(skip).zipWithIndex.foreach { case (m, i) =>
-          val ord = startOrdinal + i
-          if (ord < hashes.size && hashes(ord.toInt) != contentHash(m))
-            throw new IllegalStateException(
-              s"pubsub sink: retried publish offered different content at " +
-                s"ordinal $ord of stream $streamKey; the upstream plan is " +
-                "not deterministic across attempts (see PubsubStreamingWrite " +
-                "determinism requirement)")
+        // a released epoch has committed: all its rows are in already
+        if (!isReleased(streamKey)) {
+          val hwm = orderedHwm.getOrElse(streamKey, 0L)
+          val skip = math.min(math.max(hwm - startOrdinal, 0L),
+            msgs.size.toLong).toInt
+          val hashes =
+            orderedHashes.getOrElseUpdate(streamKey, mutable.ArrayBuffer())
+          // The skipped prefix must be byte-identical to what claimed those
+          // ordinals: exactly-once by ordinal is only sound when row content
+          // at each ordinal is stable across attempts. A mismatch is a
+          // non-deterministic upstream (e.g. a shuffle whose intra-partition
+          // order changed on retry) — data WOULD be lost, so fail the task.
+          msgHashes.iterator.take(skip).zipWithIndex.foreach { case (h, i) =>
+            val ord = startOrdinal + i
+            if (ord < hashes.size && hashes(ord.toInt) != h)
+              throw new IllegalStateException(
+                s"pubsub sink: retried publish offered different content at " +
+                  s"ordinal $ord of stream $streamKey; the upstream plan is " +
+                  "not deterministic across attempts (see " +
+                  "PubsubStreamingWrite determinism requirement)")
+          }
+          val fresh = msgs.drop(skip)
+          // publish BEFORE advancing the mark: if the append throws, the
+          // rows stay unclaimed and a retry re-publishes them (no loss)
+          if (fresh.nonEmpty) publishBatch(topic, fresh)
+          hashes ++= msgHashes.iterator.drop(skip)
+          orderedHwm(streamKey) = math.max(hwm, startOrdinal + msgs.size)
         }
-        val fresh = msgs.drop(skip)
-        // publish BEFORE advancing the mark: if the append throws, the
-        // rows stay unclaimed and a retry re-publishes them (no loss)
-        if (fresh.nonEmpty) publishBatch(topic, fresh)
-        fresh.foreach(m => hashes += contentHash(m))
-        orderedHwm(streamKey) = math.max(hwm, startOrdinal + msgs.size)
       }
+    }
+
+    /** Releases `queryId`'s epochs below `belowEpoch`: drops their
+      * ordered-publish state, and later publishes to them are dropped.
+      * The sink releases the epochs that the commit log already holds,
+      * which no retry can re-offer (see [[PubsubStreamingWrite.commit]]). */
+    private[pubsub] def releaseOrdered(queryId: String,
+        belowEpoch: Long): Unit = synchronized {
+      releasedBelow(queryId) =
+        math.max(releasedBelow.getOrElse(queryId, belowEpoch), belowEpoch)
+      orderedHwm.keys.filter(isReleased).toList.foreach { k =>
+        orderedHwm.remove(k)
+        orderedHashes.remove(k)
+      }
+    }
+
+    /** Stream keys that still hold ordered-publish state. */
+    private[pubsub] def orderedKeys: Seq[String] =
+      synchronized(orderedHwm.keys.toList)
 
     /** 64-bit FNV-1a over data bytes, ordering key, and sorted attributes
       * — the per-ordinal content fingerprint for retry verification. */

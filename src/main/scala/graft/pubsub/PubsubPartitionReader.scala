@@ -236,18 +236,14 @@ final class PubsubMessageRow(
   * path (HDFS rename-no-overwrite is already atomic there). */
 object ReplayCache {
 
+  import LocalFiles.nioPath
+
   /** One Configuration for all non-local calls — constructing one per
     * read/write re-parses the default resources. */
   private lazy val hadoopConf = new Configuration()
+  private lazy val defaultScheme = LocalFiles.defaultScheme(hadoopConf)
 
-  private def isLocal(p: Path): Boolean =
-    p.toUri.getScheme match {
-      case null | "file" => true
-      case _ => false
-    }
-
-  private def nioPath(p: Path): java.nio.file.Path =
-    java.nio.file.Paths.get(p.toUri.getPath)
+  private def isLocal(p: Path): Boolean = LocalFiles.isLocal(p, defaultScheme)
 
   // Compact length-prefixed binary layout (java serialization of many
   // small Maps was measurable at 100k+ messages per partition). Strings
@@ -314,7 +310,7 @@ object ReplayCache {
     }.getOrElse(Seq.empty)
 
   /** Persists `msgs` and returns the CANONICAL row set for this slot:
-    * the argument when this writer's rename wins, the winner's file when
+    * the argument when this writer's claim wins, the winner's file when
     * it loses — so two concurrent first evaluations of one
     * (batch, partition) always see identical rows, and the loser's
     * independently-leased pull never leaks into the stream (its leases
@@ -324,17 +320,43 @@ object ReplayCache {
       msgs: Seq[(String, EmbeddedBroker.Message)])
       : Seq[(String, EmbeddedBroker.Message)] = {
     val p = new Path(path)
-    val local = isLocal(p)
-    val tmp = new Path(path + s".tmp-${java.util.UUID.randomUUID()}")
-    val raw: java.io.OutputStream =
-      if (local) {
-        java.nio.file.Files.createDirectories(nioPath(p).getParent)
-        java.nio.file.Files.newOutputStream(nioPath(tmp))
+    // First writer wins; a loser discards its pull and adopts the
+    // winner's (retrying the read until the winner's file is visible).
+    // Locally the claim is LocalFiles.claim's hard link; on HDFS-like
+    // stores rename onto an existing path already fails atomically.
+    val won =
+      if (isLocal(p)) {
+        val target = nioPath(p)
+        java.nio.file.Files.createDirectories(target.getParent)
+        val tmp = LocalFiles.tempBeside(target)
+        writeTo(java.nio.file.Files.newOutputStream(tmp), msgs)
+        LocalFiles.claim(tmp, target)
       } else {
         val fs = p.getFileSystem(hadoopConf)
         fs.mkdirs(p.getParent)
-        fs.create(tmp, true)
+        val tmp = new Path(path + s".tmp-${java.util.UUID.randomUUID()}")
+        writeTo(fs.create(tmp, true), msgs)
+        val renamed = fs.rename(tmp, p)
+        if (!renamed && fs.exists(tmp)) fs.delete(tmp, false)
+        renamed
       }
+    if (won) msgs
+    else {
+      var canonical: Option[Seq[(String, EmbeddedBroker.Message)]] = read(path)
+      var attempts = 0
+      while (canonical.isEmpty && attempts < 50) {
+        Thread.sleep(100)
+        canonical = read(path)
+        attempts += 1
+      }
+      canonical.getOrElse(throw new java.io.IOException(
+        s"replay cache $path: lost rename race but winner's file never " +
+          "became visible"))
+    }
+  }
+
+  private def writeTo(raw: java.io.OutputStream,
+      msgs: Seq[(String, EmbeddedBroker.Message)]): Unit = {
     val out = new DataOutputStream(new BufferedOutputStream(raw, 1 << 16))
     try {
       out.writeInt(msgs.size)
@@ -351,43 +373,6 @@ object ReplayCache {
         }
       }
     } finally out.close()
-    // First writer wins; a loser discards its pull and adopts the
-    // winner's (retrying the read until the winner's file is visible).
-    // The claim must be ATOMIC: an exists() guard before rename is
-    // check-then-act, and POSIX rename silently overwrites — two racing
-    // writers could both "win" and serve divergent rows. On local
-    // filesystems the atomic no-overwrite primitive is a hard link
-    // (link(2) fails with EEXIST); on HDFS-like stores rename onto an
-    // existing path already fails atomically.
-    val won =
-      if (local) {
-        val claimed =
-          try {
-            java.nio.file.Files.createLink(nioPath(p), nioPath(tmp))
-            true
-          } catch {
-            case _: java.nio.file.FileAlreadyExistsException => false
-          }
-        java.nio.file.Files.deleteIfExists(nioPath(tmp))
-        claimed
-      } else p.getFileSystem(hadoopConf).rename(tmp, p)
-    if (won) msgs
-    else {
-      if (!local) {
-        val fs = p.getFileSystem(hadoopConf)
-        if (fs.exists(tmp)) fs.delete(tmp, false)
-      }
-      var canonical: Option[Seq[(String, EmbeddedBroker.Message)]] = read(path)
-      var attempts = 0
-      while (canonical.isEmpty && attempts < 50) {
-        Thread.sleep(100)
-        canonical = read(path)
-        attempts += 1
-      }
-      canonical.getOrElse(throw new java.io.IOException(
-        s"replay cache $path: lost rename race but winner's file never " +
-          "became visible"))
-    }
   }
 
   /** All ack ids recorded under a batch directory (driver side) —

@@ -92,7 +92,16 @@ class PubsubStreamingWrite(opts: PubsubWriteOptions, schema: StructType,
       timeoutNanos = opts.writerTimeoutSeconds * 1000000000L,
       maxOutstandingBytes = opts.maxOutstandingBytes)
 
-  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = ()
+  /** Releases the broker's ordered-publish state of this query's epochs
+    * below `epochId`. Spark writes epoch N-1 to the commit log before
+    * epoch N runs, so those epochs can never be retried. Epoch N keeps
+    * its state: a crash between this call and its commit-log write
+    * re-runs it, and its ordinals must still dedup. */
+  override def commit(epochId: Long,
+      messages: Array[WriterCommitMessage]): Unit =
+    EmbeddedBroker.get(opts.endpoint.getOrElse(EmbeddedBroker.DefaultEndpoint))
+      .releaseOrdered(queryId, epochId)
+
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = ()
 }
 
@@ -175,7 +184,8 @@ class PubsubDataWriter(f: PubsubWriterFactory, partitionId: Int,
   private def flush(): Unit = if (buf.nonEmpty) {
     val t0 = System.nanoTime()
     broker.publishOrdered(f.topicPath,
-      s"${f.queryId}/$epochId/$partitionId", flushedRows, buf.toSeq)
+      EmbeddedBroker.streamKey(f.queryId, epochId, partitionId),
+      flushedRows, buf.toSeq)
     if (System.nanoTime() - t0 > f.timeoutNanos)
       throw new java.io.IOException(
         s"pubsub sink: publish of chunk $chunkNo exceeded the " +

@@ -3,6 +3,7 @@ package graft.pubsub
 import java.util
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownRequiredColumns}
@@ -26,9 +27,16 @@ class PubsubTableProvider extends TableProvider with DataSourceRegister {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
     PubsubOptions.ReadSchema
 
+  /** Also installs [[LocalCheckpointFileManager]] as the session's
+    * checkpoint file manager unless one is configured: both
+    * `readStream.format("pubsub").load()` and
+    * `writeStream.format("pubsub").start()` get here before the query
+    * builds its offset and commit logs. */
   override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table =
+      properties: util.Map[String, String]): Table = {
+    LocalCheckpointFileManager.installIfUnset(SparkSession.active)
     new PubsubTable(properties.asScala.toMap)
+  }
 }
 
 /** Fixed-schema streaming table: micro-batch readable, streaming
