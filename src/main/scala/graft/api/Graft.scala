@@ -1872,6 +1872,16 @@ object Graft {
       idCol: String, nlist: Int, rows: Long = -1L, buckets: Int = 0,
       dim: Int = -1)
 
+  /** Fail by name when a build's `payload` names one of the index's
+    * own columns (the `reserved` set of build `op`). */
+  private def requirePayloadFree(op: String, payload: Seq[String],
+      reserved: Set[String]): Unit = {
+    val bad = payload.filter(reserved)
+    require(bad.isEmpty, s"$op: payload column(s) " +
+      s"${bad.mkString(", ")} collide with reserved index columns " +
+      s"(${reserved.toSeq.sorted.mkString(", ")}) — rename them")
+  }
+
   /** Build an [[IvfSqIndex]]: sampled-Lloyd coarse centroids, then ONE
     * corpus pass that assigns (kernel argmax) and SQ8-encodes
     * map-side. Zero-direction rows (mx = 0) are excluded, the
@@ -1885,14 +1895,10 @@ object Graft {
     // [[ivfSqSearch]]'s `filter`).
     require(nlist >= 0 && iters >= 0 && trainPerList > 0,
       s"ivfSqBuild(nlist=$nlist)")
-    val reserved = Set("bucket", "mx", "q", "nrm", "list_id",
-      "cells", "cents", "cnrms", "cnrm2", idCol, vecCol,
+    requirePayloadFree("ivfSqBuild", payload, Set("bucket", "mx", "q",
+      "nrm", "list_id", "cells", "cents", "cnrms", "cnrm2", idCol, vecCol,
       "query_id", "neighbor_id", "qe", "qn", "qmx", "qq",
-      "cos", "rnk", "srnk", "lrnk")
-    val bad = payload.filter(reserved)
-    require(bad.isEmpty, s"ivfSqBuild: payload column(s) " +
-      s"${bad.mkString(", ")} collide with reserved index columns " +
-      s"(${reserved.toSeq.sorted.mkString(", ")}) — rename them")
+      "cos", "rnk", "srnk", "lrnk"))
     val n = df.count()
     require(n > 0, s"ivfSqBuild: empty corpus — nothing to index " +
       s"(the $vecCol dimension cannot even be established)")
@@ -2003,227 +2009,50 @@ object Graft {
       "query_id", vecCol, df, vecCol, k, nProbe, shortlist)
   }
 
-  /** Persist an [[IvfSqIndex]] under `dir` — the [[ivfPqSave]]
-    * deployment shape for the SQ family: centroids + a one-row meta
-    * frame (tiny), codes hive-partitioned by
-    * `bucket = pmod(list_id, buckets)` and sorted by list_id within
-    * each partition so a loaded index's `pruneLists` probe
-    * partition-prunes and row-group-skips to the probed lists. Same
-    * generational publish as [[ivfPqSave]] (a mid-save failure can
-    * never leave new codes under old meta; readers of the previous
-    * generation keep serving through the swap). */
+  /** Persist an [[IvfSqIndex]] under `dir` — the saved-index store of
+    * [[ivfPqSave]] with the SQ8 codec: the same layout (centroids + a
+    * one-row meta frame, codes hive-partitioned by
+    * `bucket = pmod(list_id, buckets)` and list_id-sorted within each
+    * partition), generational publish, row-count record and checks. */
   def ivfSqSave(index: IvfSqIndex, dir: String, buckets: Int = 64,
-      vectorsPerList: Int = 400, sqrtFactor: Double = 4.0): Unit = {
-    // the deriveNlist rule persists with the index, exactly like
-    // [[ivfPqSave]] — [[ivfSqIndexStats]]/[[ivfSqRetrain]] default to it
-    require(buckets > 0 && vectorsPerList > 0 && sqrtFactor > 0,
-      s"ivfSqSave(buckets=$buckets, vectorsPerList=$vectorsPerList)")
-    val s = index.cents.sparkSession
-    import s.implicits._
-    saveIndexDir("ivfSqSave", dir, buckets, codes = index.enc,
-      extras = Seq("cents.parquet" -> index.cents),
-      meta = Seq((index.idCol, index.nlist, buckets, index.rows,
-        vectorsPerList, sqrtFactor, index.dim))
-        .toDF("id_col", "nlist", "buckets", "rows",
-          "vectors_per_list", "sqrt_factor", "dim"))
-  }
-
-  /** Grow a SAVED IVF-SQ8 index in place — [[ivfPqAppend]] for the SQ
-    * family, and the PURE Faiss `add` case: the SQ8 encode has no
-    * trainable state at all (no codebooks), so an append is assign +
-    * encode map-side against the frozen coarse quantizer, nothing
-    * frozen-but-stale beyond the quantizer itself. Existing codes
-    * never read or rewrite; payload columns checked by name; the meta
-    * row count RECOUNTS from the committed codes (self-healing, the
-    * [[ivfPqAppend]] discipline). Serialize with compact/retrain. */
-  def ivfSqAppend(spark: SparkSession, dir: String, batch: DataFrame,
-      vecCol: String): PqAppendStats = {
-    // live generation resolved once; frozen state from the
-    // per-generation cache (the [[ivfPqAppend]] shape — see
-    // [[frozenIdxCache]] for the immutability argument)
-    val tree = resolveIndexTree(spark, dir)
-    val fz = frozenIdx(spark, "ivfsq", dir, tree, () => {
-      val i = ivfSqLoadTree(spark, tree)
-      val (vpl, sf) = pqSavedDerivation(spark, tree)
-      FrozenSqIdx(i, freezeCents(i.cents), vpl, sf)
-    })
-    val idx = fz.idx
-    require(idx.buckets > 0,
-      s"ivfSqAppend($dir): saved index has no bucket layout")
-    val payload = sqPayloadCols(idx)
-    val missing = (idx.idCol +: vecCol +: payload)
-      .filterNot(batch.columns.contains)
-    require(missing.isEmpty,
-      s"ivfSqAppend($dir): batch lacks column(s) " +
-        s"${missing.mkString(", ")} (index schema: id=${idx.idCol}, " +
-        s"payload=${payload.mkString(", ")})")
-    val n = countAndCheckDim("ivfSqAppend", batch, vecCol, idx.dim)
-    // empty batch: re-read the live meta (cached rows may be stale)
-    var rowsAfter =
-      if (n > 0) idx.rows else ivfSqLoadTree(spark, tree).rows
-    if (n > 0) {
-      sqEncodeFrozen(batch, idx.idCol, vecCol, fz.st, payload)
-        .withColumn("bucket", pmod(col("list_id"), lit(idx.buckets)))
-        .repartition(col("bucket"))
-        .sortWithinPartitions("bucket", "list_id")
-        .write.mode("append").partitionBy("bucket")
-        .parquet(s"$tree/codes.parquet")
-      rowsAfter = spark.read.parquet(s"$tree/codes.parquet").count()
-      val sess = spark
-      import sess.implicits._
-      // preserve EVERY ivfSqSave meta column — dropping `dim` here
-      // would make ivfSqLoad resolve dim = -1 after the first append,
-      // silently disarming requireBatchDim for every later one
-      // (r14 advice; rewritePqMetaRows is the reference shape). The
-      // deriveNlist rule (vpl, sf) comes from the generation cache —
-      // it is save-time state this rewrite re-persists unchanged.
-      rewriteIndexMeta(spark, tree, "ivfSqAppend",
-        Seq((idx.idCol, idx.nlist, idx.buckets, rowsAfter, fz.vpl,
-            fz.sf, idx.dim))
-          .toDF("id_col", "nlist", "buckets", "rows",
-            "vectors_per_list", "sqrt_factor", "dim"))
-    }
-    PqAppendStats(n, rowsAfter, pqCodeFiles(spark, dir))
-  }
-
-  /** [[ivfPqIndexStats]] for a saved IVF-SQ8 index — the same
-    * [[IndexStats]]/[[maintenanceAdvice]] decision surface; the
-    * vectorsPerList/sqrtFactor = 0 defaults read the rule persisted at
-    * [[ivfSqSave]] time. */
-  def ivfSqIndexStats(spark: SparkSession, dir: String,
-      vectorsPerList: Int = 0, sqrtFactor: Double = 0.0): IndexStats = {
-    val idx = ivfSqLoad(spark, dir)
-    val (pVpl, pSf) = pqSavedDerivation(spark, dir)
-    val vpl = if (vectorsPerList > 0) vectorsPerList else pVpl
-    val sf = if (sqrtFactor > 0) sqrtFactor else pSf
-    val occ = idx.enc.groupBy(col("list_id")).count()
-      .agg(count(lit(1)).as("lists"),
-        coalesce(sum("count"), lit(0L)).as("rows"),
-        coalesce(avg("count"), lit(0.0)).as("mean"),
-        coalesce(expr("percentile_approx(count, 0.99)"), lit(0L))
-          .as("p99"),
-        coalesce(max("count"), lit(0L)).as("max"))
-      .head()
-    IndexStats(rows = occ.getLong(1),
-      dataFiles = pqCodeFiles(spark, dir), buckets = idx.buckets,
-      lists = occ.getLong(0), occMean = occ.getDouble(2),
-      occP99 = occ.getLong(3), occMax = occ.getLong(4),
-      pendingTombstones = 0L, quantizerLists = Some(idx.nlist),
-      targetNlist = deriveNlist(occ.getLong(1), vpl, sf),
-      generation = new org.apache.hadoop.fs.Path(
-        resolveIndexTree(spark, dir)).getName)
-  }
-
-  /** [[ivfPqCompact]] for the SQ layout: codes rewritten back to
-    * ≤ buckets files through the generational publish. */
-  def ivfSqCompact(spark: SparkSession, dir: String): CompactionStats = {
-    val idx = ivfSqLoad(spark, dir)
-    require(idx.buckets > 0,
-      s"ivfSqCompact($dir): saved index has no bucket layout")
-    val before = pqCodeFiles(spark, dir)
-    val rows = idx.enc.count()
-    val (vpl, sf) = pqSavedDerivation(spark, dir)
-    ivfSqSave(idx.copy(enc = idx.enc.drop("bucket"), rows = rows),
-      dir, idx.buckets, vpl, sf)
-    CompactionStats(rows, before, pqCodeFiles(spark, dir))
-  }
-
-  /** [[ivfPqRetrain]] for the SQ layout. The SQ codes do NOT depend on
-    * the quantizer (no residuals — `mx`/`q` are per-vector), so unlike
-    * PQ a retrain COULD re-route existing codes without the raw
-    * corpus; the rebuild over `vectors` is kept anyway for the exact
-    * [[ivfPqRetrain]] contract (fresh sample-trained centroids — a
-    * re-route under stale centroids would keep the drifted geometry)
-    * and the same generational publish. `nlist` = 0 re-derives under
-    * the persisted rule. */
-  def ivfSqRetrain(spark: SparkSession, dir: String, vectors: DataFrame,
-      vecCol: String, nlist: Int = 0, iters: Int = 2,
-      trainPerList: Int = 128, vectorsPerList: Int = 0,
-      sqrtFactor: Double = 0.0): PqRetrainStats = {
-    require(nlist >= 0 && iters >= 0 && trainPerList > 0,
-      s"ivfSqRetrain($dir, nlist=$nlist)")
-    val old = ivfSqLoad(spark, dir)
-    val (pVpl, pSf) = pqSavedDerivation(spark, dir)
-    val vpl = if (vectorsPerList > 0) vectorsPerList else pVpl
-    val sf = if (sqrtFactor > 0) sqrtFactor else pSf
-    val payload = sqPayloadCols(old)
-    val missing = (old.idCol +: vecCol +: payload)
-      .filterNot(vectors.columns.contains)
-    require(missing.isEmpty,
-      s"ivfSqRetrain($dir): vectors lack column(s) " +
-        s"${missing.mkString(", ")} (index schema: id=${old.idCol}, " +
-        s"payload=${payload.mkString(", ")})")
-    val filesBefore = pqCodeFiles(spark, dir)
-    val n = vectors.count()
-    val nl = math.max(1,
-      if (nlist > 0) nlist else deriveNlist(n, vpl, sf))
-    val rebuilt = ivfSqBuild(vectors, old.idCol, vecCol, nl, iters,
-      trainPerList, payload)
-    ivfSqSave(rebuilt, dir, old.buckets, vpl, sf)
-    PqRetrainStats(n, old.nlist, nl, filesBefore,
-      pqCodeFiles(spark, dir))
-  }
-
-  /** Fail-by-name dimension check for the frozen append paths: the
-    * dot kernels truncate mismatched lengths to min(length) (never
-    * throw), so a wrong-width batch would corrupt every later ranking
-    * silently (r14 review).
-    *
-    * Fused with the batch count since r16 — ONE aggregation
-    * job per streaming append instead of count + dim-check back to
-    * back (r16: the appends run per micro-batch, so per-call jobs are
-    * the ingest path's fixed cost). The check aggregates over the
-    * WHOLE batch, not head(): a mixed-width batch whose first row
-    * happens to match would otherwise pass and still truncate in the
-    * kernels (r14 advice); it is skipped when the index predates the
-    * dim column (-1) or the batch is empty. Returns the count. */
-  private def countAndCheckDim(op: String, batch: DataFrame,
-      vecCol: String, expected: Int): Long = {
-    val mm = batch.agg(count(lit(1)).as("n"),
-      min(size(col(vecCol))).as("lo"),
-      max(size(col(vecCol))).as("hi")).head()
-    val n = mm.getLong(0)
-    if (expected > 0 && n > 0) {
-      // an all-null vector column yields null min/max (size(null) is
-      // null under the default conf) — fold it into the named failure
-      // instead of an opaque NPE on getInt (r16 ADVICE)
-      val nulls = mm.isNullAt(1) || mm.isNullAt(2)
-      val (lo, hi) =
-        if (nulls) (-1, -1) else (mm.getInt(1), mm.getInt(2))
-      require(!nulls && lo == expected && hi == expected,
-        s"$op: batch $vecCol has dimension(s) " +
-          s"${if (nulls) "null (all-null vectors)" else s"$lo..$hi"} " +
-          s"but the index was built at $expected — the int8/float dot " +
-          "kernels would silently truncate to the overlap")
-    }
-    n
-  }
-
-  /** The payload columns a saved SQ index carries. */
-  private def sqPayloadCols(idx: IvfSqIndex): Seq[String] = {
-    val internal = Set(idx.idCol, "list_id", "mx", "q", "nrm", "bucket")
-    idx.enc.columns.filterNot(internal).toSeq
-  }
+      vectorsPerList: Int = 400, sqrtFactor: Double = 4.0): Unit =
+    saveIndexDir(SqDir, index, dir, buckets, vectorsPerList, sqrtFactor)
 
   /** Restore an [[ivfSqSave]]d index (codes keep their `bucket`
     * partition column — what makes `pruneLists` partition-prune). */
   def ivfSqLoad(spark: SparkSession, dir: String): IvfSqIndex =
-    ivfSqLoadTree(spark, resolveIndexTree(spark, dir))
+    loadIndexDir(SqDir, "ivfSqLoad", spark, dir,
+      resolveIndexTree(spark, dir)).idx
 
-  private def ivfSqLoadTree(spark: SparkSession, tree: String)
-      : IvfSqIndex = {
-    val metaDf = spark.read.parquet(s"$tree/meta.parquet")
-    val meta = metaDf.head()
-    val dim =
-      if (metaDf.columns.contains("dim"))
-        meta.getInt(metaDf.columns.indexOf("dim"))
-      else -1
-    IvfSqIndex(
-      cents = spark.read.parquet(s"$tree/cents.parquet"),
-      enc = spark.read.parquet(s"$tree/codes.parquet"),
-      idCol = meta.getString(0), nlist = meta.getInt(1),
-      buckets = meta.getInt(2), rows = meta.getLong(3), dim = dim)
-  }
+  /** Grow a saved IVF-SQ8 index in place — [[ivfPqAppend]] with the SQ8
+    * codec, and the PURE Faiss `add` case: the SQ8 encode has no
+    * trainable state (no codebooks), so nothing is frozen-but-stale
+    * beyond the coarse quantizer. Serialize with compact/retrain. */
+  def ivfSqAppend(spark: SparkSession, dir: String, batch: DataFrame,
+      vecCol: String): PqAppendStats =
+    appendIndexDir(SqDir, spark, dir, batch, vecCol)
+
+  /** [[ivfPqIndexStats]] for a saved IVF-SQ8 index. */
+  def ivfSqIndexStats(spark: SparkSession, dir: String,
+      vectorsPerList: Int = 0, sqrtFactor: Double = 0.0): IndexStats =
+    indexDirStats(SqDir, spark, dir, vectorsPerList, sqrtFactor)
+
+  /** [[ivfPqCompact]] for a saved IVF-SQ8 index. */
+  def ivfSqCompact(spark: SparkSession, dir: String): CompactionStats =
+    compactIndexDir(SqDir, spark, dir)
+
+  /** [[ivfPqRetrain]] for a saved IVF-SQ8 index. The SQ codes do NOT
+    * depend on the quantizer (`mx`/`q` are per-vector), so a retrain
+    * COULD re-route existing codes without the raw corpus; the rebuild
+    * over `vectors` is kept for the exact [[ivfPqRetrain]] contract
+    * (fresh sample-trained centroids — a re-route under stale centroids
+    * would keep the drifted geometry). */
+  def ivfSqRetrain(spark: SparkSession, dir: String, vectors: DataFrame,
+      vecCol: String, nlist: Int = 0, iters: Int = 2,
+      trainPerList: Int = 128, vectorsPerList: Int = 0,
+      sqrtFactor: Double = 0.0): PqRetrainStats =
+    retrainIndexDir(SqDir, spark, dir, vectors, vecCol, nlist, iters,
+      trainPerList, vectorsPerList, sqrtFactor)
 
   /** IVF-PQ approximate top-k — the Faiss IVFPQ composition ([[pqTopK]]'s
     * own Scaladoc promise): a TRAINED coarse quantizer cuts candidates
@@ -2357,8 +2186,9 @@ object Graft {
     // partition column (a serve-time filter on it would then compare
     // against pmod(list_id, buckets), wrong results, no error); the
     // rest die later as opaque ambiguous-column AnalysisExceptions
-    val reserved = Set("bucket", "code", "rnorm", "list_id", "nrm",
-      "cells", "cents", "cnrms", "cnrm2", idCol, vecCol,
+    requirePayloadFree("ivfPqBuild", payload, Set("bucket", "code",
+      "rnorm", "list_id", "nrm", "cells", "cents", "cnrms", "cnrm2", idCol,
+      vecCol,
       // serve-time internals ([[ivfPqSearch]]): a payload column named
       // one of these builds fine and then dies at search time as an
       // opaque ambiguous-column error — or silently shadows the
@@ -2367,11 +2197,7 @@ object Graft {
       // guard them too: the codes frame carries payload columns
       // verbatim into every serve-time join.
       "query_id", "neighbor_id", "qe", "qn", "qc", "qlut", "adc",
-      "cos", "rnk", "srnk", "lrnk")
-    val bad = payload.filter(reserved)
-    require(bad.isEmpty, s"ivfPqBuild: payload column(s) " +
-      s"${bad.mkString(", ")} collide with reserved index columns " +
-      s"(${reserved.toSeq.sorted.mkString(", ")}) — rename them")
+      "cos", "rnk", "srnk", "lrnk"))
     val nRows = df.count()
     val train = trainSample(df, idCol, nlist.toLong * trainPerList,
       nRows)
@@ -2412,17 +2238,6 @@ object Graft {
       rows = nRows)
   }
 
-  /** Persist an [[IvfPqIndex]] as plain parquet under `dir` — the
-    * build-once / serve-for-weeks deployment shape. Centroids, PQ
-    * lookup, and a one-row meta frame are tiny; the codes write
-    * hive-partitioned by `bucket = pmod(list_id, buckets)` and SORTED
-    * by list_id within each partition, so a loaded index's
-    * `pruneLists` probe partition-prunes to the probed lists' buckets
-    * and row-group-skips within them. The codes pay one bounded
-    * shuffle here (repartition into buckets — persist-time batch work,
-    * a few dozen bytes per vector); size `buckets` to the serving
-    * batch's probed-list count — more buckets prune sharper but write
-    * more files. */
   /** The ACTIVE tree of a saved index dir. Since r14 the save layout is
     * generational: `dir/CURRENT` (a one-line pointer file) names the
     * live `gen-<id>/` subdir holding codes/cents/lookup/meta, and
@@ -2440,202 +2255,327 @@ object Graft {
       : String = {
     val root = new org.apache.hadoop.fs.Path(dir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cur = new org.apache.hadoop.fs.Path(root, "CURRENT")
-    if (!fs.exists(cur)) {
-      // missing pointer + generation dirs present = the swap instant
-      // (or a crash inside it): falling back to the root here would
-      // SILENTLY serve a stale legacy tree kept for grace — fail
-      // loudly instead; a retry lands after the rename, and the next
-      // save self-heals a crashed swap (it writes a fresh generation
-      // and pointer). Only a dir with NO generations is a legacy
-      // layout (r14 review).
-      val hasGens = fs.exists(root) && fs.listStatus(root)
-        .exists(st => st.isDirectory &&
-          st.getPath.getName.startsWith("gen-"))
-      if (hasGens)
-        throw new IllegalStateException(
-          s"resolveIndexTree($dir): CURRENT pointer missing while " +
-            "generation dirs exist — a publish swap is in flight " +
-            "(retry) or crashed mid-swap (the next save repairs it)")
-      dir
-    } else {
-      val in = fs.open(cur)
-      val name =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close()
-      require(name.nonEmpty && !name.contains("/"),
-        s"resolveIndexTree($dir): malformed CURRENT pointer '$name'")
-      new org.apache.hadoop.fs.Path(root, name).toString
+    readSmallFile(fs, new org.apache.hadoop.fs.Path(root, "CURRENT")) match {
+      case None =>
+        // missing pointer + generation dirs present = a swap that
+        // crashed between the delete and the rename of a save written
+        // before the pointer swap became one atomic rename: falling
+        // back to the root here would SILENTLY serve a stale legacy
+        // tree kept for grace — fail loudly instead; the next save
+        // self-heals it (it writes a fresh generation and pointer).
+        // Only a dir with NO generations is a legacy layout.
+        val hasGens = fs.exists(root) && fs.listStatus(root)
+          .exists(st => st.isDirectory &&
+            st.getPath.getName.startsWith("gen-"))
+        if (hasGens)
+          throw new IllegalStateException(
+            s"resolveIndexTree($dir): CURRENT pointer missing while " +
+              "generation dirs exist — a publish swap is in flight " +
+              "(retry) or crashed mid-swap (the next save repairs it)")
+        dir
+      case Some(name) =>
+        require(name.nonEmpty && !name.contains("/"),
+          s"resolveIndexTree($dir): malformed CURRENT pointer '$name'")
+        new org.apache.hadoop.fs.Path(root, name).toString
     }
   }
 
-  /** The shared persistence skeleton of [[ivfPqSave]]/[[ivfSqSave]]:
-    * write-into-temp, swap-at-the-end. The sub-frames write
-    * independently, so writing in place would let a mid-save failure
-    * leave NEW codes under OLD meta (or vice versa) — a later load +
-    * pruneLists would then filter on bucket = id % the WRONG modulus
-    * and silently drop whole probed lists (r12 advice). With the swap,
-    * the failure window leaves either the intact old index or NO
-    * directory — a load can fail loudly but never read a torn one.
-    * The temp tree is a SIBLING of the target composed from the
-    * normalized Path (string concatenation on a trailing-slash dir
-    * would nest it INSIDE the target and the pre-rename delete would
-    * destroy both — r13 review). Codes sort by (bucket, list_id): the
-    * partition column leads, so the write inserts no sort of its own
-    * and the intra-bucket list_id order the row-group-skip needs
-    * survives (r12 advice). Meta writes LAST — the commit marker
-    * within the temp tree. ONE implementation so a fix to either save
-    * path cannot silently miss its twin (r14 review). */
-  private def saveIndexDir(opName: String, dir: String, buckets: Int,
-      codes: DataFrame, extras: Seq[(String, DataFrame)],
-      meta: DataFrame): Unit = {
-    val s = codes.sparkSession
-    val hconf = s.sparkContext.hadoopConfiguration
+  /** A small text file's trimmed content, or None when it is absent. */
+  private def readSmallFile(fs: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path): Option[String] =
+    if (!fs.exists(p)) None
+    else {
+      val in = fs.open(p)
+      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim)
+      finally in.close()
+    }
+
+  /** Replace `p` with `text` in one atomic step, never a delete then a
+    * rename: a crash leaves the old content or the new, and a reader
+    * never finds the file missing. Local paths are written through
+    * java.nio (temp file + atomic rename); every other filesystem goes
+    * through Spark's checkpoint file manager, which renames with
+    * overwrite. */
+  private def writeAtomic(spark: SparkSession,
+      p: org.apache.hadoop.fs.Path, text: String): Unit = {
+    val out = new graft.pubsub.LocalCheckpointFileManager(p.getParent,
+      spark.sparkContext.hadoopConfiguration)
+      .createAtomic(p, overwriteIfPossible = true)
+    try out.write(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    catch { case e: Throwable => out.cancel(); throw e }
+    out.close()
+  }
+
+  /** The row count an append records inside the live generation (one
+    * decimal line). A save writes none — the generation's
+    * `meta.parquet` carries the count it was published with — so a
+    * load reads this record when present, then meta's `rows`, then a
+    * codes footer count (pre-r14 saves). */
+  private val RowsRecord = "ROWS"
+
+  /** A frozen batch encode: (batch, vecCol, payload) => codes. */
+  private type BatchEncode = (DataFrame, String, Seq[String]) => DataFrame
+
+  /** The codec-free shape of a saved index: what every lifecycle step
+    * reads from an [[IvfSqIndex]] or [[IvfPqIndex]]. */
+  private final case class DirCore(enc: DataFrame, idCol: String,
+      nlist: Int, dim: Int, buckets: Int, rows: Long)
+
+  /** What distinguishes the two codecs of the saved-index store: the
+    * meta columns, the extra frames, the pipeline-owned code columns
+    * (everything else in the codes frame is payload), the frozen batch
+    * encode, and the rebuild a retrain runs. `family` prefixes the op
+    * names in errors (`ivfSqAppend`, `ivfPqRetrain`, ...). */
+  private sealed abstract class DirCodec[I](val family: String,
+      val label: String, codeCols: Set[String]) {
+    def core(i: I): DirCore
+    def withCodes(i: I, enc: DataFrame, rows: Long): I
+    def extras(i: I): Seq[(String, DataFrame)]
+    def meta(i: I, buckets: Int, vpl: Int, sf: Double): DataFrame
+    def fromTree(spark: SparkSession, tree: String,
+        meta: org.apache.spark.sql.Row, enc: DataFrame, rows: Long): I
+    /** Freeze the generation's encode state once (bounded collects);
+      * the returned encode runs zero side jobs per batch. */
+    def encoder(i: I): BatchEncode
+    def rebuild(old: I, vectors: DataFrame, vecCol: String, nlist: Int,
+        iters: Int, trainPerList: Int, payload: Seq[String]): I
+    def payload(c: DirCore): Seq[String] =
+      c.enc.columns.filterNot(codeCols + c.idCol).toSeq
+  }
+
+  private object SqDir extends DirCodec[IvfSqIndex]("ivfSq", "IVF-SQ8",
+      Set("list_id", "mx", "q", "nrm", "bucket")) {
+    def core(i: IvfSqIndex) =
+      DirCore(i.enc, i.idCol, i.nlist, i.dim, i.buckets, i.rows)
+    def withCodes(i: IvfSqIndex, enc: DataFrame, rows: Long) =
+      i.copy(enc = enc, rows = rows)
+    def extras(i: IvfSqIndex) = Seq("cents.parquet" -> i.cents)
+    def meta(i: IvfSqIndex, buckets: Int, vpl: Int, sf: Double) = {
+      val s = i.cents.sparkSession
+      import s.implicits._
+      Seq((i.idCol, i.nlist, buckets, i.rows, vpl, sf, i.dim))
+        .toDF("id_col", "nlist", "buckets", "rows", "vectors_per_list",
+          "sqrt_factor", "dim")
+    }
+    def fromTree(spark: SparkSession, tree: String,
+        meta: org.apache.spark.sql.Row, enc: DataFrame, rows: Long) =
+      IvfSqIndex(spark.read.parquet(s"$tree/cents.parquet"), enc,
+        meta.getAs[String]("id_col"), meta.getAs[Int]("nlist"), rows,
+        meta.getAs[Int]("buckets"),
+        // saves before the dim column resolve -1: no dim guard
+        if (meta.schema.fieldNames.contains("dim")) meta.getAs[Int]("dim")
+        else -1)
+    def encoder(i: IvfSqIndex): BatchEncode = {
+      val fc = freezeCents(i.cents)
+      (b, vecCol, payload) => sqEncodeFrozen(b, i.idCol, vecCol, fc, payload)
+    }
+    def rebuild(old: IvfSqIndex, vectors: DataFrame, vecCol: String,
+        nlist: Int, iters: Int, trainPerList: Int, payload: Seq[String]) =
+      ivfSqBuild(vectors, old.idCol, vecCol, nlist, iters, trainPerList,
+        payload)
+  }
+
+  private object PqDir extends DirCodec[IvfPqIndex]("ivfPq", "IVF-PQ",
+      Set("list_id", "code", "rnorm", "bucket")) {
+    def core(i: IvfPqIndex) =
+      DirCore(i.enc, i.idCol, i.nlist, i.dim, i.buckets, i.rows)
+    def withCodes(i: IvfPqIndex, enc: DataFrame, rows: Long) =
+      i.copy(enc = enc, rows = rows)
+    def extras(i: IvfPqIndex) =
+      Seq("cents.parquet" -> i.cents, "lookup.parquet" -> i.lookup)
+    def meta(i: IvfPqIndex, buckets: Int, vpl: Int, sf: Double) = {
+      val s = i.cents.sparkSession
+      import s.implicits._
+      Seq((i.idCol, i.nlist, i.dim, i.m, i.ksub, buckets, i.rows, vpl, sf))
+        .toDF("id_col", "nlist", "dim", "m", "ksub", "buckets", "rows",
+          "vectors_per_list", "sqrt_factor")
+    }
+    def fromTree(spark: SparkSession, tree: String,
+        meta: org.apache.spark.sql.Row, enc: DataFrame, rows: Long) =
+      IvfPqIndex(spark.read.parquet(s"$tree/cents.parquet"), enc,
+        spark.read.parquet(s"$tree/lookup.parquet"),
+        meta.getAs[String]("id_col"), meta.getAs[Int]("nlist"),
+        meta.getAs[Int]("dim"), meta.getAs[Int]("m"),
+        meta.getAs[Int]("ksub"), meta.getAs[Int]("buckets"), rows)
+    def encoder(i: IvfPqIndex): BatchEncode = {
+      val st = freezePq(freezeCents(i.cents), i.cents, i.lookup, i.dim,
+        i.m, i.ksub)
+      (b, vecCol, payload) =>
+        pqEncodeFrozen(b, i.idCol, vecCol, st, i.dim, i.m, i.ksub, payload)
+    }
+    def rebuild(old: IvfPqIndex, vectors: DataFrame, vecCol: String,
+        nlist: Int, iters: Int, trainPerList: Int, payload: Seq[String]) =
+      ivfPqBuild(vectors, old.idCol, vecCol, old.dim, nlist, old.m,
+        old.ksub, iters, trainPerList, payload)
+  }
+
+  /** The one save of a saved index dir, for either codec:
+    * write-into-a-fresh-generation, then swap the pointer. The
+    * sub-frames write independently, so writing in place would let a
+    * mid-save failure leave NEW codes under OLD meta (or vice versa) —
+    * a later load + pruneLists would then filter on bucket = id % the
+    * WRONG modulus and silently drop whole probed lists (r12 advice).
+    * With the swap, the failure window leaves the intact old index — a
+    * load can never read a torn one. Codes sort by (bucket, list_id):
+    * the partition column leads, so the write inserts no sort of its
+    * own and the intra-bucket list_id order the row-group-skip needs
+    * survives (r12 advice). Meta writes LAST — the commit marker within
+    * the generation. `vpl`/`sf`: the deriveNlist rule this deployment
+    * sizes with, persisted in the meta frame so stats' outgrown trigger
+    * and retrain's width re-derivation default to the SAME rule the
+    * index was built with. Returns the new generation's tree. */
+  private def saveIndexDir[I](c: DirCodec[I], index: I, dir: String,
+      buckets: Int, vpl: Int, sf: Double): String = {
+    val opName = s"${c.family}Save"
+    require(buckets > 0 && vpl > 0 && sf > 0,
+      s"$opName(buckets=$buckets, vectorsPerList=$vpl, sqrtFactor=$sf)")
+    val core = c.core(index)
+    val s = core.enc.sparkSession
     val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(hconf)
+    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
     val curFile = new org.apache.hadoop.fs.Path(root, "CURRENT")
     // the generation the pointer names NOW (None on a fresh or legacy
     // dir) — it survives this save as the grace copy for readers in
     // flight, and is reclaimed by the NEXT save. If CURRENT is ABSENT
-    // but complete generations exist, a previous save crashed inside
-    // its delete→rename pointer swap: readers loaded before the crash
-    // still hold frames of the newest complete generation, so THAT
-    // generation is the grace copy — treating it as None would let the
-    // cleanup below delete it out from under them (r14 advice).
-    val prevGen: Option[String] =
-      if (fs.exists(curFile)) {
-        val in = fs.open(curFile)
-        try Some(scala.io.Source.fromInputStream(in, "UTF-8")
-          .mkString.trim)
-        finally in.close()
-      } else if (!fs.exists(root)) None
+    // but complete generations exist, a save written before the atomic
+    // pointer swap crashed inside its delete→rename: readers loaded
+    // before the crash still hold frames of the newest complete
+    // generation, so THAT generation is the grace copy — treating it as
+    // None would let the cleanup below delete it out from under them
+    // (r14 advice).
+    val prevGen: Option[String] = readSmallFile(fs, curFile).orElse(
+      if (!fs.exists(root)) None
       else fs.listStatus(root)
         .filter(st => st.isDirectory &&
           st.getPath.getName.startsWith("gen-") &&
           fs.exists(new org.apache.hadoop.fs.Path(st.getPath,
             "meta.parquet")))
         .sortBy(_.getModificationTime)
-        .lastOption.map(_.getPath.getName)
+        .lastOption.map(_.getPath.getName))
     val genName = "gen-" +
       java.util.UUID.randomUUID().toString.take(8)
     val gen = new org.apache.hadoop.fs.Path(root, genName)
     try {
-      codes
+      core.enc
         .withColumn("bucket", pmod(col("list_id"), lit(buckets)))
         .repartition(col("bucket"))
         .sortWithinPartitions("bucket", "list_id")
         .write.mode("overwrite").partitionBy("bucket")
         .parquet(s"$gen/codes.parquet")
-      extras.foreach { case (name, df) =>
+      c.extras(index).foreach { case (name, df) =>
         df.write.mode("overwrite").parquet(s"$gen/$name") }
       // meta LAST — the commit marker within the generation: a gen
       // tree missing meta is visibly incomplete
-      meta.write.mode("overwrite").parquet(s"$gen/meta.parquet")
+      c.meta(index, buckets, vpl, sf)
+        .write.mode("overwrite").parquet(s"$gen/meta.parquet")
     } catch { case e: Throwable =>
       // a failed WRITE leaves known-incomplete data — clean it up; the
       // cleanup itself may fail for the same reason the write did —
       // never let it mask the root cause. The live generation was
       // never touched.
       try fs.delete(gen, true)
-      catch { case c: Throwable => e.addSuppressed(c) }
+      catch { case ce: Throwable => e.addSuppressed(ce) }
       throw e
     }
-    // publish: swap the POINTER, not the data. A reader racing the
-    // delete+rename instant can fail loudly on a missing CURRENT and
-    // retry; it can never read a torn tree (each generation is
-    // complete before the pointer moves), and a reader HOLDING frames
-    // of the previous generation keeps scanning files that stay on
-    // disk through this whole save.
-    val tmpCur = new org.apache.hadoop.fs.Path(root,
-      "CURRENT.tmp-" + java.util.UUID.randomUUID().toString.take(8))
-    val out = fs.create(tmpCur, true)
-    try out.write(genName.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    if (fs.exists(curFile) && !fs.delete(curFile, false))
-      throw new java.io.IOException(
-        s"$opName: cannot replace $curFile (new generation complete " +
-          s"at $gen)")
-    if (!fs.rename(tmpCur, curFile))
-      throw new java.io.IOException(
-        s"$opName: rename $tmpCur -> $curFile failed (new generation " +
-          s"complete at $gen)")
+    // publish: swap the POINTER, not the data, in one atomic rename —
+    // a reader sees the old generation or the new one, never a missing
+    // pointer or a torn tree (each generation is complete before the
+    // pointer moves), and a reader HOLDING frames of the previous
+    // generation keeps scanning files that stay on disk through this
+    // whole save.
+    writeAtomic(s, curFile, genName)
     // grace cleanup: generations older than the PREVIOUS one are a
     // full cycle stale — no reader can still hold them under the
-    // serialize-maintenance contract. Legacy top-level frame dirs
+    // serialize-maintenance contract. Legacy top-level frames
     // (pre-generational saves) are likewise a cycle stale once a
-    // previous generation existed.
+    // previous generation existed; so are pointer temp files a crash
+    // left behind.
     val legacyFrames = Set("codes.parquet", "cents.parquet",
-      "lookup.parquet", "meta.parquet")
+      "lookup.parquet", "meta.parquet", RowsRecord)
     fs.listStatus(root).foreach { st =>
       val n = st.getPath.getName
       val staleGen = st.isDirectory && n.startsWith("gen-") &&
         n != genName && !prevGen.contains(n)
       val staleLegacy = prevGen.isDefined && legacyFrames(n)
-      val staleTmp = n.startsWith("CURRENT.tmp-") && n != tmpCur.getName
+      val staleTmp =
+        n.stripPrefix(".").startsWith("CURRENT.") && n.contains("tmp")
       if (staleGen || staleLegacy || staleTmp)
         fs.delete(st.getPath, true)
     }
+    gen.toString
   }
 
-  def ivfPqSave(index: IvfPqIndex, dir: String, buckets: Int = 64,
-      vectorsPerList: Int = 400, sqrtFactor: Double = 4.0): Unit = {
-    // `vectorsPerList`/`sqrtFactor`: the deriveNlist rule this
-    // deployment sizes with, persisted in the meta frame so
-    // [[ivfPqIndexStats]]' outgrown trigger and [[ivfPqRetrain]]'s
-    // width re-derivation default to the SAME rule the index was
-    // built with (the saveQuantizer-sidecar discipline, applied to the
-    // saved layout — r14 review).
-    require(buckets > 0 && vectorsPerList > 0 && sqrtFactor > 0,
-      s"ivfPqSave(buckets=$buckets, vectorsPerList=$vectorsPerList, " +
-        s"sqrtFactor=$sqrtFactor)")
-    val s = index.cents.sparkSession
-    import s.implicits._
-    saveIndexDir("ivfPqSave", dir, buckets, codes = index.enc,
-      extras = Seq("cents.parquet" -> index.cents,
-        "lookup.parquet" -> index.lookup),
-      meta = Seq((index.idCol, index.nlist, index.dim, index.m,
-        index.ksub, buckets, index.rows, vectorsPerList, sqrtFactor))
-        .toDF("id_col", "nlist", "dim", "m", "ksub", "buckets", "rows",
-          "vectors_per_list", "sqrt_factor"))
+  /** One loaded generation of a saved dir: the index, its codec-free
+    * shape, the tree it was read from, and the persisted deriveNlist
+    * rule (400/4.0 for saves that predate it). */
+  private final case class SavedGen[I](idx: I, core: DirCore,
+      tree: String, vpl: Int, sf: Double)
+
+  /** The one load of a saved index dir: reads `tree` (the generation
+    * the caller resolved once), meta by column name. A dir saved by the
+    * other codec fails by name instead of misreading its meta. */
+  private def loadIndexDir[I](c: DirCodec[I], op: String,
+      spark: SparkSession, dir: String, tree: String): SavedGen[I] = {
+    val metaDf = spark.read.parquet(s"$tree/meta.parquet")
+    def has(col: String) = metaDf.columns.contains(col)
+    val saved: DirCodec[_] = if (has("ksub")) PqDir else SqDir
+    require(saved eq c, s"$op($dir): the dir holds a saved " +
+      s"${saved.label} index, not ${c.label} — use the " +
+      s"${saved.family}* entry points")
+    val meta = metaDf.head()
+    val enc = spark.read.parquet(s"$tree/codes.parquet")
+    val fs = new org.apache.hadoop.fs.Path(tree)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // a pre-r14 index resolves `rows` ONCE here (a parquet footer
+    // count), never per search call: the default-shortlist derivation
+    // reads index.rows on every search, and a per-call count would put
+    // an O(files) job in front of every pruned serving probe
+    val rows = readSmallFile(fs,
+        new org.apache.hadoop.fs.Path(tree, RowsRecord)).map(_.toLong)
+      .getOrElse(if (has("rows")) meta.getAs[Long]("rows") else enc.count())
+    val idx = c.fromTree(spark, tree, meta, enc, rows)
+    val (vpl, sf) =
+      if (!has("vectors_per_list")) (400, 4.0)
+      else (meta.getAs[Int]("vectors_per_list"),
+        meta.getAs[Double]("sqrt_factor"))
+    SavedGen(idx, c.core(idx), tree, vpl, sf)
   }
+
+  /** Persist an [[IvfPqIndex]] as plain parquet under `dir` — the
+    * build-once / serve-for-weeks deployment shape. Centroids, PQ
+    * lookup, and a one-row meta frame are tiny; the codes write
+    * hive-partitioned by `bucket = pmod(list_id, buckets)` and SORTED
+    * by list_id within each partition, so a loaded index's
+    * `pruneLists` probe partition-prunes to the probed lists' buckets
+    * and row-group-skips within them. The codes pay one bounded
+    * shuffle here (repartition into buckets — persist-time batch work,
+    * a few dozen bytes per vector); size `buckets` to the serving
+    * batch's probed-list count — more buckets prune sharper but write
+    * more files. `vectorsPerList`/`sqrtFactor` persist the deriveNlist
+    * rule ([[saveIndexDir]]). */
+  def ivfPqSave(index: IvfPqIndex, dir: String, buckets: Int = 64,
+      vectorsPerList: Int = 400, sqrtFactor: Double = 4.0): Unit =
+    saveIndexDir(PqDir, index, dir, buckets, vectorsPerList, sqrtFactor)
 
   /** Restore an [[ivfPqSave]]d index. The codes frame keeps its
     * `bucket` partition column (harmless to the search joins; it is
-    * what makes `pruneLists` partition-prune). */
+    * what makes `pruneLists` partition-prune). The generation resolves
+    * ONCE: every frame reads the one coherent tree the pointer named. */
   def ivfPqLoad(spark: SparkSession, dir: String): IvfPqIndex =
-    // resolve the generation ONCE: every frame below reads the one
-    // coherent tree the pointer named at this instant
-    ivfPqLoadTree(spark, resolveIndexTree(spark, dir))
+    loadIndexDir(PqDir, "ivfPqLoad", spark, dir,
+      resolveIndexTree(spark, dir)).idx
 
-  private def ivfPqLoadTree(spark: SparkSession, tree: String)
-      : IvfPqIndex = {
-    val metaDf = spark.read.parquet(s"$tree/meta.parquet")
-    val meta = metaDf.head()
-    val enc = spark.read.parquet(s"$tree/codes.parquet")
-    // `rows` shipped in r14 — a pre-r14 index resolves it ONCE here
-    // (a parquet footer count), never per search call: the default-
-    // shortlist derivation reads index.rows on every ivfPqSearch, and
-    // a per-call count would put an O(files) job in front of every
-    // pruned serving probe (r14 review)
-    val rows =
-      if (metaDf.columns.contains("rows"))
-        meta.getLong(metaDf.columns.indexOf("rows"))
-      else enc.count()
-    IvfPqIndex(
-      cents = spark.read.parquet(s"$tree/cents.parquet"),
-      enc = enc,
-      lookup = spark.read.parquet(s"$tree/lookup.parquet"),
-      idCol = meta.getString(0), nlist = meta.getInt(1),
-      dim = meta.getInt(2), m = meta.getInt(3), ksub = meta.getInt(4),
-      buckets = meta.getInt(5), rows = rows)
-  }
+  /** A cached generation: its codec-free shape, its payload columns and
+    * its frozen batch encode. */
+  private final case class FrozenGen(core: DirCore, payload: Seq[String],
+      encode: BatchEncode)
 
   /** Per-application cache of a saved index tree's FROZEN state (r16),
-    * keyed by (applicationId, layout, index dir) and VALIDATED against
+    * keyed by (applicationId, codec, index dir) and VALIDATED against
     * the resolved generation tree. Within one generation the quantizer
     * (cents), codebooks (lookup), structural meta and the codes SCHEMA
     * are immutable by the layout's design — appends only ADD code
-    * files and rewrite the meta ROW COUNT — and generation names are
+    * files and advance the row-count record — and generation names are
     * fresh UUIDs on every publish ([[saveIndexDir]]), so a
     * retrain/compact is a guaranteed cache miss: the append path
     * re-resolves CURRENT per call and lands on the new generation's
@@ -2646,24 +2586,24 @@ object Graft {
     * generation — a weeks-long retraining stream holds ONE entry per
     * index, not one per publish. Only the APPEND path reads this
     * cache — loads that serve searches must see freshly-listed code
-    * files and keep using [[ivfPqLoad]]/[[ivfSqLoad]]. A cached
-    * entry's `rows` may predate later appends within the same
-    * generation: append callers recount from the committed codes, and
-    * the empty-batch path re-reads the live meta. Since r17 the entry
-    * also carries the generation's FROZEN ENCODE state ([[FrozenCents]]
-    * /[[FrozenPq]] — bounded tables collected once and re-embedded as
-    * plan literals), which is what removes the per-micro-batch
-    * broadcast-future jobs from the append encode. */
+    * files and keep using [[ivfPqLoad]]/[[ivfSqLoad]]. An entry's
+    * `rows` may predate later appends within the same generation:
+    * appends recount from the committed codes, and the empty-batch
+    * path re-reads the live count. Since r17 the entry also carries
+    * the generation's FROZEN ENCODE ([[FrozenCents]]/[[FrozenPq]] —
+    * bounded tables collected once and re-embedded as plan literals),
+    * which is what removes the per-micro-batch broadcast-future jobs
+    * from the append encode. */
   private val frozenIdxCache =
     new java.util.concurrent.ConcurrentHashMap[
-      (String, String, String), (String, AnyRef)]()
+      (String, String, String), (String, FrozenGen)]()
 
-  private def frozenIdx[A <: AnyRef](spark: SparkSession, layout: String,
-      dir: String, tree: String, load: () => A): A =
+  private def frozenIdx(spark: SparkSession, layout: String, dir: String,
+      tree: String, load: () => FrozenGen): FrozenGen =
     frozenIdxCache.compute(
       (spark.sparkContext.applicationId, layout, dir),
       (_, cur) => if (cur != null && cur._1 == tree) cur
-        else (tree, load()))._2.asInstanceOf[A]
+        else (tree, load()))._2
 
   /** Test hook: the cached generation trees for one index dir (all
     * layouts) — pins the r17 eviction contract (one live entry per
@@ -2868,38 +2808,15 @@ object Graft {
       .select(col(idCol) +: col("list_id") +: col("mx") +: col("q") +:
         col("nrm") +: payload.map(col): _*)
 
-  /** The cache entries: the lazy frame state (schema checks, meta),
-    * the generation's frozen encode state, and the persisted
-    * deriveNlist rule (vpl, sf — written at save time, re-written
-    * UNCHANGED by every append, so frozen within a generation too:
-    * hoisting it removes the per-batch meta re-read from the
-    * row-count rewrite). */
-  private final case class FrozenPqIdx(idx: IvfPqIndex, st: FrozenPq,
-      vpl: Int, sf: Double)
-  private final case class FrozenSqIdx(idx: IvfSqIndex, st: FrozenCents,
-      vpl: Int, sf: Double)
-
-  /** The persisted deriveNlist rule of a saved index ([[ivfPqSave]]'s
-    * meta columns) — defaults for pre-r14 saves. */
-  private def pqSavedDerivation(spark: SparkSession, dir: String)
-      : (Int, Double) = {
-    val metaDf = spark.read.parquet(
-      s"${resolveIndexTree(spark, dir)}/meta.parquet")
-    if (!metaDf.columns.contains("vectors_per_list")) (400, 4.0)
-    else {
-      val meta = metaDf.head()
-      (meta.getInt(metaDf.columns.indexOf("vectors_per_list")),
-        meta.getDouble(metaDf.columns.indexOf("sqrt_factor")))
-    }
-  }
-
   // ------------------------------------------------------------------
-  // Lifecycle of the SAVED IVF-PQ layout ([[ivfPqSave]] dirs) — the
+  // Lifecycle of a SAVED index dir ([[ivfPqSave]]/[[ivfSqSave]]) — the
   // serving deployment's index. The streaming bucketed-TABLE layout
   // ([[bucketedIndexAppender]]/[[retrainIndex]]) keeps raw vectors so
   // its maintenance is one-pass; this layout keeps CODES (64× smaller
-  // serving scans), so growth uses frozen-codebook encode (Faiss `add`)
-  // and retrain is a rebuild — each op below names that trade.
+  // serving scans), so growth uses frozen-quantizer encode (Faiss `add`)
+  // and retrain is a rebuild — each op below names that trade. Every
+  // body is codec-free: [[DirCodec]] supplies the IVF-PQ/IVF-SQ8 parts,
+  // and the public `ivfPq*`/`ivfSq*` entry points are thin wrappers.
   // ------------------------------------------------------------------
 
   final case class PqAppendStats(appended: Long, rowsAfter: Long,
@@ -2913,12 +2830,15 @@ object Graft {
     * append-built index is row-identical to a batch build
     * over the union given the same trained state), and the codes
     * append into the existing `bucket=` hive partitions. The EXISTING
-    * codes never read or shuffle — per-append cost is O(batch).
+    * codes never read or shuffle.
     *
     * Payload columns persist automatically: whatever payload the index
     * was built with must be present on `batch` (checked by name).
-    * The meta row count advances so [[ivfPqSearch]]'s default-shortlist
-    * derivation keeps sizing to the TRUE corpus.
+    * The row count advances so [[ivfPqSearch]]'s default-shortlist
+    * derivation keeps sizing to the TRUE corpus: it is RECOUNTED from
+    * the committed codes (one parquet-footer job) and written to the
+    * generation's `ROWS` record — never to `meta.parquet`, which is
+    * written once, by the save that created the generation.
     *
     * Fragmentation: each append writes ≤ touched-bucket files, so a
     * long-running ingest accrues O(appends · buckets) files and the
@@ -2929,54 +2849,48 @@ object Graft {
     * must be serialized with compact/retrain (single maintenance
     * writer — the [[bucketedIndexAppender]] discipline). */
   def ivfPqAppend(spark: SparkSession, dir: String, batch: DataFrame,
-      vecCol: String): PqAppendStats = {
+      vecCol: String): PqAppendStats =
+    appendIndexDir(PqDir, spark, dir, batch, vecCol)
+
+  private def appendIndexDir[I](c: DirCodec[I], spark: SparkSession,
+      dir: String, batch: DataFrame, vecCol: String): PqAppendStats = {
+    val op = s"${c.family}Append"
     // resolve the live generation once for all reads AND writes; the
-    // frozen state (quantizer/codebooks/structural meta + the literal
-    // encode tables) comes from the per-generation cache — see
-    // [[frozenIdxCache]] — so a steady-state streaming append pays no
+    // frozen state comes from the per-generation cache (see
+    // [[frozenIdxCache]]), so a steady-state streaming append pays no
     // footer/schema re-reads and no broadcast-future jobs
     val tree = resolveIndexTree(spark, dir)
-    val fz = frozenIdx(spark, "ivfpq", dir, tree, () => {
-      val i = ivfPqLoadTree(spark, tree)
-      val (vpl, sf) = pqSavedDerivation(spark, tree)
-      FrozenPqIdx(i, freezePq(freezeCents(i.cents), i.cents,
-        i.lookup, i.dim, i.m, i.ksub), vpl, sf)
+    val fz = frozenIdx(spark, c.family, dir, tree, () => {
+      val g = loadIndexDir(c, op, spark, dir, tree)
+      FrozenGen(g.core, c.payload(g.core), c.encoder(g.idx))
     })
-    val idx = fz.idx
-    require(idx.buckets > 0,
-      s"ivfPqAppend($dir): saved index has no bucket layout")
-    val payload = pqPayloadCols(idx)
-    val missing = (idx.idCol +: vecCol +: payload)
-      .filterNot(batch.columns.contains)
-    require(missing.isEmpty,
-      s"ivfPqAppend($dir): batch lacks column(s) " +
-        s"${missing.mkString(", ")} (index schema: id=${idx.idCol}, " +
-        s"payload=${payload.mkString(", ")})")
-    val n = countAndCheckDim("ivfPqAppend", batch, vecCol, idx.dim)
-    // empty batch: the cached rows may predate earlier appends in this
-    // generation — re-read the live meta so the stats stay exact
-    var rowsAfter =
-      if (n > 0) idx.rows else ivfPqLoadTree(spark, tree).rows
-    if (n > 0) {
-      pqEncodeFrozen(batch, idx.idCol, vecCol, fz.st,
-          idx.dim, idx.m, idx.ksub, payload)
-        .withColumn("bucket", pmod(col("list_id"), lit(idx.buckets)))
-        .repartition(col("bucket"))
-        .sortWithinPartitions("bucket", "list_id")
-        .write.mode("append").partitionBy("bucket")
-        .parquet(s"$tree/codes.parquet")
-      // the persisted count is RECOUNTED from the committed codes
-      // (parquet footer metadata — one bounded job), never derived
-      // from the possibly-stale meta: a crash between a previous
-      // append's codes commit and its meta rewrite would otherwise
-      // undercount forever, and every default-shortlist search would
-      // silently derive from the undercount (r14 review). The recount
-      // makes the meta SELF-HEALING — the next append fixes any stale
-      // value.
-      rowsAfter = spark.read.parquet(s"$tree/codes.parquet").count()
-      rewritePqMetaRows(spark, tree, idx, rowsAfter, fz.vpl, fz.sf)
-    }
-    PqAppendStats(n, rowsAfter, pqCodeFiles(spark, dir))
+    val core = fz.core
+    require(core.buckets > 0,
+      s"$op($dir): saved index has no bucket layout")
+    requireIndexCols(op, dir, "batch lacks", batch, core.idCol, vecCol,
+      fz.payload)
+    val n = countAndCheckDim(op, batch, vecCol, core.dim)
+    val rowsAfter =
+      // empty batch: the cached count may predate earlier appends in
+      // this generation — re-read the live one so the stats stay exact
+      if (n == 0) loadIndexDir(c, op, spark, dir, tree).core.rows
+      else {
+        fz.encode(batch, vecCol, fz.payload)
+          .withColumn("bucket", pmod(col("list_id"), lit(core.buckets)))
+          .repartition(col("bucket"))
+          .sortWithinPartitions("bucket", "list_id")
+          .write.mode("append").partitionBy("bucket")
+          .parquet(s"$tree/codes.parquet")
+        // RECOUNT from the committed codes, never advance a possibly
+        // stale count: a crash between a previous append's codes commit
+        // and its record write would otherwise undercount forever. The
+        // recount makes the record SELF-HEALING.
+        val rows = spark.read.parquet(s"$tree/codes.parquet").count()
+        writeAtomic(spark,
+          new org.apache.hadoop.fs.Path(tree, RowsRecord), rows.toString)
+        rows
+      }
+    PqAppendStats(n, rowsAfter, codeFiles(spark, tree))
   }
 
   /** Point-in-time health of a SAVED IVF-PQ index — the same decision
@@ -2997,12 +2911,14 @@ object Graft {
     * same fix the table layout's sidecar applies). Pass explicit
     * values to override. */
   def ivfPqIndexStats(spark: SparkSession, dir: String,
-      vectorsPerList: Int = 0, sqrtFactor: Double = 0.0): IndexStats = {
-    val idx = ivfPqLoad(spark, dir)
-    val (pVpl, pSf) = pqSavedDerivation(spark, dir)
-    val vpl = if (vectorsPerList > 0) vectorsPerList else pVpl
-    val sf = if (sqrtFactor > 0) sqrtFactor else pSf
-    val occ = idx.enc.groupBy(col("list_id")).count()
+      vectorsPerList: Int = 0, sqrtFactor: Double = 0.0): IndexStats =
+    indexDirStats(PqDir, spark, dir, vectorsPerList, sqrtFactor)
+
+  private def indexDirStats[I](c: DirCodec[I], spark: SparkSession,
+      dir: String, vectorsPerList: Int, sqrtFactor: Double): IndexStats = {
+    val g = loadIndexDir(c, s"${c.family}IndexStats", spark, dir,
+      resolveIndexTree(spark, dir))
+    val occ = g.core.enc.groupBy(col("list_id")).count()
       .agg(count(lit(1)).as("lists"),
         coalesce(sum("count"), lit(0L)).as("rows"),
         coalesce(avg("count"), lit(0.0)).as("mean"),
@@ -3011,16 +2927,17 @@ object Graft {
         coalesce(max("count"), lit(0L)).as("max"))
       .head()
     IndexStats(rows = occ.getLong(1),
-      dataFiles = pqCodeFiles(spark, dir), buckets = idx.buckets,
+      dataFiles = codeFiles(spark, g.tree), buckets = g.core.buckets,
       lists = occ.getLong(0), occMean = occ.getDouble(2),
       occP99 = occ.getLong(3), occMax = occ.getLong(4),
-      pendingTombstones = 0L, quantizerLists = Some(idx.nlist),
-      targetNlist = deriveNlist(occ.getLong(1), vpl, sf),
+      pendingTombstones = 0L, quantizerLists = Some(g.core.nlist),
+      targetNlist = deriveNlist(occ.getLong(1),
+        if (vectorsPerList > 0) vectorsPerList else g.vpl,
+        if (sqrtFactor > 0) sqrtFactor else g.sf),
       // the LIVE generation's name — it moves on every retrain/compact,
       // so before/after comparisons detect a publish (the table
       // layout's indexGeneration contract; r14 review)
-      generation = new org.apache.hadoop.fs.Path(
-        resolveIndexTree(spark, dir)).getName)
+      generation = new org.apache.hadoop.fs.Path(g.tree).getName)
   }
 
   /** Rewrite a saved index's codes back to ≤ buckets files — the
@@ -3030,20 +2947,25 @@ object Graft {
     * reading the old codes as input, before the pointer moves), so a
     * failure leaves the live generation untouched and readers of the
     * old one keep serving through the swap. Serialize with appends. */
-  def ivfPqCompact(spark: SparkSession, dir: String): CompactionStats = {
-    val idx = ivfPqLoad(spark, dir)
-    require(idx.buckets > 0,
-      s"ivfPqCompact($dir): saved index has no bucket layout")
-    val before = pqCodeFiles(spark, dir)
-    // RECOUNT, never trust the loaded meta: a crash-orphaned stale
+  def ivfPqCompact(spark: SparkSession, dir: String): CompactionStats =
+    compactIndexDir(PqDir, spark, dir)
+
+  private def compactIndexDir[I](c: DirCodec[I], spark: SparkSession,
+      dir: String): CompactionStats = {
+    val op = s"${c.family}Compact"
+    val g = loadIndexDir(c, op, spark, dir, resolveIndexTree(spark, dir))
+    require(g.core.buckets > 0,
+      s"$op($dir): saved index has no bucket layout")
+    val before = codeFiles(spark, g.tree)
+    // RECOUNT, never trust the loaded count: a crash-orphaned stale
     // count must not be re-persisted forward (r14 review)
-    val rows = idx.enc.count()
-    val (vpl, sf) = pqSavedDerivation(spark, dir)
-    // drop the partition column before re-saving: ivfPqSave re-derives
+    val rows = g.core.enc.count()
+    // drop the partition column before re-saving: the save re-derives
     // it, and a duplicate `bucket` would collide
-    ivfPqSave(idx.copy(enc = idx.enc.drop("bucket"), rows = rows),
-      dir, idx.buckets, vpl, sf)
-    CompactionStats(rows, before, pqCodeFiles(spark, dir))
+    val tree = saveIndexDir(c,
+      c.withCodes(g.idx, g.core.enc.drop("bucket"), rows), dir,
+      g.core.buckets, g.vpl, g.sf)
+    CompactionStats(rows, before, codeFiles(spark, tree))
   }
 
   final case class PqRetrainStats(rows: Long, nlistBefore: Int,
@@ -3064,37 +2986,40 @@ object Graft {
     * this rebuild for `IndexIVFPQ` drift). Structure (m, ksub, dim, idCol, buckets) and
     * payload columns carry over from the saved meta; `nlist` = 0
     * re-derives the width from the CURRENT corpus count — growth is
-    * what moves it. Serialize with appends; serving probes load the
-    * new generation on their next [[ivfPqLoad]]. */
+    * what moves it. vectorsPerList/sqrtFactor = 0 re-derive under the
+    * rule PERSISTED at save time (see [[ivfPqIndexStats]]) and
+    * re-persist it with the rebuilt index, so the sizing rule survives
+    * every retrain cycle. Serialize with appends; serving probes load
+    * the new generation on their next [[ivfPqLoad]]. */
   def ivfPqRetrain(spark: SparkSession, dir: String, vectors: DataFrame,
       vecCol: String, nlist: Int = 0, iters: Int = 2,
       trainPerList: Int = 128, vectorsPerList: Int = 0,
-      sqrtFactor: Double = 0.0): PqRetrainStats = {
-    // vectorsPerList/sqrtFactor = 0: re-derive under the rule PERSISTED
-    // at save time (see [[ivfPqIndexStats]]) and re-persist it with the
-    // rebuilt index, so the sizing rule survives every retrain cycle
+      sqrtFactor: Double = 0.0): PqRetrainStats =
+    retrainIndexDir(PqDir, spark, dir, vectors, vecCol, nlist, iters,
+      trainPerList, vectorsPerList, sqrtFactor)
+
+  private def retrainIndexDir[I](c: DirCodec[I], spark: SparkSession,
+      dir: String, vectors: DataFrame, vecCol: String, nlist: Int,
+      iters: Int, trainPerList: Int, vectorsPerList: Int,
+      sqrtFactor: Double): PqRetrainStats = {
+    val op = s"${c.family}Retrain"
     require(nlist >= 0 && iters >= 0 && trainPerList > 0,
-      s"ivfPqRetrain($dir, nlist=$nlist)")
-    val old = ivfPqLoad(spark, dir)
-    val (pVpl, pSf) = pqSavedDerivation(spark, dir)
-    val vpl = if (vectorsPerList > 0) vectorsPerList else pVpl
-    val sf = if (sqrtFactor > 0) sqrtFactor else pSf
-    val payload = pqPayloadCols(old)
-    val missing = (old.idCol +: vecCol +: payload)
-      .filterNot(vectors.columns.contains)
-    require(missing.isEmpty,
-      s"ivfPqRetrain($dir): vectors lack column(s) " +
-        s"${missing.mkString(", ")} (index schema: id=${old.idCol}, " +
-        s"payload=${payload.mkString(", ")})")
-    val filesBefore = pqCodeFiles(spark, dir)
+      s"$op($dir, nlist=$nlist)")
+    val old = loadIndexDir(c, op, spark, dir, resolveIndexTree(spark, dir))
+    val vpl = if (vectorsPerList > 0) vectorsPerList else old.vpl
+    val sf = if (sqrtFactor > 0) sqrtFactor else old.sf
+    val payload = c.payload(old.core)
+    requireIndexCols(op, dir, "vectors lack", vectors, old.core.idCol,
+      vecCol, payload)
+    val filesBefore = codeFiles(spark, old.tree)
     val n = vectors.count()
     val nl = math.max(1,
       if (nlist > 0) nlist else deriveNlist(n, vpl, sf))
-    val rebuilt = ivfPqBuild(vectors, old.idCol, vecCol, old.dim, nl,
-      old.m, old.ksub, iters, trainPerList, payload)
-    ivfPqSave(rebuilt, dir, old.buckets, vpl, sf)
-    PqRetrainStats(n, old.nlist, nl, filesBefore,
-      pqCodeFiles(spark, dir))
+    val tree = saveIndexDir(c,
+      c.rebuild(old.idx, vectors, vecCol, nl, iters, trainPerList,
+        payload), dir, old.core.buckets, vpl, sf)
+    PqRetrainStats(n, old.core.nlist, nl, filesBefore,
+      codeFiles(spark, tree))
   }
 
   /** The maintenance AUTOPILOT for a saved IVF-PQ serving dir — the
@@ -3136,43 +3061,31 @@ object Graft {
   def ivfPqDirAppender(spark: SparkSession, dir: String, vecCol: String,
       vectors: () => DataFrame, maintainEvery: Int = 0, iters: Int = 2)
       : (DataFrame, Long) => Unit =
-    savedDirAppender("ivfPqDirAppender", maintainEvery,
-      append = b => { ivfPqAppend(spark, dir, b, vecCol); () },
-      stats = () => ivfPqIndexStats(spark, dir),
-      compact = () => { ivfPqCompact(spark, dir); () },
-      retrain = () =>
-        { ivfPqRetrain(spark, dir, vectors(), vecCol, iters = iters); () })
+    savedDirAppender(PqDir, spark, dir, vecCol, vectors, maintainEvery,
+      iters)
 
-  /** [[ivfPqDirAppender]] for the saved IVF-SQ8 layout — the
-    * training-free twin: appends are the pure Faiss `add`
-    * ([[ivfSqAppend]]), and the advice-driven retrain is
-    * [[ivfSqRetrain]]'s fresh-centroid rebuild. Same supplier
-    * contract, same hysteresis, same generation-swap-by-construction. */
+  /** [[ivfPqDirAppender]] for a saved IVF-SQ8 dir: the same loop on the
+    * same store, with [[ivfSqAppend]]'s pure Faiss `add` and
+    * [[ivfSqRetrain]]'s fresh-centroid rebuild. */
   def ivfSqDirAppender(spark: SparkSession, dir: String, vecCol: String,
       vectors: () => DataFrame, maintainEvery: Int = 0, iters: Int = 2)
       : (DataFrame, Long) => Unit =
-    savedDirAppender("ivfSqDirAppender", maintainEvery,
-      append = b => { ivfSqAppend(spark, dir, b, vecCol); () },
-      stats = () => ivfSqIndexStats(spark, dir),
-      compact = () => { ivfSqCompact(spark, dir); () },
-      retrain = () =>
-        { ivfSqRetrain(spark, dir, vectors(), vecCol, iters = iters); () })
+    savedDirAppender(SqDir, spark, dir, vecCol, vectors, maintainEvery,
+      iters)
 
-  /** The shared autopilot loop of [[ivfPqDirAppender]] /
-    * [[ivfSqDirAppender]] — ONE implementation so a fix to either
-    * family's cadence cannot silently miss its twin (the
-    * [[saveIndexDir]] discipline). Cadence on the stream's batchId,
-    * exactly like [[bucketedIndexAppender]]. */
-  private def savedDirAppender(op: String, maintainEvery: Int,
-      append: DataFrame => Unit, stats: () => IndexStats,
-      compact: () => Unit, retrain: () => Unit)
-      : (DataFrame, Long) => Unit = {
-    require(maintainEvery >= 0, s"$op(maintainEvery=$maintainEvery)")
+  /** The autopilot loop of a saved dir. Cadence on the stream's
+    * batchId, exactly like [[bucketedIndexAppender]]. */
+  private def savedDirAppender[I](c: DirCodec[I], spark: SparkSession,
+      dir: String, vecCol: String, vectors: () => DataFrame,
+      maintainEvery: Int, iters: Int): (DataFrame, Long) => Unit = {
+    require(maintainEvery >= 0,
+      s"${c.family}DirAppender(maintainEvery=$maintainEvery)")
+    def stats() = indexDirStats(c, spark, dir, 0, 0.0)
     // skew left behind by the last advice-driven retrain (p99/mean);
     // -1 until one runs — the skew-trigger hysteresis baseline
     var postRetrainSkew = -1.0
     (batch: DataFrame, batchId: Long) => {
-      append(batch)
+      appendIndexDir(c, spark, dir, batch, vecCol)
       if (maintainEvery > 0 && (batchId + 1) % maintainEvery == 0) {
         val st = stats()
         val advice = maintenanceAdvice(st)
@@ -3181,26 +3094,65 @@ object Graft {
         val skewActionable = advice.skewed &&
           skewRetrainActionable(curSkew, postRetrainSkew)
         if (advice.outgrown || skewActionable) {
-          retrain()
+          retrainIndexDir(c, spark, dir, vectors(), vecCol, 0, iters, 128,
+            0, 0.0)
           val after = stats()
           postRetrainSkew =
             if (after.occMean > 0) after.occP99 / after.occMean
             else 0.0
-        } else if (advice.compact) compact()
+        } else if (advice.compact) compactIndexDir(c, spark, dir)
       }
     }
   }
 
-  /** The payload columns a saved index carries: everything in the codes
-    * frame that is not pipeline-owned. */
-  private def pqPayloadCols(idx: IvfPqIndex): Seq[String] = {
-    val internal = Set(idx.idCol, "list_id", "code", "rnorm", "bucket")
-    idx.enc.columns.filterNot(internal).toSeq
+  /** Fail-by-name dimension check for the frozen append paths: the
+    * dot kernels truncate mismatched lengths to min(length) (never
+    * throw), so a wrong-width batch would corrupt every later ranking
+    * silently.
+    *
+    * Fused with the batch count since r16 — ONE aggregation
+    * job per streaming append instead of count + dim-check back to
+    * back (r16: the appends run per micro-batch, so per-call jobs are
+    * the ingest path's fixed cost). The check aggregates over the
+    * WHOLE batch, not head(): a mixed-width batch whose first row
+    * happens to match would otherwise pass and still truncate in the
+    * kernels (r14 advice); it is skipped when the index predates the
+    * dim column (-1) or the batch is empty. Returns the count. */
+  private def countAndCheckDim(op: String, batch: DataFrame,
+      vecCol: String, expected: Int): Long = {
+    val mm = batch.agg(count(lit(1)).as("n"),
+      min(size(col(vecCol))).as("lo"),
+      max(size(col(vecCol))).as("hi")).head()
+    val n = mm.getLong(0)
+    if (expected > 0 && n > 0) {
+      // an all-null vector column yields null min/max (size(null) is
+      // null under the default conf) — fold it into the named failure
+      // instead of an opaque NPE on getInt (r16 ADVICE)
+      val nulls = mm.isNullAt(1) || mm.isNullAt(2)
+      val (lo, hi) =
+        if (nulls) (-1, -1) else (mm.getInt(1), mm.getInt(2))
+      require(!nulls && lo == expected && hi == expected,
+        s"$op: batch $vecCol has dimension(s) " +
+          s"${if (nulls) "null (all-null vectors)" else s"$lo..$hi"} " +
+          s"but the index was built at $expected — the int8/float dot " +
+          "kernels would silently truncate to the overlap")
+    }
+    n
   }
 
-  private def pqCodeFiles(spark: SparkSession, dir: String): Int = {
-    val p = new org.apache.hadoop.fs.Path(
-      s"${resolveIndexTree(spark, dir)}/codes.parquet")
+  /** Fail by name when `df` lacks a column an index row needs. */
+  private def requireIndexCols(op: String, dir: String, lacks: String,
+      df: DataFrame, idCol: String, vecCol: String,
+      payload: Seq[String]): Unit = {
+    val missing = (idCol +: vecCol +: payload).filterNot(df.columns.contains)
+    require(missing.isEmpty,
+      s"$op($dir): $lacks column(s) ${missing.mkString(", ")} " +
+        s"(index schema: id=$idCol, payload=${payload.mkString(", ")})")
+  }
+
+  /** Data files under a generation tree's codes frame. */
+  private def codeFiles(spark: SparkSession, tree: String): Int = {
+    val p = new org.apache.hadoop.fs.Path(s"$tree/codes.parquet")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) return 0
     val it = fs.listFiles(p, true)
@@ -3209,51 +3161,6 @@ object Graft {
       if (it.next().getPath.getName.endsWith(".parquet")) n += 1
     }
     n
-  }
-
-  /** Advance the persisted row count after an append (inside the LIVE
-    * generation — `dir` here is the resolved tree). The swap is a
-    * delete-then-rename instant: a load racing it can fail loudly and
-    * retry, never read torn state (the tmp tree is complete before the
-    * old meta is touched). */
-  private def rewritePqMetaRows(spark: SparkSession, dir: String,
-      idx: IvfPqIndex, rows: Long, vpl: Int, sf: Double): Unit = {
-    // (vpl, sf): the persisted deriveNlist rule, passed in from the
-    // generation cache — save-time state, re-persisted unchanged, so
-    // the per-append meta re-read it used to pay is gone (r17)
-    val s = spark
-    import s.implicits._
-    rewriteIndexMeta(spark, dir, "ivfPqAppend",
-      Seq((idx.idCol, idx.nlist, idx.dim, idx.m, idx.ksub, idx.buckets,
-        rows, vpl, sf))
-        .toDF("id_col", "nlist", "dim", "m", "ksub", "buckets", "rows",
-          "vectors_per_list", "sqrt_factor"))
-  }
-
-  /** Swap a saved index's meta frame in place (within the LIVE
-    * generation — `tree` is the resolved dir). Delete-then-rename
-    * instant: a racing load can fail loudly and retry, never read torn
-    * state; a failed write strands no tmp junk. */
-  private def rewriteIndexMeta(spark: SparkSession, tree: String,
-      opName: String, meta: DataFrame): Unit = {
-    val target = new org.apache.hadoop.fs.Path(s"$tree/meta.parquet")
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(target.getParent,
-      target.getName + ".tmp-" +
-        java.util.UUID.randomUUID().toString.take(8))
-    try meta.write.mode("overwrite").parquet(tmp.toString)
-    catch { case e: Throwable =>
-      try fs.delete(tmp, true)
-      catch { case c: Throwable => e.addSuppressed(c) }
-      throw e
-    }
-    if (fs.exists(target) && !fs.delete(target, true))
-      throw new java.io.IOException(
-        s"$opName: cannot replace $target")
-    if (!fs.rename(tmp, target))
-      throw new java.io.IOException(
-        s"$opName: rename $tmp -> $target failed (complete meta " +
-          "remains at the temp path)")
   }
 
   /** What [[compactBucketedIndex]] did: `rows` survived the rewrite

@@ -91,7 +91,6 @@ object EmbeddedBroker {
     private val retained = mutable.Map[String, mutable.ArrayBuffer[Message]]()
     private val msgId = new AtomicLong(0)
     private val ackId = new AtomicLong(0)
-    private val seenChunks = mutable.Set[String]()
     // streamKey -> count of ordered-publish rows already accepted
     private val orderedHwm = mutable.Map[String, Long]()
     // streamKey -> per-ordinal content hash of every accepted row. A
@@ -178,20 +177,6 @@ object EmbeddedBroker {
         }
       }
       prepared.map(_.messageId)
-    }
-
-    /** Idempotent batch publish: the whole chunk is dropped if `dedupKey`
-      * was seen before (effectively-once for fixed, deterministic
-      * chunks). The STREAMING SINK does not use this — its chunk
-      * boundaries are timing-dependent (the 10 ms delay flush), so it
-      * publishes through [[publishOrdered]] instead. */
-    def publishChunk(topic: String, dedupKey: String,
-        msgs: Seq[(Array[Byte], Map[String, String], String)]): Unit = {
-      val fresh = synchronized {
-        if (seenChunks.contains(dedupKey)) false
-        else { seenChunks += dedupKey; true }
-      }
-      if (fresh) publishBatch(topic, msgs)
     }
 
     /** Idempotent ORDERED publish for exactly-once sinks: rows of one

@@ -124,16 +124,6 @@ class BrokerPropertiesSpec extends AnyFunSuite with Matchers {
     }, minTests = 20)
   }
 
-  test("chunk publish is idempotent on the dedup key") {
-    check(Prop.forAll(Gen.choose(1, 10), Gen.choose(1, 5)) { (count, repeats) =>
-      val (b, t, s) = fresh()
-      val chunk = (1 to count).map(i =>
-        (s"m$i".getBytes, Map.empty[String, String], "")).toSeq
-      (1 to repeats).foreach(_ => b.publishChunk(t, "chunk-0", chunk))
-      b.backlog(s) == count.toLong
-    })
-  }
-
   test("property: ordered publish delivers a row sequence exactly once " +
     "under ANY sequence of re-chunked retry attempts") {
     val gen = for {

@@ -103,16 +103,6 @@ class EmbeddedBrokerSpec extends AnyFunSuite with Matchers {
     b2.pull(s2, 10).map(p => new String(p._2.data)) shouldBe Seq("k1-second")
   }
 
-  test("publishChunk is idempotent per dedup key") {
-    val (b, t, s) = freshBroker()
-    val msgs = Seq[(Array[Byte], Map[String, String], String)](
-      ("a".getBytes, Map.empty, ""), ("b".getBytes, Map.empty, ""))
-    b.publishChunk(t, "q/0/0/0", msgs)
-    b.publishChunk(t, "q/0/0/0", msgs) // retry of same chunk: dropped
-    b.publishChunk(t, "q/0/0/1", msgs) // next chunk: delivered
-    b.pull(s, 100) should have size 4
-  }
-
   test("publishOrdered is exactly-once even when a retry re-chunks the " +
     "row sequence at different boundaries") {
     val (b, t, s) = freshBroker()
