@@ -3627,8 +3627,9 @@ object Graft {
     * coherent serve: read the generation, load the quantizer, probe,
     * re-read the generation — if it moved, RETRY the batch (the
     * quantizer publishes inside the generation dir, so equal tokens
-    * prove the pair matched). `StreamVecProbe mixedm` measures the
-    * recipe; the window is the swap instant, so one retry suffices. */
+    * prove the pair matched). SCALE.md's "r13: serving THROUGH live
+    * retrains" section measures the recipe; the window is the swap
+    * instant, so one retry suffices. */
   def indexGeneration(spark: SparkSession, table: String): String =
     bucketedTableLocation(spark, table).getName
 
@@ -3899,12 +3900,13 @@ object Graft {
     * `compactEvery = 0` disables the cadence (run compaction on your
     * own schedule). The returned function is a plain
     * `(DataFrame, Long) => Unit`, so batch jobs can drive the same
-    * path (`StreamVecProbe soak` does — its 100-append run measured
-    * probes flat at 0.4–1.5 s with the every-20 cadence, vs 16×
-    * degradation without compaction). Expects batches of
-    * (`idCol`, `vecCol`) vectors; rows with ids already indexed are
-    * NOT deduplicated — exactly-once delivery is the stream's contract
-    * (the pubsub source's replay cache provides it). */
+    * path (SCALE.md's "r13: the full deployment-loop soak" section:
+    * its 100-append run measured probes flat at 0.4–1.5 s with the
+    * every-20 cadence, vs 16× degradation without compaction).
+    * Expects batches of (`idCol`, `vecCol`) vectors; rows with ids
+    * already indexed are NOT deduplicated — exactly-once delivery is
+    * the stream's contract (the pubsub source's replay cache provides
+    * it). */
   def bucketedIndexAppender(table: String, buckets: Int,
       centroids: Option[DataFrame], idCol: String, vecCol: String,
       compactEvery: Int = 0, maintainEvery: Int = 0)
@@ -4981,9 +4983,6 @@ object Graft {
   /** Element-wise mean centroid per `list_id`: explode to (list, dim,
     * value), ONE aggregation (map-side partial), re-assemble the array.
     * The shuffle carries (list, dim, partial-sum) — never the vectors. */
-  private[graft] def meanCentroidsForProbe(assigned: DataFrame,
-      vecCol: String): DataFrame = meanCentroids(assigned, vecCol)
-
   private def meanCentroids(assigned: DataFrame, vecCol: String): DataFrame =
     assigned
       .select(col("list_id"), posexplode(col(vecCol)).as(Seq("pos", "v")))
@@ -5195,7 +5194,7 @@ object Graft {
       it += 1
     }
     // Rounds-to-convergence diagnostic (includes the fixpoint-confirming
-    // round): SCALE.md's decade measurements read it via ClusterProbe —
+    // round): SCALE.md's "r16: the cluster-propagation decade" reads it —
     // round count is the term that would bend this loop super-linear on
     // high-diameter graphs, so the growth record tracks it explicitly.
     onRounds(it)

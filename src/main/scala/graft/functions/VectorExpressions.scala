@@ -384,117 +384,29 @@ object PqEncodeF32 {
   }
 }
 
-/** Query-directed multiprobe probe-code generation for the sign-LSH
-  * pair index (Lv et al. 2007, "Multi-Probe LSH"): from one table's
-  * per-hyperplane margin array (ARRAY<DOUBLE>, the dot products whose
-  * signs are the code bits), emit the probe codes — the exact code,
-  * single-bit flips of the `m` lowest-|margin| bits, and pair flips of
-  * the `m2` lowest — as ARRAY<INT>, one pass, no allocation beyond the
-  * output.
-  *
-  * A true near-neighbor's code differs from the row's almost surely in
-  * low-margin bits, so m ≪ bits directed single flips retain nearly all
-  * of full hamming-1 multiprobe's recall, and the C(m2,2) directed PAIR
-  * flips add hamming-2 reach full multiprobe never had — measured at
-  * scale10: directed 6+C(4,2) probes (13/table) recall 0.983 vs full
-  * hamming-1's 0.973 (also 13/table at bits 12). The HOF formulation of
-  * the same selection (zip_with + array_sort + nested transforms per
-  * table) evaluates interpreted and dominated the probe build; this is
-  * the same retirement DotProductF32 applied to the cosine fold.
-  *
-  * Tie order matches `array_sort` over (|margin|, bit index): equal
-  * margins keep the lower bit index first. */
-case class LshDirectedProbes(child: Expression, bits: Int, m: Int, m2: Int)
-    extends UnaryExpression {
-  require(bits > 0 && bits <= 30 && m >= 0 && m <= bits && m2 >= 0 &&
-    m2 <= m, s"lsh_probes(bits=$bits, m=$m, m2=$m2)")
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(
-        s"lsh_probes requires ARRAY<DOUBLE> margins, got $t")
-    }
-  override def dataType: DataType = ArrayType(IntegerType, false)
-  override def prettyName: String = "lsh_probes"
-
-  override protected def nullSafeEval(input: Any): Any =
-    LshDirectedProbes.compute(input.asInstanceOf[ArrayData], bits, m, m2)
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.LshDirectedProbes.compute($c, $bits, $m, $m2)")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): Expression = copy(child = newChild)
-}
-
-object LshDirectedProbes {
-  def compute(dots: ArrayData, bits: Int, m: Int, m2: Int): ArrayData = {
-    val b = math.min(bits, dots.numElements())
-    // one pass: the code bits, plus an insertion-select of the m
-    // smallest |margin| indices (ascending by (|margin|, index) — the
-    // strict `<` keeps the earlier index on ties, matching array_sort
-    // over named_struct(a, j))
-    val selA = new Array[Double](m)
-    val selJ = new Array[Int](m)
-    var cnt = 0
-    var code = 0
-    var j = 0
-    while (j < b) {
-      val d = dots.getDouble(j)
-      if (d > 0) code |= (1 << j)
-      val a = if (d < 0) -d else d
-      var pos = -1
-      if (cnt < m) { pos = cnt; cnt += 1 }
-      else if (m > 0 && a < selA(m - 1)) pos = m - 1
-      if (pos >= 0) {
-        while (pos > 0 && a < selA(pos - 1)) {
-          selA(pos) = selA(pos - 1); selJ(pos) = selJ(pos - 1); pos -= 1
-        }
-        selA(pos) = a; selJ(pos) = j
-      }
-      j += 1
-    }
-    val deep = math.min(m2, cnt)
-    val out = new Array[Int](1 + cnt + deep * (deep - 1) / 2)
-    out(0) = code
-    var i = 0
-    while (i < cnt) { out(1 + i) = code ^ (1 << selJ(i)); i += 1 }
-    var w = 1 + cnt
-    i = 1
-    while (i < deep) {
-      var k = 0
-      while (k < i) {
-        out(w) = code ^ (1 << selJ(i)) ^ (1 << selJ(k))
-        w += 1; k += 1
-      }
-      i += 1
-    }
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-      .fromPrimitiveArray(out)
-  }
-}
-
 /** Whole-index directed-multiprobe kernel: ALL tables' probe codes for
-  * one vector in one native pass. The per-table formulation
-  * ([[LshDirectedProbes]] under an `array()` of per-plane dotF32 nodes)
-  * builds a tables × bits × dim expression tree (~25k nodes at the
-  * derived 100×-scale layout) whose generated method blows past the JIT
-  * compile threshold — the probe build then runs in the bytecode
-  * interpreter at ~40µs per row-table, dwarfing the join it feeds. Here
-  * the hyperplanes ride along as a plain constructor array (no
-  * expression nodes at all) and the margins/codes/probes loop is one
-  * JIT-compiled method: vec · planes[t,j] exactly as [[DotProductF32]]
-  * folds it (planes stored as FLOAT, accumulated in double), so codes
-  * agree bit-for-bit with the `lshIndex` side's dotF32 codes.
+  * one vector in one native pass (Lv et al. 2007, "Multi-Probe LSH").
+  * A per-table formulation (one probe expression per table under an
+  * `array()` of per-plane dotF32 nodes) builds a tables × bits × dim
+  * expression tree (~25k nodes at the derived 100×-scale layout) whose
+  * generated method blows past the JIT compile threshold — the probe
+  * build then runs in the bytecode interpreter at ~40µs per row-table,
+  * dwarfing the join it feeds. Here the hyperplanes ride along as a
+  * plain constructor array (no expression nodes at all) and the
+  * margins/codes/probes loop is one JIT-compiled method:
+  * vec · planes[t,j] exactly as [[DotProductF32]] folds it (planes
+  * stored as FLOAT, accumulated in double), so codes agree bit-for-bit
+  * with the `lshIndex` side's dotF32 codes.
   *
   * Output: ARRAY<INT> of tables · probesPerTable ints, table-major —
   * probesPerTable = 1 + m + C(min(m2, m), 2) (exact code, directed
-  * single flips, directed pair flips; see [[LshDirectedProbes]] for why
-  * directed probing holds recall at a fraction of full multiprobe's
-  * probe rows). The caller derives (tbl, probe) from the flat position.
+  * single flips of the m lowest-|margin| bits, directed pair flips of
+  * the m2 lowest). A true near-neighbor's code differs from the row's
+  * almost surely in low-margin bits, so directed probing holds recall
+  * at a fraction of full multiprobe's probe rows: measured at scale10,
+  * directed probing with 13 probes per table gave recall 0.983, against
+  * 0.973 for full hamming-1. The caller derives (tbl, probe) from the
+  * flat position.
   */
 case class LshProbesAll(child: Expression, planes: Array[Float],
     tables: Int, bits: Int, dim: Int, m: Int, m2: Int)
@@ -1004,14 +916,6 @@ object VectorExpressions {
         org.apache.spark.sql.graft.Bridge.expression(vec),
         org.apache.spark.sql.graft.Bridge.expression(nrm),
         cents, cnrms, listIds, dim, probes, nanWins, l2))
-
-  /** Directed multiprobe probe codes from one LSH table's margin
-    * array (see [[LshDirectedProbes]]). */
-  def lshProbes(margins: Column, bits: Int, m: Int, m2: Int): Column =
-    org.apache.spark.sql.graft.Bridge.column(
-      LshDirectedProbes(
-        org.apache.spark.sql.graft.Bridge.expression(margins),
-        bits, m, m2))
 
   /** ALL tables' directed probe codes for an ARRAY<FLOAT> vector, flat
     * table-major (see [[LshProbesAll]]). */

@@ -83,7 +83,6 @@ object StreamingOps {
       : (String, String) =
     synchronized {
       val ep = publishedBrokers.getOrElseUpdate((topic, d, copies), {
-        val t0 = System.nanoTime()
         val ep = s"$subPrefix-${UUID.randomUUID()}"
         EmbeddedBroker.get(ep).createTopic(topic)
         val n = copies
@@ -99,10 +98,6 @@ object StreamingOps {
               b.publishBatch(topic, batch)
             }
           }
-        if (sys.env.contains("GRAFT_TIMING")) {
-          System.err.println(
-            f"[timing] publish($topic): ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        }
         ep
       })
       val sub = s"$subPrefix-sub-${UUID.randomUUID().toString.take(8)}"
@@ -270,27 +265,18 @@ object StreamingOps {
     * restored after. (On a real cluster this knob is sized to state
     * volume, not CPU count.) */
   private def drain(df: DataFrame, mode: String): DataFrame = {
-    val t0 = System.nanoTime()
     val s = df.sparkSession
     val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
     val name = "sink_" + UUID.randomUUID().toString.replace("-", "_")
-    val q =
-      try {
-        s.conf.set("spark.sql.shuffle.partitions", "8")
-        val q = df.writeStream.format("memory").queryName(name)
-          .outputMode(mode)
-          .option("checkpointLocation", tmpCheckpoint("graft-stream"))
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination(300000)
-        q
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    if (sys.env.contains("GRAFT_TIMING")) {
-      System.err.println(f"[timing] drain($mode): ${(System.nanoTime()-t0)/1e9}%.2f s")
-      q.recentProgress.foreach(p => System.err.println(
-        s"[timing]   batch=${p.batchId} rows=${p.numInputRows} " +
-          s"durations=${p.durationMs}"))
-    }
+    try {
+      s.conf.set("spark.sql.shuffle.partitions", "8")
+      df.writeStream.format("memory").queryName(name)
+        .outputMode(mode)
+        .option("checkpointLocation", tmpCheckpoint("graft-stream"))
+        .trigger(Trigger.AvailableNow())
+        .start()
+        .awaitTermination(300000)
+    } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
     df.sparkSession.table(name)
   }
 

@@ -210,7 +210,6 @@ class PubsubMicroBatchStream(
     // ONE directory sweep serves both the ack read and the eviction —
     // commit runs between micro-batches, so every filesystem call here
     // is per-batch latency.
-    val t0 = System.nanoTime()
     try {
       ReplayCache.batchDirs(cacheRoot).foreach { case (id, dir) =>
         if (id <= endBatch) {
@@ -221,9 +220,6 @@ class PubsubMicroBatchStream(
         }
       }
     } catch { case _: java.io.IOException => () } // redelivery covers us
-    if (sys.env.contains("GRAFT_TIMING")) System.err.println(
-      f"[timing] source.commit batch=$endBatch " +
-        f"${(System.nanoTime() - t0) / 1e6}%.1fms")
   }
 
   override def stop(): Unit = {

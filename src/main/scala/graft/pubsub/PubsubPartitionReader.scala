@@ -61,8 +61,6 @@ class PubsubPartitionReader(p: PubsubInputPartition)
   private var current: (String, EmbeddedBroker.Message) = _
 
   private def ensureFetched(): Unit = if (fetched == null) {
-    val t0 = System.nanoTime()
-    var how = "cache"
     // Serialize same-slot first evaluations WITHIN this JVM (a striped
     // lock on the cache path): a batch whose plan evaluates the source
     // in TWO CONCURRENT JOBS — a broadcast-exchange job racing the main
@@ -77,10 +75,8 @@ class PubsubPartitionReader(p: PubsubInputPartition)
     // returns the orphaned messages immediately.
     PubsubPartitionReader.slotLock(p.cachePath).synchronized {
       fetched = readCache().getOrElse {
-        val t1 = System.nanoTime()
         val broker = EmbeddedBroker.get(p.endpoint)
         val pulled = broker.pull(p.subscriptionPath, p.maxMessages)
-        val t2 = System.nanoTime()
         // writeCache returns the canonical rows for this slot (the
         // winner's, if a concurrent evaluation won the rename race).
         val canonical = writeCache(pulled)
@@ -96,14 +92,9 @@ class PubsubPartitionReader(p: PubsubInputPartition)
           if (orphaned.nonEmpty)
             broker.nack(p.subscriptionPath, orphaned)
         }
-        how = f"pull=${(t2 - t1) / 1e9}%.2f " +
-          f"write=${(System.nanoTime() - t2) / 1e9}%.2f"
         canonical
       }
     }
-    if (sys.env.contains("GRAFT_TIMING")) System.err.println(
-      f"[timing]   reader part=${p.partitionIdx} n=${fetched.size} " +
-        f"$how total=${(System.nanoTime() - t0) / 1e9}%.2f")
     iter = fetched.iterator
   }
 

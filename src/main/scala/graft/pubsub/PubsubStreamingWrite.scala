@@ -143,8 +143,6 @@ class PubsubDataWriter(f: PubsubWriterFactory, partitionId: Int,
   private val ChunkSize = 20
   private val MaxDelayNanos = 10000000L // 10 ms, CachedPublishers.scala:29
   private val broker = EmbeddedBroker.get(f.endpoint)
-  private val createdAt = System.nanoTime()
-  private var rows = 0L
   private val buf =
     collection.mutable.ArrayBuffer[(Array[Byte], Map[String, String], String)]()
   private var bufBytes = 0L
@@ -174,7 +172,6 @@ class PubsubDataWriter(f: PubsubWriterFactory, partitionId: Int,
       if (f.keyIdx < 0 || row.isNullAt(f.keyIdx)) ""
       else row.getUTF8String(f.keyIdx).toString
     if (buf.isEmpty) firstBufferedAt = System.nanoTime()
-    rows += 1
     buf += ((data.clone(), attrs, key))
     bufBytes += data.length
     if (buf.size >= ChunkSize || bufBytes >= f.maxOutstandingBytes ||
@@ -199,9 +196,6 @@ class PubsubDataWriter(f: PubsubWriterFactory, partitionId: Int,
 
   override def commit(): WriterCommitMessage = {
     flush()
-    if (sys.env.contains("GRAFT_TIMING")) System.err.println(
-      f"[timing]   writer part=$partitionId rows=$rows " +
-        f"task=${(System.nanoTime() - createdAt) / 1e6}%.1fms")
     PubsubCommitMessage
   }
 
