@@ -4338,8 +4338,8 @@ object Graft {
     * decade earlier, at ~150 k docs). Every committed fixture (≤ ~6 k
     * docs) resolves to words = 1, today's widths.
     *
-    * Only word-aligned widths are candidates (each band must live
-    * inside one 60-bit word — the wide ops' banding constraint);
+    * Only widths [[hammingBandLayout]] can band at `radius` are
+    * candidates (each band must live inside one 60-bit word);
     * words = 1 is always admissible because the single-word path bands
     * by ceil-division at any radius. radius = 0 is an equality join at
     * any width, so the narrow signature always wins. */
@@ -4350,10 +4350,8 @@ object Graft {
       s"deriveHammingWords($n, $radius, $collisionsPerItem, $maxWords)")
     if (radius == 0) return 1
     val bands = radius + 1
-    val candidates = 1 +: Seq(2, 4).filter { w =>
-      val bits = 60 * w
-      w <= maxWords && bits % bands == 0 && 60 % (bits / bands) == 0
-    }
+    val candidates = 1 +: Seq(2, 4).filter(w =>
+      w <= maxWords && hammingBandLayout(w, radius).isDefined)
     candidates.find { w =>
       val width = 60.0 * w / bands
       bands.toDouble * n.toDouble / math.pow(2.0, width) <=
@@ -5542,13 +5540,9 @@ object Graft {
 
   /** Near-duplicate payload pairs by aHash hamming distance: pairs of
     * rows whose [[mediaAHash]] values differ in at most `radius` of the
-    * 60 bits, found by exact pigeonhole banding — the hash splits into
-    * radius+1 contiguous bit bands, and any pair within the radius
-    * must agree exactly on at least one band, so the banded EQUI-join
-    * finds every qualifying pair without an all-pairs compare (the d03
-    * SimHash discipline applied to media bytes). Candidates dedup and
-    * verify with one bit_count; the hashes are map-side, the join is
-    * bucketed by (band, band-bits).
+    * 60 bits, found by exact pigeonhole banding ([[hammingPairs]] — the
+    * d03 SimHash discipline applied to media bytes). The 60-bit hash
+    * bands by ceil-division, so every radius below 60 is supported.
     *
     * `words = 0` (the default) DERIVES the signature width from the
     * corpus count ([[deriveHammingWords]] — one count job, the
@@ -5568,25 +5562,9 @@ object Graft {
     val w =
       if (words > 0) words
       else deriveHammingWords(df.count(), radius)
-    if (w > 1)
-      return ahashWideNearDupPairs(df, idCol, payloadCol, radius, w)
-    val bands = radius + 1
-    val width = (graft.functions.AHash60.Bits + bands - 1) / bands
-    val mask = (1L << width) - 1
-    val sig = mediaAHash(df, idCol, payloadCol)
-    val bandCols = (0 until bands).map(j =>
-      shiftright(col("ahash"), width * j).bitwiseAND(lit(mask)))
-    val banded = sig.select(col(idCol), col("ahash"),
-      posexplode(array(bandCols: _*)).as(Seq("band", "bits")))
-    banded.as("a")
-      .join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.bits") === col("b.bits") &&
-          col(s"a.$idCol") < col(s"b.$idCol"))
-      .select(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"),
-        bit_count(col("a.ahash").bitwiseXOR(col("b.ahash")))
-          .cast("bigint").as("dist"))
-      .distinct()
-      .filter(col("dist") <= radius)
+    if (w > 1) ahashWideNearDupPairs(df, idCol, payloadCol, radius, w)
+    else hammingPairs(mediaAHash(df, idCol, payloadCol), idCol,
+      Seq("ahash"), radius, "ahashNearDupPairs")
   }
 
   /** 60-bit term-frequency SimHash signature per row (id, sim): every
@@ -5597,27 +5575,13 @@ object Graft {
     * the d03 construction, promoted from the gate binding to the
     * public API so [[simhashNearDupPairs]] can route between widths. */
   def simhashSignatures(df: DataFrame, idCol: String,
-      textCol: String): DataFrame = {
-    val words = df
-      .select(col(idCol), explode(split(col(textCol), " ")).as("word"))
-      .select(col(idCol),
-        graft.functions.TextExpressions
-          .hexSliceLong(md5(col("word")), 1, 15).as("h"))
-    val bitSums = (0 until 60).map(i =>
-      sum(when(shiftright(col("h"), i).bitwiseAND(lit(1L)) === 1L, 1)
-        .otherwise(-1)).as(s"b$i"))
-    val packed = (0 until 60).map(i =>
-      when(col(s"b$i") > 0, lit(1L << i)).otherwise(lit(0L)))
-      .reduce(_ + _)
-    words.groupBy(idCol)
-      .agg(bitSums.head, bitSums.tail: _*)
-      .select(col(idCol), packed.as("sim"))
-  }
+      textCol: String): DataFrame =
+    simhashWords(df, idCol, textCol, Seq("sim"))
 
   /** Near-duplicate text pairs by SimHash hamming distance — the
     * width-derived front door over the 60-bit ([[simhashSignatures]])
     * and 120-bit ([[simhashWideNearDupPairs]]) constructions: exact
-    * pigeonhole banding at radius+1 bands either way, (id_a, id_b,
+    * pigeonhole banding ([[hammingPairs]]) either way, (id_a, id_b,
     * dist) out.
     *
     * `words = 0` (the default) DERIVES the signature width from the
@@ -5641,33 +5605,9 @@ object Graft {
       if (words > 0) words
       else deriveHammingWords(df.count(), radius,
         collisionsPerItem = 8.0, maxWords = 2)
-    if (w > 1)
-      return simhashWideNearDupPairs(df, idCol, textCol, radius)
-    val sig = simhashSignatures(df, idCol, textCol)
-    if (radius == 0)
-      return sig.as("a")
-        .join(sig.as("b"),
-          col("a.sim") === col("b.sim") &&
-            col(s"a.$idCol") < col(s"b.$idCol"))
-        .select(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"),
-          lit(0L).as("dist"))
-    val bands = radius + 1
-    val width = (60 + bands - 1) / bands
-    val mask = (1L << width) - 1
-    val chunkCols = (0 until bands).map(j =>
-      shiftright(col("sim"), width * j).bitwiseAND(lit(mask)))
-    val chunks = sig
-      .select(col(idCol), col("sim"),
-        posexplode(array(chunkCols: _*)).as(Seq("pos", "chunk")))
-    chunks.as("a")
-      .join(chunks.as("b"),
-        col("a.pos") === col("b.pos") && col("a.chunk") === col("b.chunk") &&
-          col(s"a.$idCol") < col(s"b.$idCol"))
-      .select(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"),
-        bit_count(col("a.sim").bitwiseXOR(col("b.sim"))).cast("bigint")
-          .as("dist"))
-      .distinct()
-      .filter(col("dist") <= radius)
+    if (w > 1) simhashWideNearDupPairs(df, idCol, textCol, radius)
+    else hammingPairs(simhashSignatures(df, idCol, textCol), idCol,
+      Seq("sim"), radius, "simhashNearDupPairs")
   }
 
   /** 120-bit term-frequency SimHash signature per row, as two 60-bit
@@ -5679,25 +5619,29 @@ object Graft {
     * pass; the md5 slices keep the whole construction bit-exact
     * cross-engine. */
   def simhashWideSignatures(df: DataFrame, idCol: String,
-      textCol: String): DataFrame = {
+      textCol: String): DataFrame =
+    simhashWords(df, idCol, textCol, Seq("sim0", "sim1"))
+
+  /** The one SimHash builder: signature word k (named `names(k)`) takes
+    * its 60 votes from md5 chars 15k+1 .. 15k+15 of each word's hash,
+    * so one name is d03's signature and two are d19's. */
+  private def simhashWords(df: DataFrame, idCol: String, textCol: String,
+      names: Seq[String]): DataFrame = {
+    val hashes = names.indices.map(k =>
+      graft.functions.TextExpressions
+        .hexSliceLong(md5(col("word")), 1 + 15 * k, 15).as(s"h$k"))
     val words = df
       .select(col(idCol), explode(split(col(textCol), " ")).as("word"))
-      .select(col(idCol),
-        graft.functions.TextExpressions
-          .hexSliceLong(md5(col("word")), 1, 15).as("h0"),
-        graft.functions.TextExpressions
-          .hexSliceLong(md5(col("word")), 16, 15).as("h1"))
-    val bitSums = (0 until 120).map { i =>
-      val src = if (i < 60) col("h0") else col("h1")
-      sum(when(shiftright(src, i % 60).bitwiseAND(lit(1L)) === 1L, 1)
-        .otherwise(-1)).as(s"b$i")
-    }
-    def packed(lo: Int): Column = (lo until lo + 60).map(i =>
-      when(col(s"b$i") > 0, lit(1L << (i - lo))).otherwise(lit(0L)))
-      .reduce(_ + _)
+      .select(col(idCol) +: hashes: _*)
+    val bitSums = for (k <- names.indices; i <- 0 until 60) yield
+      sum(when(shiftright(col(s"h$k"), i).bitwiseAND(lit(1L)) === 1L, 1)
+        .otherwise(-1)).as(s"b${60 * k + i}")
+    val packed = names.indices.map(k => (0 until 60).map(i =>
+      when(col(s"b${60 * k + i}") > 0, lit(1L << i)).otherwise(lit(0L)))
+      .reduce(_ + _).as(names(k)))
     words.groupBy(idCol)
       .agg(bitSums.head, bitSums.tail: _*)
-      .select(col(idCol), packed(0).as("sim0"), packed(60).as("sim1"))
+      .select(col(idCol) +: packed: _*)
   }
 
   /** Near-duplicate text pairs by hamming distance over the 120-bit
@@ -5707,51 +5651,17 @@ object Graft {
     * vs 60 bits' 2^15), so random band agreement vanishes and the
     * candidate class bends from occupancy-quadratic to ~linear while
     * the banding stays EXACT — any pair within the radius must agree
-    * on >= 1 band. Bands are word-aligned (each lives in one 60-bit
-    * word), so the supported radii are those where radius+1 bands of
-    * width 120/(radius+1) fit whole inside a word: radius ∈ {1, 3, 5,
-    * 7, 9, 11, 19, 23, 29, 39, 59, 119} — plus radius = 0, which
-    * needs no banding at all and runs as a full-signature equality
-    * join on (sim0, sim1) (exact-duplicate search; r9 advice: the
-    * banding path's alignment check rejected it). */
+    * on >= 1 band. Bands are word-aligned ([[hammingBandLayout]]), so
+    * the supported radii are 0 (a full-signature equality join) and
+    * those where radius+1 bands of width 120/(radius+1) fit whole
+    * inside a word: radius ∈ {1, 3, 5, 7, 9, 11, 19, 23, 29, 39, 59,
+    * 119}. */
   def simhashWideNearDupPairs(df: DataFrame, idCol: String,
       textCol: String, radius: Int = 3): DataFrame = {
-    val bits = 120
-    require(radius >= 0 && radius < bits,
+    require(radius >= 0 && radius < 120,
       s"simhashWideNearDupPairs($radius)")
-    val sig = simhashWideSignatures(df, idCol, textCol)
-    if (radius == 0)
-      return sig.as("a")
-        .join(sig.as("b"),
-          col("a.sim0") === col("b.sim0") &&
-            col("a.sim1") === col("b.sim1") &&
-            col(s"a.$idCol") < col(s"b.$idCol"))
-        .select(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"),
-          lit(0L).as("dist"))
-    val bands = radius + 1
-    require(bits % bands == 0 && 60 % (bits / bands) == 0,
-      s"simhashWideNearDupPairs: $bits bits do not split into $bands " +
-        "word-aligned bands (supported radii: 0, 1, 3, 5, 7, 9, 11, " +
-        "19, 23, 29, 39, 59, 119)")
-    val width = bits / bands
-    val mask = (1L << width) - 1
-    val bandCols = (0 until bands).map { j =>
-      val src = if (j * width < 60) col("sim0") else col("sim1")
-      shiftright(src, j * width % 60).bitwiseAND(lit(mask))
-    }
-    val chunks = sig
-      .select(col(idCol), col("sim0"), col("sim1"),
-        posexplode(array(bandCols: _*)).as(Seq("pos", "chunk")))
-    val dist = bit_count(col("a.sim0").bitwiseXOR(col("b.sim0"))) +
-      bit_count(col("a.sim1").bitwiseXOR(col("b.sim1")))
-    chunks.as("a")
-      .join(chunks.as("b"),
-        col("a.pos") === col("b.pos") && col("a.chunk") === col("b.chunk") &&
-          col(s"a.$idCol") < col(s"b.$idCol"))
-      .select(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"),
-        dist.cast("bigint").as("dist"))
-      .distinct()
-      .filter(col("dist") <= radius)
+    hammingPairs(simhashWideSignatures(df, idCol, textCol), idCol,
+      Seq("sim0", "sim1"), radius, "simhashWideNearDupPairs")
   }
 
   /** `words` x 60-bit wide average-hash per row (see
@@ -5766,8 +5676,7 @@ object Graft {
 
   /** [[ahashNearDupPairs]] over the WIDE hash: near-duplicate pairs by
     * hamming distance over `words` x 60 bits, same exact pigeonhole
-    * banding (radius+1 disjoint bands; a pair within the radius must
-    * agree exactly on >= 1 band). The wider hash exists for the band
+    * banding ([[hammingPairs]]). The wider hash exists for the band
     * WIDTH: at radius 3, 60 bits give 15-bit bands (2^15 buckets — the
     * n^2/2^15 random-collision candidate class SCALE.md documents for
     * m11), while 120 bits give 30-bit bands (2^30 buckets), pushing
@@ -5775,48 +5684,86 @@ object Graft {
     * list is ~only the true near-pairs. That buys the same exact join
     * shape a growth class that bends from occupancy-quadratic to
     * ~linear — the version of this op a 100 TB media pipeline runs.
-    * Bands are kept word-aligned (each band's bits live in one 60-bit
-    * word), so `60*words` must split into radius+1 bands of a width
-    * dividing 60. */
+    * The radii follow [[hammingBandLayout]]: any radius below 60 at
+    * `words = 1` (the [[ahashNearDupPairs]] hash), otherwise 0 or a
+    * radius whose radius+1 bands have a width dividing 60. */
   def ahashWideNearDupPairs(df: DataFrame, idCol: String,
       payloadCol: String, radius: Int = 3, words: Int = 2): DataFrame = {
-    val wordBits = graft.functions.AHashWide.WordBits
-    val bits = wordBits * words
-    require(radius >= 0 && radius < bits,
+    require(radius >= 0 && radius < 60 * words,
       s"ahashWideNearDupPairs($radius, $words)")
-    val sig = mediaAHashWide(df, idCol, payloadCol, words)
-    // radius = 0 is exact-duplicate search: no banding needed (and the
-    // word-alignment check below would reject its single full-width
-    // band — r9 advice), so join on full-signature equality directly.
-    if (radius == 0)
-      return sig.as("a")
-        .join(sig.as("b"),
-          col("a.ahash") === col("b.ahash") &&
-            col(s"a.$idCol") < col(s"b.$idCol"))
-        .select(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"),
-          lit(0L).as("dist"))
+    hammingPairs(mediaAHashWide(df, idCol, payloadCol, words), idCol,
+      (0 until words).map(w => s"ahash[$w]"), radius,
+      "ahashWideNearDupPairs")
+  }
+
+  /** The one band-layout rule of the hamming near-dup join, and the only
+    * place that decides which radii a signature of `words` 60-bit words
+    * can band: band j of the radius+1 disjoint bands is (word, shift,
+    * mask). One word bands by ceil-division (width ⌈60/(radius+1)⌉ at
+    * shift j·width), so every radius below 60 is supported; wider
+    * signatures band at width 60·words/(radius+1), which must divide 60
+    * so every band lies inside one word. radius 0 needs no bands (an
+    * equality join on every word) and is supported at every width.
+    * None = the radius is not supported. */
+  private[api] def hammingBandLayout(words: Int,
+      radius: Int): Option[Seq[(Int, Int, Long)]] = {
+    val bits = 60 * words
     val bands = radius + 1
-    require(bits % bands == 0 && wordBits % (bits / bands) == 0,
-      s"ahashWideNearDupPairs: $bits bits do not split into $bands " +
-        s"word-aligned bands (band width must divide $wordBits)")
-    val width = bits / bands
-    val mask = (1L << width) - 1
-    val bandCols = (0 until bands).map { j =>
-      val word = j * width / wordBits
-      val off = j * width % wordBits
-      shiftright(col("ahash")(word), off).bitwiseAND(lit(mask))
+    if (radius == 0) return Some(Nil)
+    if (radius < 0 || radius >= bits) return None
+    val width = (bits + bands - 1) / bands
+    if (words > 1 && (bits % bands != 0 || 60 % width != 0)) None
+    else Some((0 until bands).map { j =>
+      val at = j * width
+      val mask = (1L << width) - 1
+      if (words == 1) (0, at, mask) else (at / 60, at % 60, mask)
+    })
+  }
+
+  /** The one exact hamming near-dup join behind all four near-dup ops —
+    * the pigeonhole construction of Manku, Jain and Das Sarma
+    * ("Detecting near-duplicates for web crawling", WWW 2007). `sig`
+    * holds `idCol` and 1, 2 or 4 signature words of 60 bits, each named
+    * by a SQL expression over a `sig` row in `wordCols` (a column, or
+    * an element such as `ahash[1]`, so an array signature is read in
+    * place); out come the pairs (id_a < id_b, dist) within
+    * `radius`, dist the summed per-word popcount of the xor. radius 0
+    * is one equality join on every word. Otherwise each row explodes
+    * into its radius+1 disjoint bands ([[hammingBandLayout]]): a pair
+    * within the radius must agree exactly on at least one band, so the
+    * self EQUI-join on (band, bits) finds every qualifying pair without
+    * an all-pairs compare; `distinct` folds pairs that share several
+    * bands and the popcount filter drops the random band collisions. An
+    * unsupported radius fails as an IllegalArgumentException naming
+    * `op` and listing the supported radii. */
+  private[api] def hammingPairs(sig: DataFrame, idCol: String,
+      wordCols: Seq[String], radius: Int, op: String): DataFrame = {
+    val words = wordCols.size
+    val layout = hammingBandLayout(words, radius).getOrElse(
+      throw new IllegalArgumentException(s"$op: radius $radius does not " +
+        s"split ${60 * words} bits into ${radius + 1} word-aligned bands " +
+        "(supported radii: " + (0 until 60 * words)
+          .filter(hammingBandLayout(words, _).isDefined).mkString(", ") +
+        ")"))
+    def word(side: String) = wordCols.map(w => expr(side + w))
+    val wordPairs = word("a.").zip(word("b."))
+    val ids = col(s"a.$idCol") < col(s"b.$idCol")
+    def pairs(joined: DataFrame, dist: Column): DataFrame =
+      joined.select(col(s"a.$idCol").as("id_a"),
+        col(s"b.$idCol").as("id_b"), dist.as("dist"))
+    if (radius == 0)
+      return pairs(sig.as("a").join(sig.as("b"), wordPairs.map {
+        case (a, b) => a === b }.reduce(_ && _) && ids), lit(0L))
+    val bandCols = layout.map { case (w, shift, mask) =>
+      shiftright(word("")(w), shift).bitwiseAND(lit(mask))
     }
-    val banded = sig.select(col(idCol), col("ahash"),
+    val banded = sig.select(col("*"),
       posexplode(array(bandCols: _*)).as(Seq("band", "bits")))
-    val dist = (0 until words).map(w =>
-      bit_count(col("a.ahash")(w).bitwiseXOR(col("b.ahash")(w))))
-      .reduce(_ + _)
-    banded.as("a")
-      .join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.bits") === col("b.bits") &&
-          col(s"a.$idCol") < col(s"b.$idCol"))
-      .select(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"),
-        dist.cast("bigint").as("dist"))
+    val dist = wordPairs.map { case (a, b) =>
+      bit_count(a.bitwiseXOR(b)) }.reduce(_ + _)
+    pairs(banded.as("a").join(banded.as("b"),
+      col("a.band") === col("b.band") && col("a.bits") === col("b.bits") &&
+        ids), dist.cast("bigint"))
       .distinct()
       .filter(col("dist") <= radius)
   }

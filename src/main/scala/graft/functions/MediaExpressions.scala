@@ -119,8 +119,8 @@ object Pcm16WindowEnergy {
   * Mean comparisons run as exact integer cross-products
   * (chunkSum * nb > totalSum * chunkLen) — no float rounding to
   * diverge between engines; exact while chunkSum * nb fits a long,
-  * i.e. payloads up to ~1 GB. One pass, zero allocation beyond two
-  * 60-slot arrays, codegen'd.
+  * i.e. payloads up to ~1 GB. One pass over [[AHashWide.hash]]'s
+  * loop at one word, codegen'd.
   */
 case class AHash60(child: Expression) extends UnaryExpression {
 
@@ -147,31 +147,7 @@ case class AHash60(child: Expression) extends UnaryExpression {
 object AHash60 {
   val Bits = 60
 
-  def compute(bytes: Array[Byte]): Long = {
-    val n = bytes.length
-    if (n == 0) return 0L
-    val chunkSum = new Array[Long](Bits)
-    val chunkLen = new Array[Int](Bits)
-    var g = 0
-    var total = 0L
-    while (g < n) {
-      val v = (bytes(g) & 0xff).toLong
-      val c = (g.toLong * Bits / n).toInt
-      chunkSum(c) += v
-      chunkLen(c) += 1
-      total += v
-      g += 1
-    }
-    var hash = 0L
-    var i = 0
-    while (i < Bits) {
-      if (chunkLen(i) > 0 && chunkSum(i) * n > total * chunkLen(i)) {
-        hash |= 1L << i
-      }
-      i += 1
-    }
-    hash
-  }
+  def compute(bytes: Array[Byte]): Long = AHashWide.hash(bytes, 1)(0)
 }
 
 /** Wide average-hash: [[AHash60]] generalized to `words` x 60 bits
@@ -217,14 +193,17 @@ case class AHashWide(child: Expression, words: Int)
 object AHashWide {
   val WordBits = 60
 
-  def compute(bytes: Array[Byte], words: Int): ArrayData = {
+  def compute(bytes: Array[Byte], words: Int): ArrayData =
+    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+      .fromPrimitiveArray(hash(bytes, words))
+
+  /** The one chunk-mean loop behind both aHash expressions: `words`
+    * 60-bit words, bit c of the whole signature in word c / 60. */
+  def hash(bytes: Array[Byte], words: Int): Array[Long] = {
     val bits = WordBits * words
     val n = bytes.length
     val out = new Array[Long](words)
-    if (n == 0) {
-      return org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-        .fromPrimitiveArray(out)
-    }
+    if (n == 0) return out
     val chunkSum = new Array[Long](bits)
     val chunkLen = new Array[Int](bits)
     var g = 0
@@ -244,8 +223,7 @@ object AHashWide {
       }
       i += 1
     }
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-      .fromPrimitiveArray(out)
+    out
   }
 }
 

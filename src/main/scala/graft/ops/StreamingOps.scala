@@ -411,7 +411,8 @@ object StreamingOps {
       // Source AND sink in one gate query: stream from the subscription,
       // relay through the DSv2 pubsub sink to a second topic, then stream
       // the relayed copy back and aggregate. The sink's executor-side
-      // publish, idempotent chunking and schema validation are all on the
+      // publish, the broker's per-ordinal dedup of ordered publishes
+      // (`publishOrdered`) and schema validation are all on the
       // hash-checked path.
       (s, d) => {
         val (ep, sub) = publishEvents(s, d)

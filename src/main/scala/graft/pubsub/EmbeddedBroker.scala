@@ -17,8 +17,9 @@ import scala.collection.mutable
   *    earlier one is outstanding (leased but unacked)
   *  - backlog metrics (total and per-"region") feeding dynamic
   *    partitioning, replacing the cloud monitoring API
-  *  - idempotent chunked publish: a (dedupKey) chunk observed twice is
-  *    dropped, giving effectively-once sink publishes under task retry
+  *  - idempotent ordered publish (`publishOrdered`): each sink stream's
+  *    rows carry deterministic ordinals and each ordinal is accepted
+  *    once, giving effectively-once sink publishes under task retry
   *
   * Brokers are keyed by `endpoint` string, mirroring the reference's
   * emulator endpoint override. Thread-safe; everything synchronizes on the
@@ -118,12 +119,6 @@ object EmbeddedBroker {
       retained.getOrElseUpdate(topic, mutable.ArrayBuffer())
     }
 
-    def deleteTopic(topic: String): Unit = synchronized {
-      topics -= topic
-      subsByTopic.remove(topic)
-      retained.remove(topic)
-    }
-
     /** With `backfill = true` the new subscription is seeded with every
       * message the topic retains — the cloud service's topic-retention +
       * seek-to-start semantics, so late-created subscriptions can replay
@@ -145,9 +140,6 @@ object EmbeddedBroker {
       subs.remove(name).foreach(s =>
         subsByTopic.get(s.topic).foreach(_ -= name))
     }
-
-    def hasSubscription(name: String): Boolean =
-      synchronized(subs.contains(name))
 
     def publish(topic: String, data: Array[Byte],
         attributes: Map[String, String] = Map.empty,

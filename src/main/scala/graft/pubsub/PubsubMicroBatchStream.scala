@@ -189,7 +189,6 @@ class PubsubMicroBatchStream(
           subscriptionPath = opts.subscriptionPath,
           endpoint = regionEp,
           batchId = endBatch,
-          partitionIdx = idx,
           maxMessages = partitionBudget(idx),
           cachePath = new Path(cacheRoot,
             s"batch=$endBatch/part=$idx").toString,

@@ -18,7 +18,6 @@ final case class PubsubInputPartition(
     subscriptionPath: String,
     endpoint: String,
     batchId: Long,
-    partitionIdx: Int,
     maxMessages: Int,
     cachePath: String,
     region: String,

@@ -180,6 +180,29 @@ class RetrainIndexSpec extends AnyFunSuite with Matchers {
       cents.collect().map(r => r.getInt(0)).sorted
   }
 
+  test("indexGeneration: an append keeps the token, compaction and " +
+      "retrain each move it, and a quantizer read under an unmoved " +
+      "token is that generation's") {
+    val tbl = s"rt_gen_${System.nanoTime()}"
+    mkDriftedTable(tbl)
+    val g0 = Graft.indexGeneration(spark, tbl)
+    // an append adds files to the live generation and publishes none
+    Graft.bucketedIndexAppender(tbl, Buckets, Some(oldQuantizer()),
+      "vec_id", "embedding")(rows(Seq(80L, 81L)), 1L)
+    Graft.indexGeneration(spark, tbl) shouldBe g0
+    Graft.compactBucketedIndex(spark, tbl)
+    val g1 = Graft.indexGeneration(spark, tbl)
+    g1 should not be g0
+    Graft.retrainIndex(spark, tbl, "vec_id", "embedding", nlist = 4)
+    val g2 = Graft.indexGeneration(spark, tbl)
+    Set(g0, g1) should not contain g2
+    // the serving recipe: token, quantizer, token again; an unmoved
+    // token proves the quantizer is the retrained generation's
+    val cents = Graft.loadQuantizer(spark, tbl).get
+    Graft.indexGeneration(spark, tbl) shouldBe g2
+    cents.count() shouldBe 4L
+  }
+
   test("indexStats reads the numbers maintenance decides on; " +
       "tombstones and maintenance round-trip through the advice") {
     val tbl = s"rt_stats_${System.nanoTime()}"

@@ -374,7 +374,7 @@ class PubsubConnectorSpec extends AnyFunSuite with Matchers
     publish100()
     val cacheDir = Files.createTempDirectory("graft-loss").toString
     val part = PubsubInputPartition(FastSub, ep, batchId = 0,
-      partitionIdx = 0, maxMessages = 1000,
+      maxMessages = 1000,
       cachePath = s"$cacheDir/batch=0/part=0", region = "global")
     def evaluate(): Seq[(String, String)] = {
       // fresh reader object = the task re-run on another executor
@@ -431,7 +431,7 @@ class PubsubConnectorSpec extends AnyFunSuite with Matchers
     val cacheDir = Files.createTempDirectory("graft-expiry").toString
     def readBatch(batchId: Int, max: Int): Seq[(String, String)] = {
       val part = PubsubInputPartition(LossSub, ep, batchId = batchId,
-        partitionIdx = 0, maxMessages = max,
+        maxMessages = max,
         cachePath = s"$cacheDir/batch=$batchId/part=0", region = "global")
       val r = new PubsubPartitionReaderFactory().createReader(part)
       val out = collection.mutable.ArrayBuffer[(String, String)]()
@@ -631,7 +631,7 @@ class PubsubConnectorSpec extends AnyFunSuite with Matchers
     publish100()
     val cacheDir = Files.createTempDirectory("graft-race").toString
     val part = PubsubInputPartition(Sub, ep, batchId = 0,
-      partitionIdx = 0, maxMessages = 50,
+      maxMessages = 50,
       cachePath = s"$cacheDir/batch=0/part=0", region = "global")
     def evaluate(): Seq[String] = {
       val r = new PubsubPartitionReaderFactory().createReader(part)
