@@ -505,27 +505,6 @@ object Graft {
             "x -> x.unit)"), " ").as("scrubbed_text"))
   }
 
-  /** SLIDING-window repeated-span detection — the exact-substring dedup
-    * signal of Lee et al., "Deduplicating Training Data Makes Language
-    * Models Better": every `windowWords`-word window at every word
-    * offset (stride 1, where [[duplicatePassageStats]]' tumbling
-    * windows only see aligned repeats) is keyed by md5, windows whose
-    * exact content occurs more than `maxOcc` times corpus-wide are
-    * flagged, and a document's flagged windows merge into covered
-    * spans. Returns per doc: total windows, flagged windows, and the
-    * number of distinct word positions covered by any flagged window —
-    * the mass an exact-substring scrubber would cut. Documents shorter
-    * than `windowWords` words report zeros.
-    *
-    * Scale shape: window construction is a per-row HOF (a stride-1 doc
-    * contributes len−w+1 digest rows — w× the tumbling variant's, the
-    * price of offset-invariance); the occurrence count shuffles
-    * fixed-width digests map-side combined; the flag-back is an
-    * equi-join on the digest against only the BREACHING digests; and
-    * covered positions expand w rows per flagged window (bounded by
-    * the flagged mass, not the corpus) before one per-doc distinct
-    * count. Full md5 keys for the same birthday-bound reason as
-    * [[duplicatePassageStats]]. */
   /** The keep decision that closes the dedup loop: cluster near-dup
     * pairs ([[dupClusters]]' min-id components) and keep exactly one
     * document per cluster — the highest-`scoreCol` member, ties to the
@@ -562,6 +541,27 @@ object Graft {
       .select(col(idCol), col("cluster_id"), col(scoreCol), col("kept"))
   }
 
+  /** SLIDING-window repeated-span detection — the exact-substring dedup
+    * signal of Lee et al., "Deduplicating Training Data Makes Language
+    * Models Better": every `windowWords`-word window at every word
+    * offset (stride 1, where [[duplicatePassageStats]]' tumbling
+    * windows only see aligned repeats) is keyed by md5, windows whose
+    * exact content occurs more than `maxOcc` times corpus-wide are
+    * flagged, and a document's flagged windows merge into covered
+    * spans. Returns per doc: total windows, flagged windows, and the
+    * number of distinct word positions covered by any flagged window —
+    * the mass an exact-substring scrubber would cut. Documents shorter
+    * than `windowWords` words report zeros.
+    *
+    * Scale shape: window construction is a per-row HOF (a stride-1 doc
+    * contributes len−w+1 digest rows — w× the tumbling variant's, the
+    * price of offset-invariance); the occurrence count shuffles
+    * fixed-width digests map-side combined; the flag-back is an
+    * equi-join on the digest against only the BREACHING digests; and
+    * covered positions expand w rows per flagged window (bounded by
+    * the flagged mass, not the corpus) before one per-doc distinct
+    * count. Full md5 keys for the same birthday-bound reason as
+    * [[duplicatePassageStats]]. */
   def repeatedSpanStats(df: DataFrame, idCol: String, textCol: String,
       windowWords: Int = 10, maxOcc: Int = 1): DataFrame = {
     require(windowWords > 0 && maxOcc >= 1,
@@ -637,56 +637,6 @@ object Graft {
       .limit(topK)
   }
 
-  /** Multi-iteration BPE TRAINER — [[bpePairCounts]] run to a
-    * vocabulary: `merges` rounds of (count adjacent token pairs over
-    * the weighted word vocabulary → merge the winner everywhere),
-    * the loop every byte-pair tokenizer training runs (r14 verdict
-    * item 5). Returns the merge TABLE (step, pair, merged, cnt) —
-    * the artifact a tokenizer ships. Deterministic: the winner is
-    * (count desc, pair asc), so both engines replay the identical
-    * sequence.
-    *
-    * Scale shape: the corpus is touched ONCE (the word-count shuffle,
-    * carrying (word, count) rows, materialized); the merge loop then
-    * runs over the DISTINCT vocabulary only — millions of rows at web
-    * scale where the corpus is trillions — in one of two regimes
-    * picked by vocabulary size:
-    *
-    *  - `nVocab <= localVocabMax` (the common case — even
-    *    trillion-token web corpora have ~10⁸ distinct words, and BPE
-    *    trainers conventionally run on a word-count table): the
-    *    weighted vocabulary collects ONCE and the merge loop runs on
-    *    the driver with incremental pair-count maintenance
-    *    ([[bpeMergeLoopLocal]]) — the only loop shape that reaches a
-    *    production tokenizer's ~30k merges, since per-merge work is
-    *    proportional to the words containing the merged pair, not the
-    *    vocabulary.
-    *  - above it: the distributed loop — one vocabulary-sized
-    *    aggregation per round (pair counts, map-side combined, keyed
-    *    by the bounded pair alphabet) and one map-only rewrite; the
-    *    per-round winner is a LIMIT-1 collect (one row; the
-    *    kmeans-loop discipline), and the rewritten vocabulary
-    *    checkpoints so round k+1's plan does not recompute rounds
-    *    1..k. One driver round-trip per merge caps this regime at 64
-    *    merges.
-    *
-    * The two regimes emit the IDENTICAL merge table (spec-pinned at
-    * K=64): same all-adjacent-positions pair counting, same leftmost-
-    * first non-overlapping rewrite, same (count desc, pair asc)
-    * winner with the tie compared in UTF-8 BYTE order — Spark's
-    * binary string ordering — not Java's UTF-16 order, and the same
-    * code-point (not UTF-16 code unit) initial tokenization.
-    *
-    * Words are token SEQUENCES encoded as a sentinel-spaced string —
-    * every token wrapped in its own leading/trailing space
-    * (`" t1  t2  t3 "`): a merge of (t1, t2) is then the plain
-    * left-to-right non-overlapping `replace(" t1  t2 ", " t1t2 ")`,
-    * with each token's own wrapping intact on both sides of any
-    * match, so consecutive same-pair runs merge exactly like BPE's
-    * leftmost-first scan ("a a a a" → "aa aa", never "aa a a") and a
-    * token SUFFIX can never false-match a pair boundary ("xa b" does
-    * not contain pair (a, b)). Tokens themselves contain no spaces —
-    * they come from whitespace-split words. */
   /** Vocabulary ceiling for [[bpeTrain]]'s local merge loop: up to
     * this many distinct words collect to the driver (~a few hundred
     * MB of heap at 4M typical words — weigh against a driver that
@@ -807,6 +757,56 @@ object Graft {
     * any collect). */
   val BpeLocalSmallVocab: Long = 256L * 1024
 
+  /** Multi-iteration BPE TRAINER — [[bpePairCounts]] run to a
+    * vocabulary: `merges` rounds of (count adjacent token pairs over
+    * the weighted word vocabulary → merge the winner everywhere),
+    * the loop every byte-pair tokenizer training runs (r14 verdict
+    * item 5). Returns the merge TABLE (step, pair, merged, cnt) —
+    * the artifact a tokenizer ships. Deterministic: the winner is
+    * (count desc, pair asc), so both engines replay the identical
+    * sequence.
+    *
+    * Scale shape: the corpus is touched ONCE (the word-count shuffle,
+    * carrying (word, count) rows, materialized); the merge loop then
+    * runs over the DISTINCT vocabulary only — millions of rows at web
+    * scale where the corpus is trillions — in one of two regimes
+    * picked by vocabulary size:
+    *
+    *  - `nVocab <= localVocabMax` (the common case — even
+    *    trillion-token web corpora have ~10⁸ distinct words, and BPE
+    *    trainers conventionally run on a word-count table): the
+    *    weighted vocabulary collects ONCE and the merge loop runs on
+    *    the driver with incremental pair-count maintenance
+    *    ([[bpeMergeLoopLocal]]) — the only loop shape that reaches a
+    *    production tokenizer's ~30k merges, since per-merge work is
+    *    proportional to the words containing the merged pair, not the
+    *    vocabulary.
+    *  - above it: the distributed loop — one vocabulary-sized
+    *    aggregation per round (pair counts, map-side combined, keyed
+    *    by the bounded pair alphabet) and one map-only rewrite; the
+    *    per-round winner is a LIMIT-1 collect (one row; the
+    *    kmeans-loop discipline), and the rewritten vocabulary
+    *    checkpoints so round k+1's plan does not recompute rounds
+    *    1..k. One driver round-trip per merge caps this regime at 64
+    *    merges.
+    *
+    * The two regimes emit the IDENTICAL merge table (spec-pinned at
+    * K=64): same all-adjacent-positions pair counting, same leftmost-
+    * first non-overlapping rewrite, same (count desc, pair asc)
+    * winner with the tie compared in UTF-8 BYTE order — Spark's
+    * binary string ordering — not Java's UTF-16 order, and the same
+    * code-point (not UTF-16 code unit) initial tokenization.
+    *
+    * Words are token SEQUENCES encoded as a sentinel-spaced string —
+    * every token wrapped in its own leading/trailing space
+    * (`" t1  t2  t3 "`): a merge of (t1, t2) is then the plain
+    * left-to-right non-overlapping `replace(" t1  t2 ", " t1t2 ")`,
+    * with each token's own wrapping intact on both sides of any
+    * match, so consecutive same-pair runs merge exactly like BPE's
+    * leftmost-first scan ("a a a a" → "aa aa", never "aa a a") and a
+    * token SUFFIX can never false-match a pair boundary ("xa b" does
+    * not contain pair (a, b)). Tokens themselves contain no spaces —
+    * they come from whitespace-split words. */
   def bpeTrain(df: DataFrame, textCol: String, merges: Int = 8,
       localVocabMax: Long = BpeLocalVocabMax): DataFrame = {
     require(merges > 0, s"bpeTrain(merges=$merges)")
@@ -2409,21 +2409,20 @@ object Graft {
         old.ksub, iters, trainPerList, payload)
   }
 
-  /** The one save of a saved index dir, for either codec:
-    * write-into-a-fresh-generation, then swap the pointer. The
+  /** The one save of a saved index dir, for either codec: write a fresh
+    * generation, then swap the pointer ([[publishGeneration]]). The
     * sub-frames write independently, so writing in place would let a
     * mid-save failure leave NEW codes under OLD meta (or vice versa) —
     * a later load + pruneLists would then filter on bucket = id % the
-    * WRONG modulus and silently drop whole probed lists (r12 advice).
-    * With the swap, the failure window leaves the intact old index — a
-    * load can never read a torn one. Codes sort by (bucket, list_id):
-    * the partition column leads, so the write inserts no sort of its
-    * own and the intra-bucket list_id order the row-group-skip needs
-    * survives (r12 advice). Meta writes LAST — the commit marker within
-    * the generation. `vpl`/`sf`: the deriveNlist rule this deployment
-    * sizes with, persisted in the meta frame so stats' outgrown trigger
-    * and retrain's width re-derivation default to the SAME rule the
-    * index was built with. Returns the new generation's tree. */
+    * WRONG modulus and silently drop whole probed lists (r12 advice);
+    * with the swap a load can never read a torn index. Codes sort by
+    * (bucket, list_id): the partition column leads, so the write
+    * inserts no sort of its own and the intra-bucket list_id order the
+    * row-group-skip needs survives (r12 advice). `vpl`/`sf`: the
+    * deriveNlist rule this deployment sizes with, persisted in the meta
+    * frame so stats' outgrown trigger and retrain's width re-derivation
+    * default to the SAME rule the index was built with. Returns the new
+    * generation's tree. */
   private def saveIndexDir[I](c: DirCodec[I], index: I, dir: String,
       buckets: Int, vpl: Int, sf: Double): String = {
     val opName = s"${c.family}Save"
@@ -2441,8 +2440,8 @@ object Graft {
     // pointer swap crashed inside its delete→rename: readers loaded
     // before the crash still hold frames of the newest complete
     // generation, so THAT generation is the grace copy — treating it as
-    // None would let the cleanup below delete it out from under them
-    // (r14 advice).
+    // None would let the publish's cleanup delete it out from under
+    // them (r14 advice).
     val prevGen: Option[String] = readSmallFile(fs, curFile).orElse(
       if (!fs.exists(root)) None
       else fs.listStatus(root)
@@ -2455,54 +2454,93 @@ object Graft {
     val genName = "gen-" +
       java.util.UUID.randomUUID().toString.take(8)
     val gen = new org.apache.hadoop.fs.Path(root, genName)
-    try {
-      core.enc
-        .withColumn("bucket", pmod(col("list_id"), lit(buckets)))
-        .repartition(col("bucket"))
-        .sortWithinPartitions("bucket", "list_id")
-        .write.mode("overwrite").partitionBy("bucket")
-        .parquet(s"$gen/codes.parquet")
-      c.extras(index).foreach { case (name, df) =>
-        df.write.mode("overwrite").parquet(s"$gen/$name") }
-      // meta LAST — the commit marker within the generation: a gen
-      // tree missing meta is visibly incomplete
-      c.meta(index, buckets, vpl, sf)
-        .write.mode("overwrite").parquet(s"$gen/meta.parquet")
-    } catch { case e: Throwable =>
-      // a failed WRITE leaves known-incomplete data — clean it up; the
-      // cleanup itself may fail for the same reason the write did —
-      // never let it mask the root cause. The live generation was
-      // never touched.
-      try fs.delete(gen, true)
-      catch { case ce: Throwable => e.addSuppressed(ce) }
-      throw e
-    }
-    // publish: swap the POINTER, not the data, in one atomic rename —
-    // a reader sees the old generation or the new one, never a missing
-    // pointer or a torn tree (each generation is complete before the
-    // pointer moves), and a reader HOLDING frames of the previous
-    // generation keeps scanning files that stay on disk through this
-    // whole save.
-    writeAtomic(s, curFile, genName)
-    // grace cleanup: generations older than the PREVIOUS one are a
-    // full cycle stale — no reader can still hold them under the
-    // serialize-maintenance contract. Legacy top-level frames
-    // (pre-generational saves) are likewise a cycle stale once a
-    // previous generation existed; so are pointer temp files a crash
-    // left behind.
+    publishGeneration(fs, gen, prevGen,
+      generations = () => fs.listStatus(root).toSeq
+        .filter(st => st.isDirectory && st.getPath.getName.startsWith("gen-"))
+        .map(_.getPath),
+      write = () => {
+        core.enc
+          .withColumn("bucket", pmod(col("list_id"), lit(buckets)))
+          .repartition(col("bucket"))
+          .sortWithinPartitions("bucket", "list_id")
+          .write.mode("overwrite").partitionBy("bucket")
+          .parquet(s"$gen/codes.parquet")
+        c.extras(index).foreach { case (name, df) =>
+          df.write.mode("overwrite").parquet(s"$gen/$name") }
+        // meta LAST — the commit marker within the generation: a gen
+        // tree missing meta is visibly incomplete
+        c.meta(index, buckets, vpl, sf)
+          .write.mode("overwrite").parquet(s"$gen/meta.parquet")
+      },
+      // the POINTER swaps, not the data, in one atomic rename
+      swap = () => writeAtomic(s, curFile, genName))
+    // legacy top-level frames (pre-generational saves) are a cycle stale
+    // once a previous generation existed; so are pointer temp files a
+    // crash left behind
     val legacyFrames = Set("codes.parquet", "cents.parquet",
       "lookup.parquet", "meta.parquet", RowsRecord)
     fs.listStatus(root).foreach { st =>
       val n = st.getPath.getName
-      val staleGen = st.isDirectory && n.startsWith("gen-") &&
-        n != genName && !prevGen.contains(n)
-      val staleLegacy = prevGen.isDefined && legacyFrames(n)
-      val staleTmp =
-        n.stripPrefix(".").startsWith("CURRENT.") && n.contains("tmp")
-      if (staleGen || staleLegacy || staleTmp)
+      if (prevGen.isDefined && legacyFrames(n) ||
+          n.stripPrefix(".").startsWith("CURRENT.") && n.contains("tmp"))
         fs.delete(st.getPath, true)
     }
     gen.toString
+  }
+
+  /** Test hook inside [[publishGeneration]]: runs after the generation
+    * write and before the pointer swap, inside the write's failure
+    * scope. No-op in production; specs must reset it. */
+  private[graft] var publishTestHook: () => Unit = () => ()
+
+  /** The one generation publish of both index layouts — a saved dir
+    * (`gen-<id>` children named by its `CURRENT` pointer) and a bucketed
+    * table (`.compact-<id>` siblings named by its catalog LOCATION):
+    *  1. `write` fills the fresh generation `gen` and may verify it; on
+    *     a throw `gen` is deleted (a failed cleanup is suppressed, never
+    *     masking the cause) and the pointer is never touched;
+    *  2. `swap` moves the one pointer to `gen` atomically: a reader sees
+    *     the old generation or the new one, never a torn tree. A failed
+    *     swap leaves `gen` for the next publish to clean;
+    *  3. every generation `generations()` lists except `gen` and
+    *     `replaced` (the grace copy for readers that planned before the
+    *     swap) is deleted: a full cycle stale under the
+    *     serialize-maintenance contract. Siblings compare by name. */
+  private def publishGeneration(fs: org.apache.hadoop.fs.FileSystem,
+      gen: org.apache.hadoop.fs.Path, replaced: Option[String],
+      generations: () => Seq[org.apache.hadoop.fs.Path],
+      write: () => Unit, swap: () => Unit): Unit = {
+    try { write(); publishTestHook() }
+    catch { case e: Throwable =>
+      try fs.delete(gen, true)
+      catch { case ce: Throwable => e.addSuppressed(ce) }
+      throw e
+    }
+    swap()
+    generations().foreach { p =>
+      if (p.getName != gen.getName && !replaced.contains(p.getName))
+        fs.delete(p, true)
+    }
+  }
+
+  /** The one data-file count of both index layouts: `.parquet` leaves
+    * under `dir`, recursively, skipping every path segment below `dir`
+    * that starts with `_` or `.` — side state no scan reads (the
+    * `_quantizer` dir, `_SUCCESS` markers, checksum and temp files). */
+  private def dataFiles(spark: SparkSession, dir: String): Int = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) return 0
+    val root = fs.makeQualified(p).toUri.getPath
+    val it = fs.listFiles(p, true)
+    var n = 0
+    while (it.hasNext) {
+      val f = it.next().getPath
+      val hidden = f.toUri.getPath.stripPrefix(root).split("/")
+        .exists(s => s.startsWith("_") || s.startsWith("."))
+      if (!hidden && f.getName.endsWith(".parquet")) n += 1
+    }
+    n
   }
 
   /** One loaded generation of a saved dir: the index, its codec-free
@@ -2890,7 +2928,7 @@ object Graft {
           new org.apache.hadoop.fs.Path(tree, RowsRecord), rows.toString)
         rows
       }
-    PqAppendStats(n, rowsAfter, codeFiles(spark, tree))
+    PqAppendStats(n, rowsAfter, dataFiles(spark, s"$tree/codes.parquet"))
   }
 
   /** Point-in-time health of a SAVED IVF-PQ index — the same decision
@@ -2918,26 +2956,15 @@ object Graft {
       dir: String, vectorsPerList: Int, sqrtFactor: Double): IndexStats = {
     val g = loadIndexDir(c, s"${c.family}IndexStats", spark, dir,
       resolveIndexTree(spark, dir))
-    val occ = g.core.enc.groupBy(col("list_id")).count()
-      .agg(count(lit(1)).as("lists"),
-        coalesce(sum("count"), lit(0L)).as("rows"),
-        coalesce(avg("count"), lit(0.0)).as("mean"),
-        coalesce(expr("percentile_approx(count, 0.99)"), lit(0L))
-          .as("p99"),
-        coalesce(max("count"), lit(0L)).as("max"))
-      .head()
-    IndexStats(rows = occ.getLong(1),
-      dataFiles = codeFiles(spark, g.tree), buckets = g.core.buckets,
-      lists = occ.getLong(0), occMean = occ.getDouble(2),
-      occP99 = occ.getLong(3), occMax = occ.getLong(4),
-      pendingTombstones = 0L, quantizerLists = Some(g.core.nlist),
-      targetNlist = deriveNlist(occ.getLong(1),
-        if (vectorsPerList > 0) vectorsPerList else g.vpl,
-        if (sqrtFactor > 0) sqrtFactor else g.sf),
+    occupancyStats(g.core.enc,
+      dataFiles(spark, s"${g.tree}/codes.parquet"), g.core.buckets,
+      pendingTombstones = 0L, Some(g.core.nlist),
+      if (vectorsPerList > 0) vectorsPerList else g.vpl,
+      if (sqrtFactor > 0) sqrtFactor else g.sf,
       // the LIVE generation's name — it moves on every retrain/compact,
       // so before/after comparisons detect a publish (the table
       // layout's indexGeneration contract; r14 review)
-      generation = new org.apache.hadoop.fs.Path(g.tree).getName)
+      new org.apache.hadoop.fs.Path(g.tree).getName)
   }
 
   /** Rewrite a saved index's codes back to ≤ buckets files — the
@@ -2956,7 +2983,7 @@ object Graft {
     val g = loadIndexDir(c, op, spark, dir, resolveIndexTree(spark, dir))
     require(g.core.buckets > 0,
       s"$op($dir): saved index has no bucket layout")
-    val before = codeFiles(spark, g.tree)
+    val before = dataFiles(spark, s"${g.tree}/codes.parquet")
     // RECOUNT, never trust the loaded count: a crash-orphaned stale
     // count must not be re-persisted forward (r14 review)
     val rows = g.core.enc.count()
@@ -2965,7 +2992,7 @@ object Graft {
     val tree = saveIndexDir(c,
       c.withCodes(g.idx, g.core.enc.drop("bucket"), rows), dir,
       g.core.buckets, g.vpl, g.sf)
-    CompactionStats(rows, before, codeFiles(spark, tree))
+    CompactionStats(rows, before, dataFiles(spark, s"$tree/codes.parquet"))
   }
 
   final case class PqRetrainStats(rows: Long, nlistBefore: Int,
@@ -3011,7 +3038,7 @@ object Graft {
     val payload = c.payload(old.core)
     requireIndexCols(op, dir, "vectors lack", vectors, old.core.idCol,
       vecCol, payload)
-    val filesBefore = codeFiles(spark, old.tree)
+    val filesBefore = dataFiles(spark, s"${old.tree}/codes.parquet")
     val n = vectors.count()
     val nl = math.max(1,
       if (nlist > 0) nlist else deriveNlist(n, vpl, sf))
@@ -3019,7 +3046,7 @@ object Graft {
       c.rebuild(old.idx, vectors, vecCol, nl, iters, trainPerList,
         payload), dir, old.core.buckets, vpl, sf)
     PqRetrainStats(n, old.core.nlist, nl, filesBefore,
-      codeFiles(spark, tree))
+      dataFiles(spark, s"$tree/codes.parquet"))
   }
 
   /** The maintenance AUTOPILOT for a saved IVF-PQ serving dir — the
@@ -3031,13 +3058,11 @@ object Graft {
     *  1. each micro-batch appends through [[ivfPqAppend]] — frozen
     *     quantizer + codebooks, O(batch), existing code files never
     *     read;
-    *  2. every `maintainEvery` batches, [[ivfPqIndexStats]] →
-    *     [[maintenanceAdvice]], and the loop ACTS: [[ivfPqRetrain]]
-    *     when the quantizer is outgrown (or skew-actionable under the
-    *     same [[skewRetrainActionable]] hysteresis the table loop
-    *     applies — an inherently imbalanced corpus must not buy a
-    *     rebuild every cadence tick), else [[ivfPqCompact]] when
-    *     fragmented. Retrain subsumes compact (its rewrite IS one).
+    *  2. every `maintainEvery` batches, the tick the table loop runs
+    *     too: [[ivfPqIndexStats]] → [[maintenanceAdvice]] →
+    *     [[ivfPqRetrain]] when outgrown or skewed (under the
+    *     [[skewRetrainActionable]] hysteresis), else [[ivfPqCompact]]
+    *     when fragmented.
     *
     * Unlike the table-layout loop, NO quantizer-swap state lives here:
     * every [[ivfPqAppend]] resolves the dir's CURRENT pointer and
@@ -3073,36 +3098,50 @@ object Graft {
     savedDirAppender(SqDir, spark, dir, vecCol, vectors, maintainEvery,
       iters)
 
-  /** The autopilot loop of a saved dir. Cadence on the stream's
-    * batchId, exactly like [[bucketedIndexAppender]]. */
+  /** The autopilot loop of a saved dir: append, then the one
+    * [[maintenanceTick]] the table loop runs too. */
   private def savedDirAppender[I](c: DirCodec[I], spark: SparkSession,
       dir: String, vecCol: String, vectors: () => DataFrame,
       maintainEvery: Int, iters: Int): (DataFrame, Long) => Unit = {
     require(maintainEvery >= 0,
       s"${c.family}DirAppender(maintainEvery=$maintainEvery)")
-    def stats() = indexDirStats(c, spark, dir, 0, 0.0)
-    // skew left behind by the last advice-driven retrain (p99/mean);
-    // -1 until one runs — the skew-trigger hysteresis baseline
-    var postRetrainSkew = -1.0
+    val tick = maintenanceTick(maintainEvery,
+      stats = _ => indexDirStats(c, spark, dir, 0, 0.0),
+      retrain = _ => retrainIndexDir(c, spark, dir, vectors(), vecCol, 0,
+        iters, 128, 0, 0.0),
+      compact = _ => compactIndexDir(c, spark, dir))
     (batch: DataFrame, batchId: Long) => {
       appendIndexDir(c, spark, dir, batch, vecCol)
-      if (maintainEvery > 0 && (batchId + 1) % maintainEvery == 0) {
-        val st = stats()
-        val advice = maintenanceAdvice(st)
-        val curSkew =
-          if (st.occMean > 0) st.occP99 / st.occMean else 0.0
-        val skewActionable = advice.skewed &&
-          skewRetrainActionable(curSkew, postRetrainSkew)
-        if (advice.outgrown || skewActionable) {
-          retrainIndexDir(c, spark, dir, vectors(), vecCol, 0, iters, 128,
-            0, 0.0)
-          val after = stats()
-          postRetrainSkew =
-            if (after.occMean > 0) after.occP99 / after.occMean
-            else 0.0
-        } else if (advice.compact) compactIndexDir(c, spark, dir)
-      }
+      tick(spark, batchId)
     }
+  }
+
+  /** The one maintenance tick of both autopilots ([[ivfPqDirAppender]]
+    * and [[ivfSqDirAppender]] on a saved dir, [[bucketedIndexAppender]]
+    * on a table). Every `every` batches of the stream's batchId (0 =
+    * never): `stats` → [[maintenanceAdvice]] → `retrain` when the
+    * quantizer is outgrown, or skewed under the [[skewRetrainActionable]]
+    * hysteresis, else `compact` when fragmented or tombstone-heavy —
+    * retrain subsumes compact (its rewrite IS one). The returned closure
+    * holds the hysteresis baseline: the skew (p99/mean) the last
+    * advice-driven retrain left behind, -1 until one runs. Callbacks get
+    * the batch's session. */
+  private def maintenanceTick(every: Int,
+      stats: SparkSession => IndexStats, retrain: SparkSession => Unit,
+      compact: SparkSession => Unit): (SparkSession, Long) => Unit = {
+    def skew(st: IndexStats) =
+      if (st.occMean > 0) st.occP99 / st.occMean else 0.0
+    var postRetrainSkew = -1.0
+    (spark, batchId) =>
+      if (every > 0 && (batchId + 1) % every == 0) {
+        val st = stats(spark)
+        val advice = maintenanceAdvice(st)
+        if (advice.outgrown || advice.skewed &&
+            skewRetrainActionable(skew(st), postRetrainSkew)) {
+          retrain(spark)
+          postRetrainSkew = skew(stats(spark))
+        } else if (advice.compact) compact(spark)
+      }
   }
 
   /** Fail-by-name dimension check for the frozen append paths: the
@@ -3148,19 +3187,6 @@ object Graft {
     require(missing.isEmpty,
       s"$op($dir): $lacks column(s) ${missing.mkString(", ")} " +
         s"(index schema: id=$idCol, payload=${payload.mkString(", ")})")
-  }
-
-  /** Data files under a generation tree's codes frame. */
-  private def codeFiles(spark: SparkSession, tree: String): Int = {
-    val p = new org.apache.hadoop.fs.Path(s"$tree/codes.parquet")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return 0
-    val it = fs.listFiles(p, true)
-    var n = 0
-    while (it.hasNext) {
-      if (it.next().getPath.getName.endsWith(".parquet")) n += 1
-    }
-    n
   }
 
   /** What [[compactBucketedIndex]] did: `rows` survived the rewrite
@@ -3232,16 +3258,26 @@ object Graft {
   /** The pending (not yet compacted-away) tombstones of a bucketed
     * index table — empty-schema None if nothing was ever deleted. */
   def pendingTombstones(spark: SparkSession, table: String)
-      : Option[DataFrame] = {
-    val dir = tombstoneDir(bucketedTableLocation(spark, table))
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      : Option[DataFrame] =
     // a compaction clears tombstones FILE by file (so an ivfDelete
     // racing it survives), which can leave the dir present but empty
     // of data files — that's "nothing pending", not a read error
-    if (!fs.exists(dir)) None
-    else if (!fs.listStatus(dir).exists(_.getPath.getName
-        .endsWith(".parquet"))) None
-    else Some(spark.read.parquet(dir.toString))
+    parquetLeaves(spark, tombstoneDir(bucketedTableLocation(spark, table)))._2
+
+  /** The `.parquet` files directly inside `dir` (none when it is
+    * absent), and a frame over exactly those files when there are any.
+    * Reading the files, not the dir, also serves a `_`-prefixed dir,
+    * which a directory read would treat as hidden. */
+  private def parquetLeaves(spark: SparkSession,
+      dir: org.apache.hadoop.fs.Path)
+      : (Seq[org.apache.hadoop.fs.Path], Option[DataFrame]) = {
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files =
+      if (!fs.exists(dir)) Nil
+      else fs.listStatus(dir).toSeq.map(_.getPath)
+        .filter(_.getName.endsWith(".parquet"))
+    (files, if (files.isEmpty) None
+      else Some(spark.read.parquet(files.map(_.toString): _*)))
   }
 
   /** The SERVING view of a bucketed index table: the table minus its
@@ -3263,6 +3299,14 @@ object Graft {
         base.join(broadcast(t), Seq(idCol), "left_anti")
     }
   }
+
+  /** Test seam for [[compactBucketedIndex]]: invoked AFTER the
+    * tombstone snapshot and before the rewrite's reads begin. Lets
+    * CompactIndexSpec inject an [[ivfDelete]] racing the compaction
+    * and pin the claim the file-scoped clear makes: a tombstone file
+    * landing after the snapshot survives to stay pending, never wiped
+    * unapplied. No-op in production; specs must reset it. */
+  private[graft] var compactionTestHook: () => Unit = () => ()
 
   /** Rewrite a bucketed index TABLE (the [[graft.ops.StreamingOps]] p17
     * / streaming-ingest layout: `bucketBy(n, bucketCol).sortBy(...)`
@@ -3297,12 +3341,11 @@ object Graft {
     * directory-rename swap instead leaves an instant where the
     * location does not exist, which Spark's tolerant file listing
     * reads as an EMPTY table, silently returning zero rows to a
-    * concurrent serve (r13 review). The previous generation is kept
-    * for one full compaction cycle (deleted at the START of the next
-    * call), so even scans in flight across the swap instant finish;
-    * a failure at any step leaves the catalog pointing at exactly one
-    * complete file set. Appends must still be serialized with this
-    * call (the p15/p17 foreachBatch discipline — see
+    * concurrent serve (r13 review). The swap is [[publishGeneration]]:
+    * the previous generation stays one full compaction cycle, and a
+    * failure at any step leaves the catalog pointing at exactly one
+    * complete file set. Appends must still be serialized with this call
+    * (the p15/p17 foreachBatch discipline — see
     * [[bucketedIndexAppender]]): an append committing between the
     * plain read and the swap would be silently dropped by the swap.
     * Pending [[ivfDelete]] tombstones are physically dropped by the
@@ -3310,14 +3353,6 @@ object Graft {
     * it never moves across generations) cleared once the swap holds.
     * Cost: one corpus-sized shuffle — batch maintenance work,
     * amortized across the appends since the last compaction. */
-  /** Test seam for [[compactBucketedIndex]]: invoked AFTER the
-    * tombstone snapshot and before the rewrite's reads begin. Lets
-    * CompactIndexSpec inject an [[ivfDelete]] racing the compaction
-    * and pin the claim the file-scoped clear makes: a tombstone file
-    * landing after the snapshot survives to stay pending, never wiped
-    * unapplied. No-op in production; specs must reset it. */
-  private[graft] var compactionTestHook: () => Unit = () => ()
-
   def compactBucketedIndex(spark: SparkSession, table: String)
       : CompactionStats =
     rewriteIndexGeneration(spark, table, transform = (df, _) => df,
@@ -3340,8 +3375,9 @@ object Graft {
     * bucketed rewrite into a fresh `.compact-<id>` sibling generation,
     * row-parity require, `beforeSwap(newGenerationDir, fs)` (quantizer
     * carry/replace — runs inside the failure scope, so a throw deletes
-    * the torn generation), catalog-pointer swap, snapshotted-tombstone
-    * clear. All the atomicity and race arguments in
+    * the torn generation), catalog-pointer swap — the write and swap of
+    * [[publishGeneration]] — then the snapshotted-tombstone clear. All
+    * the atomicity and race arguments in
     * [[compactBucketedIndex]]'s scaladoc apply to every caller. */
   private def rewriteIndexGeneration(spark: SparkSession, table: String,
       transform: (DataFrame, Long) => DataFrame,
@@ -3370,43 +3406,11 @@ object Graft {
     val loc = new org.apache.hadoop.fs.Path(meta.location)
     val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val root = stableRoot(loc)
-    def dataFiles(p: org.apache.hadoop.fs.Path)
-        : Seq[org.apache.hadoop.fs.Path] = {
-      if (!fs.exists(p)) return Seq.empty
-      val it = fs.listFiles(p, true)
-      val out = scala.collection.mutable.ArrayBuffer[
-        org.apache.hadoop.fs.Path]()
-      while (it.hasNext) {
-        val f = it.next()
-        // skip hidden side state (the _quantizer dir, _SUCCESS markers):
-        // table scans never read it, so the file accounting must not
-        // count it either
-        val rel = f.getPath.toUri.getPath
-          .stripPrefix(p.toUri.getPath).split("/").filter(_.nonEmpty)
-        val hidden = rel.exists(s => s.startsWith("_") || s.startsWith("."))
-        if (!hidden && f.getPath.getName.endsWith(".parquet"))
-          out += f.getPath
-      }
-      out.toSeq
-    }
-    // grace cleanup: previous-generation dirs (the stable root and any
-    // older .compact-* siblings that are not the CURRENT location) were
-    // kept through one full cycle for readers in flight across the last
-    // swap — they are stale by construction now
-    val genPattern = ("\\Q" + root.getName + "\\E" +
-      "(\\.compact-[0-9a-f]{8})*").r
-    if (fs.exists(root.getParent))
-      fs.listStatus(root.getParent).foreach { st =>
-        val n = st.getPath.getName
-        if (st.isDirectory && n != loc.getName &&
-            genPattern.pattern.matcher(n).matches())
-          fs.delete(st.getPath, true)
-      }
-    val before = dataFiles(loc)
+    val before = dataFiles(spark, loc.toString)
     // a freshly created (or fully empty) index has no data files —
     // nothing to compact and no schema to infer; leave any pending
     // tombstones pending (there is nothing to apply them to)
-    if (before.isEmpty)
+    if (before == 0)
       return CompactionStats(0L, 0, 0, 0L)
     // PLAIN parquet read — see the scaladoc; spark.table() here keeps
     // the fragmentation.
@@ -3418,37 +3422,26 @@ object Graft {
     // those, and later delete only those — an ivfDelete racing this
     // compaction appends a new file, which survives the clear and
     // stays pending instead of being silently dropped unapplied.
-    val tombDir = tombstoneDir(loc)
-    val tombFiles: Seq[org.apache.hadoop.fs.Path] =
-      if (!fs.exists(tombDir)) Seq.empty
-      else fs.listStatus(tombDir).toSeq.map(_.getPath)
-        .filter(_.getName.endsWith(".parquet"))
-    val tombs =
-      if (tombFiles.isEmpty) None
-      else Some(spark.read.parquet(tombFiles.map(_.toString): _*)
-        .distinct().localCheckpoint(true))
+    val (tombFiles, tombRead) = parquetLeaves(spark, tombstoneDir(loc))
+    val tombs = tombRead.map(_.distinct().localCheckpoint(true))
     compactionTestHook() // test seam — see its scaladoc; no-op in prod
     // ONE corpus scan yields both sides of the accounting (total and
     // survivors); a separate cleaned.count() would re-scan the corpus
     // purely to derive tombstonesPurged (r13 review)
-    val marker = "__graft_tombstone_marker"
     val (rowsBefore, expected) = tombs match {
       case None =>
         val c = src.count(); (c, c)
-      case Some(t) if !src.columns.contains(marker) =>
-        val k = t.schema.head.name
-        val r = src
-          .join(broadcast(t.withColumn(marker, lit(1))), Seq(k), "left")
+      case Some(t) =>
+        // a marker name the index does not carry, so the join never
+        // meets an ambiguous reference (names resolve case-insensitively)
+        val marker = Iterator.iterate("_tombstoned")(_ + "_")
+          .find(m => !src.columns.exists(_.equalsIgnoreCase(m))).get
+        val r = src.join(broadcast(t.withColumn(marker, lit(1))),
+            Seq(t.schema.head.name), "left")
           .agg(count(lit(1)).as("n"),
             count(when(col(marker).isNull, lit(1))).as("kept"))
           .head()
         (r.getLong(0), r.getLong(1))
-      case Some(t) =>
-        // the index itself carries the marker name (pathological but
-        // possible on user tables) — fall back to two exact scans
-        // rather than an ambiguous-reference crash
-        (src.count(), src.join(broadcast(t),
-          Seq(t.schema.head.name), "left_anti").count())
     }
     val cleaned = tombs match {
       case None => src
@@ -3475,44 +3468,39 @@ object Graft {
       .write.bucketBy(nBuckets, bucketCols.head, bucketCols.tail: _*)
     if (sortCols.nonEmpty)
       w = w.sortBy(sortCols.head, sortCols.tail: _*)
-    try w.option("path", newLoc.toString).saveAsTable(tmpTbl)
-    catch { case e: Throwable =>
-      // a failed rewrite must not leak a torn generation dir until the
-      // next compaction's grace cleanup happens to reclaim it
-      try {
-        cat.dropTable(tableIdent(spark, tmpTbl),
-          ignoreIfNotExists = true, purge = false)
-        fs.delete(newLoc, true)
-      } catch { case c: Throwable => e.addSuppressed(c) }
-      throw e
-    }
-    var swapped = false
-    try {
-      val rowsAfter = spark.table(tmpTbl).count()
-      require(rowsAfter == expected,
-        s"rewriteIndexGeneration($table): rewrite produced $rowsAfter " +
-          s"of $expected rows — original left untouched")
-      beforeSwap(newLoc, fs)
+    // generations: the stable root and its .compact-* siblings
+    val genPattern = ("\\Q" + root.getName + "\\E" +
+      "(\\.compact-[0-9a-f]{8})*").r
+    publishGeneration(fs, newLoc, Some(loc.getName),
+      generations = () => fs.listStatus(root.getParent).toSeq
+        .filter(st => st.isDirectory &&
+          genPattern.pattern.matcher(st.getPath.getName).matches())
+        .map(_.getPath),
+      write = () => {
+        // the temp catalog table carries the bucket spec for the write;
+        // dropping it (never purging) leaves its files as the generation
+        val rowsAfter =
+          try {
+            w.option("path", newLoc.toString).saveAsTable(tmpTbl)
+            spark.table(tmpTbl).count()
+          } finally cat.dropTable(tableIdent(spark, tmpTbl),
+            ignoreIfNotExists = true, purge = false)
+        require(rowsAfter == expected,
+          s"rewriteIndexGeneration($table): rewrite produced $rowsAfter " +
+            s"of $expected rows — original left untouched")
+        beforeSwap(newLoc, fs)
+      },
       // the METADATA-POINTER swap (see the scaladoc): repoint the
-      // catalog entry's location at the compacted generation. Both
-      // file sets stay on disk — no absence window, no partial state;
-      // if the alter fails the catalog still points at the old one.
-      cat.alterTable(meta.copy(storage = meta.storage.copy(
-        locationUri = Some(newLoc.toUri))))
-      swapped = true
-    } finally {
-      cat.dropTable(tableIdent(spark, tmpTbl),
-        ignoreIfNotExists = true, purge = false)
-      if (!swapped) fs.delete(newLoc, true)
-    }
+      // catalog entry's location at the new generation
+      swap = () => cat.alterTable(meta.copy(storage = meta.storage.copy(
+        locationUri = Some(newLoc.toUri)))))
     spark.catalog.refreshTable(table)
     // only now that the swap holds do the SNAPSHOTTED tombstone files
     // clear — a failed compaction leaves them pending (the serve-time
     // anti-join still hides the deleted rows), and tombstones appended
     // DURING the compaction survive to the next one
     tombFiles.foreach(p => fs.delete(p, false))
-    val after = dataFiles(newLoc)
-    CompactionStats(expected, before.size, after.size,
+    CompactionStats(expected, before, dataFiles(spark, newLoc.toString),
       tombstonesPurged = rowsBefore - expected)
   }
 
@@ -3558,13 +3546,8 @@ object Graft {
     val p = new org.apache.hadoop.fs.Path(
       quantizerPath(bucketedTableLocation(spark, table)),
       DerivationSidecar)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) (400, 4.0)
-    else {
-      val in = fs.open(p)
-      val content =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
+    readSmallFile(p.getFileSystem(spark.sparkContext.hadoopConfiguration),
+        p).fold((400, 4.0)) { content =>
       // value-shaped token up to the next JSON delimiter, parsed with
       // toInt/toDouble — a digits-and-dots regex would silently
       // TRUNCATE scientific-notation doubles (1.0E-3 -> "1.0", a
@@ -3589,17 +3572,15 @@ object Graft {
     * parquet directory listings ignore it. */
   private val DerivationSidecar = ".derivation.json"
 
+  /** Written atomically: the appender's quantizer self-heal writes it
+    * into the LIVE generation, and a torn sidecar would fail every later
+    * [[loadDerivation]] as malformed. */
   private def writeDerivationSidecar(spark: SparkSession,
       quantDir: org.apache.hadoop.fs.Path, vectorsPerList: Int,
-      sqrtFactor: Double): Unit = {
-    val p = new org.apache.hadoop.fs.Path(quantDir, DerivationSidecar)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(
-      s"""{"vectorsPerList":$vectorsPerList,"sqrtFactor":$sqrtFactor}"""
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
+      sqrtFactor: Double): Unit =
+    writeAtomic(spark, new org.apache.hadoop.fs.Path(quantDir,
+      DerivationSidecar),
+      s"""{"vectorsPerList":$vectorsPerList,"sqrtFactor":$sqrtFactor}""")
 
   /** The persisted quantizer of a bucketed index table — None when the
     * table was never given one ([[saveQuantizer]] / [[retrainIndex]]).
@@ -3637,18 +3618,8 @@ object Graft {
     * immediately-consumed reads ([[indexStats]] counts it and drops
     * it) where pinning would accumulate checkpoint blocks. */
   private def rawQuantizer(spark: SparkSession, table: String)
-      : Option[DataFrame] = {
-    val dir = quantizerPath(bucketedTableLocation(spark, table))
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) return None
-    // read the leaf files EXPLICITLY: the dir itself is `_`-prefixed
-    // (hidden from table scans by design), and a directory read of a
-    // hidden path is a warn-and-proceed edge Spark does not promise
-    val files = fs.listStatus(dir).map(_.getPath)
-      .filter(_.getName.endsWith(".parquet"))
-    if (files.isEmpty) None
-    else Some(spark.read.parquet(files.map(_.toString).toSeq: _*))
-  }
+      : Option[DataFrame] =
+    parquetLeaves(spark, quantizerPath(bucketedTableLocation(spark, table)))._2
 
   final case class RetrainStats(rows: Long, filesBefore: Int,
       filesAfter: Int, tombstonesPurged: Long, nlist: Int)
@@ -3668,14 +3639,28 @@ object Graft {
   def indexStats(spark: SparkSession, table: String): IndexStats = {
     val meta = spark.sessionState.catalog
       .getTableMetadata(tableIdent(spark, table))
-    val buckets = meta.bucketSpec.map(_.numBuckets).getOrElse(0)
     val loc = new org.apache.hadoop.fs.Path(meta.location)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files =
-      if (!fs.exists(loc)) 0
-      else fs.listStatus(loc).count(st => !st.isDirectory &&
-        st.getPath.getName.endsWith(".parquet"))
-    val occ = spark.table(table).groupBy(col("list_id")).count()
+    // targetNlist under the PERSISTED derivation params
+    // ([[saveQuantizer]]'s sidecar): the outgrown trigger compares
+    // against the sizing rule the index was actually built with, not
+    // the defaults (r13 ADVICE)
+    val (vpl, sf) = loadDerivation(spark, table)
+    occupancyStats(spark.table(table), dataFiles(spark, loc.toString),
+      meta.bucketSpec.map(_.numBuckets).getOrElse(0),
+      pendingTombstones(spark, table).map(_.distinct().count())
+        .getOrElse(0L),
+      rawQuantizer(spark, table).map(_.count().toInt), vpl, sf,
+      loc.getName)
+  }
+
+  /** The [[IndexStats]] of both layouts around their one occupancy
+    * aggregation: a groupBy-count of `rows` by list_id gives the row,
+    * list, mean, approximate p99 and max occupancy, and `targetNlist`
+    * is [[deriveNlist]] at that row count under the (vpl, sf) rule. */
+  private def occupancyStats(rows: DataFrame, dataFiles: Int,
+      buckets: Int, pendingTombstones: Long, quantizerLists: Option[Int],
+      vpl: Int, sf: Double, generation: String): IndexStats = {
+    val occ = rows.groupBy(col("list_id")).count()
       .agg(count(lit(1)).as("lists"),
         coalesce(sum("count"), lit(0L)).as("rows"),
         coalesce(avg("count"), lit(0.0)).as("mean"),
@@ -3683,44 +3668,15 @@ object Graft {
           .as("p99"),
         coalesce(max("count"), lit(0L)).as("max"))
       .head()
-    val tombs = pendingTombstones(spark, table)
-      .map(_.distinct().count()).getOrElse(0L)
-    // targetNlist under the PERSISTED derivation params
-    // ([[saveQuantizer]]'s sidecar): the outgrown trigger compares
-    // against the sizing rule the index was actually built with, not
-    // the defaults (r13 ADVICE)
-    val (vpl, sf) = loadDerivation(spark, table)
-    IndexStats(rows = occ.getLong(1), dataFiles = files,
+    IndexStats(rows = occ.getLong(1), dataFiles = dataFiles,
       buckets = buckets, lists = occ.getLong(0),
       occMean = occ.getDouble(2), occP99 = occ.getLong(3),
-      occMax = occ.getLong(4), pendingTombstones = tombs,
-      quantizerLists = rawQuantizer(spark, table)
-        .map(_.count().toInt),
+      occMax = occ.getLong(4), pendingTombstones = pendingTombstones,
+      quantizerLists = quantizerLists,
       targetNlist = deriveNlist(occ.getLong(1), vpl, sf),
-      generation = loc.getName)
+      generation = generation)
   }
 
-  /** What maintenance the index owes, derived from [[IndexStats]] with
-    * thresholds calibrated on the measured failure shapes:
-    *
-    *  - `compact` when the file count exceeds `maxFilesPerBucket` per
-    *    bucket (the soak measured probes degrading ~linearly in file
-    *    count — 16× by ~100 appends — and one compaction rewrites to
-    *    ≤ buckets files) or when pending tombstones exceed
-    *    `maxTombstoneFrac` of the rows (the serve-time anti-join
-    *    broadcast grows with them).
-    *  - `retrain` when the corpus has outgrown the frozen quantizer —
-    *    `targetNlist ≥ 2 × quantizerLists`, i.e. the width a fresh
-    *    build would choose has doubled (the 1M drift run: ingesting a
-    *    distribution shift equal to the corpus doubled occupancy and
-    *    cost 3-4× probe latency; one retrain restored it) — or when
-    *    occupancy skew `occP99 > skewFactor × occMean` says mass is
-    *    crowding into few lists (drift's signature even before the
-    *    corpus doubles). Never advised without a persisted quantizer
-    *    (nothing to compare against — route your own decision).
-    *
-    * retrain subsumes compact (its rewrite IS a compaction), so a
-    * caller acts on retrain first. */
   /** `outgrown`/`skewed` name WHICH retrain trigger fired — a caller
     * applying hysteresis (the [[bucketedIndexAppender]] maintain loop)
     * needs to distinguish the monotone trigger (outgrown: a bigger
@@ -3745,6 +3701,27 @@ object Graft {
       postRetrainBaseline: Double, growth: Double = 1.25): Boolean =
     postRetrainBaseline < 0 || curSkew >= postRetrainBaseline * growth
 
+  /** What maintenance the index owes, derived from [[IndexStats]] with
+    * thresholds calibrated on the measured failure shapes:
+    *
+    *  - `compact` when the file count exceeds `maxFilesPerBucket` per
+    *    bucket (the soak measured probes degrading ~linearly in file
+    *    count — 16× by ~100 appends — and one compaction rewrites to
+    *    ≤ buckets files) or when pending tombstones exceed
+    *    `maxTombstoneFrac` of the rows (the serve-time anti-join
+    *    broadcast grows with them).
+    *  - `retrain` when the corpus has outgrown the frozen quantizer —
+    *    `targetNlist ≥ 2 × quantizerLists`, i.e. the width a fresh
+    *    build would choose has doubled (the 1M drift run: ingesting a
+    *    distribution shift equal to the corpus doubled occupancy and
+    *    cost 3-4× probe latency; one retrain restored it) — or when
+    *    occupancy skew `occP99 > skewFactor × occMean` says mass is
+    *    crowding into few lists (drift's signature even before the
+    *    corpus doubles). Never advised without a persisted quantizer
+    *    (nothing to compare against — route your own decision).
+    *
+    * retrain subsumes compact (its rewrite IS a compaction), so a
+    * caller acts on retrain first. */
   def maintenanceAdvice(stats: IndexStats, maxFilesPerBucket: Int = 4,
       maxTombstoneFrac: Double = 0.05,
       skewFactor: Double = 4.0): MaintenanceAdvice = {
@@ -3820,14 +3797,9 @@ object Graft {
     *
     * Scope: the raw-vector STREAMING layout (p17's — re-encode is just
     * re-assignment, so retrain is a one-pass rewrite). The PQ-coded
-    * persisted layout ([[ivfPqSave]]) retrains by REBUILD —
-    * [[ivfPqBuild]] over the current corpus + [[ivfPqSave]] to the
-    * same dir — because its codes quantize residuals against the
-    * trained codebooks: new centroids invalidate every code, so a
-    * "retrain" there IS the build, and the save's temp-dir swap gives
-    * the same no-torn-state publish. The split is deliberate: the
-    * streaming layout keeps raw vectors exactly so maintenance stays
-    * one-pass. */
+    * saved layout retrains by REBUILD ([[ivfPqRetrain]]): its codes
+    * quantize residuals, so new centroids invalidate every code. Both
+    * publish through the one [[publishGeneration]]. */
   def retrainIndex(spark: SparkSession, table: String, idCol: String,
       vecCol: String, nlist: Int = 0, iters: Int = 2,
       trainPerList: Int = 128): RetrainStats = {
@@ -3920,20 +3892,14 @@ object Graft {
       s"bucketedIndexAppender($table): maintainEvery without a " +
         "quantizer — an advice-driven retrain would re-assign the " +
         "index while upstream keeps routing under its own list ids")
-    // `maintainEvery`: the SELF-MAINTAINING cadence — every N batches,
-    // read [[indexStats]], take [[maintenanceAdvice]], and ACT:
-    // [[retrainIndex]] when the quantizer is outgrown/skewed (after
-    // which THIS appender's quantizer swaps to the retrained one, so
-    // the next batch routes under the NEW lists — the coherence trap a
-    // hand-rolled loop hits: appending under the old quantizer into a
-    // re-assigned table silently hides those rows from probes), else
-    // [[compactBucketedIndex]] when fragmented/tombstone-heavy.
-    // Composes with `compactEvery` (a fixed-cadence compaction floor);
-    // both run from the foreachBatch thread, serialized with appends
-    // by construction. The advice's retrain trigger compares against
-    // the table's PERSISTED quantizer, so pair this with
-    // [[saveQuantizer]] at setup (the retrain path keeps it current
-    // from then on).
+    // `maintainEvery`: the SELF-MAINTAINING cadence, the one
+    // [[maintenanceTick]] over [[indexStats]]: [[retrainIndex]], after
+    // which THIS appender's quantizer swaps to the retrained one so the
+    // next batch routes under the NEW lists (appending under the old
+    // quantizer into a re-assigned table silently hides those rows from
+    // probes), else [[compactBucketedIndex]]. Composes with
+    // `compactEvery` (a fixed-cadence compaction floor); both run from
+    // the foreachBatch thread, serialized with appends by construction.
     var quant = centroids
     // `quant`'s collected kernel state: frozen by the first batch and
     // re-frozen when a retrain swaps `quant`, so a steady-state batch
@@ -3943,11 +3909,35 @@ object Graft {
     // localCheckpoints); the caller's `centroids` arg is never released
     // here — the caller may still hold it
     var quantPinned = false
-    // skew left behind by the last advice-driven retrain (p99/mean);
-    // -1 until one runs — the skew-trigger hysteresis baseline
-    var postRetrainSkew = -1.0
+    val tick = maintenanceTick(maintainEvery,
+      stats = spark => {
+        // self-heal the setup step the retrain trigger reads: without a
+        // PERSISTED quantizer the advice never retrains (r13 review).
+        // The check reads LAZILY: loadQuantizer's eager localCheckpoint
+        // would pin blocks on every tick, never released (r13 ADVICE)
+        if (rawQuantizer(spark, table).isEmpty)
+          saveQuantizer(spark, table, quant.get)
+        indexStats(spark, table)
+      },
+      retrain = spark => {
+        retrainIndex(spark, table, idCol, vecCol)
+        // swap THIS appender onto the retrained quantizer — the next
+        // batch must route under the lists the table now holds.
+        // Release the frame the PREVIOUS swap pinned (unpersist is a
+        // no-op on localCheckpointed frames — r13 ADVICE: without
+        // this, every retrain leaks the replaced quantizer's blocks);
+        // never the caller's original `centroids`.
+        val prev = if (quantPinned) quant else None
+        quant = Some(loadQuantizer(spark, table).getOrElse(
+          throw new IllegalStateException(
+            s"bucketedIndexAppender($table): retrainIndex published " +
+              "no quantizer")))
+        quantPinned = true
+        frozen = quant.map(freezeCents)
+        prev.foreach(graft.ops.ListingCache.release)
+      },
+      compact = compactBucketedIndex(_, table))
     (batch: DataFrame, batchId: Long) => {
-      // (hysteresis rule itself: [[skewRetrainActionable]])
       // fail by NAME on a layout mismatch before any data moves — the
       // append itself would only throw Spark's generic bucket-spec
       // error after the batch-sized shuffle ran
@@ -3979,103 +3969,12 @@ object Graft {
       enc.repartition(buckets, col("list_id")).write.mode("append")
         .bucketBy(buckets, "list_id").sortBy("list_id")
         .saveAsTable(table)
-      if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) {
+      if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
         compactBucketedIndex(batch.sparkSession, table)
-        ()
-      }
-      if (maintainEvery > 0 && (batchId + 1) % maintainEvery == 0) {
-        val spark = batch.sparkSession
-        // self-heal the setup step the retrain trigger reads: without a
-        // PERSISTED quantizer, maintenanceAdvice can never advise a
-        // retrain (quantizerLists = None) and the feature's core
-        // promise silently degrades to compaction-only (r13 review) —
-        // the appender owns the quantizer, so persisting it IS setup
-        // existence check through the LAZY reader: loadQuantizer's
-        // eager localCheckpoint would pin quantizer-sized blocks on
-        // every cadence tick with nothing ever releasing them — a
-        // long-running appender leaking storage without bound
-        // (r13 ADVICE)
-        if (rawQuantizer(spark, table).isEmpty)
-          saveQuantizer(spark, table, quant.get)
-        val stats0 = indexStats(spark, table)
-        val advice = maintenanceAdvice(stats0)
-        // hysteresis on the SKEW trigger: an inherently imbalanced
-        // corpus (Zipfian topics) reads p99 > 4x mean even right after
-        // training, and a retrain cannot equalize what the data
-        // refuses to — without this check the loop would pay a
-        // full-corpus rewrite every maintainEvery batches forever
-        // (r13 review). A skew-only retrain runs when the skew has
-        // grown ≥ 25% past what the LAST retrain left behind (or no
-        // baseline exists yet); the outgrown trigger stays monotone.
-        val curSkew =
-          if (stats0.occMean > 0) stats0.occP99 / stats0.occMean
-          else 0.0
-        val skewActionable = advice.skewed &&
-          skewRetrainActionable(curSkew, postRetrainSkew)
-        if (advice.outgrown || skewActionable) {
-          retrainIndex(spark, table, idCol, vecCol)
-          // swap THIS appender onto the retrained quantizer — the next
-          // batch must route under the lists the table now holds.
-          // Release the frame the PREVIOUS swap pinned (unpersist is a
-          // no-op on localCheckpointed frames — r13 ADVICE: without
-          // this, every retrain leaks the replaced quantizer's blocks);
-          // never the caller's original `centroids`.
-          val prev = if (quantPinned) quant else None
-          quant = Some(loadQuantizer(spark, table).getOrElse(
-            throw new IllegalStateException(
-              s"bucketedIndexAppender($table): retrainIndex published " +
-                "no quantizer")))
-          quantPinned = true
-          frozen = quant.map(freezeCents)
-          prev.foreach(graft.ops.ListingCache.release)
-          val after = indexStats(spark, table)
-          postRetrainSkew =
-            if (after.occMean > 0) after.occP99 / after.occMean else 0.0
-        } else if (advice.compact) {
-          compactBucketedIndex(spark, table)
-          ()
-        }
-      }
+      tick(batch.sparkSession, batchId)
     }
   }
 
-  /** Steps (4)–(6) of [[ivfPqTopK]] against a built [[IvfPqIndex]]:
-    * probe selection ([[probeTopN]] — the CentroidTopNF32 kernel),
-    * ADC over ONLY the probed lists' codes (equi-join
-    * on the list id, never a flat scan), exact-cosine rerank of the
-    * per-query `shortlist`. `queries` carries (`qidCol`, `qvecCol`);
-    * `vectors` is the full-vector store (`index.idCol`, `vecCol`) the
-    * rerank re-joins by id — the codes-only index never stores vectors.
-    * A query whose id equals a corpus id is treated as that corpus row
-    * asking for neighbors: the row itself is excluded.
-    *
-    * Two physical regimes by query-batch size, identical results
-    * (IvfPqManyQuerySpec pins row-for-row parity; the switch probes
-    * `queries` with a LIMIT-bounded count, never a full scan):
-    *
-    *  - ≤ `broadcastQueries`: the probe rows (each carrying its ~KB
-    *    qlut) BROADCAST into the candidate join and the global
-    *    shortlist window shuffles the bounded n_q·nProbe·occupancy
-    *    candidate set — the right plan while n_q·nProbe·|qlut| fits an
-    *    executor.
-    *  - above it (batched retrieval, SemDeDup neighborhoods): probe
-    *    rows SHUFFLE-join the codes on list_id — qluts ride the
-    *    exchange, nothing query-sized is ever broadcast or collected —
-    *    and the shortlist cut is TWO-PHASE (the s12 discipline): rank
-    *    within (list_id, query_id) first, which the join output's
-    *    list_id hash partitioning already satisfies (a sort, ZERO new
-    *    Exchange — PlanPropertiesSpec), so the global window shuffles
-    *    n_q·nProbe·min(shortlist, occupancy) rows and occupancy — which
-    *    grows as √n/4 past the [[deriveNlist]] crossover — drops out of
-    *    the one unbounded shuffle.
-    *
-    * `pruneLists = true` (the [[ivfPqLoad]] serving path) is EAGER and
-    * BLOCKING at call time: the probe subplan is localCheckpoint-pinned
-    * and its distinct list ids collected (bounded by min(n_q·nProbe,
-    * nlist) ints) before this method returns, so the pushdown filter is
-    * derived from the exact probe rows the candidate join will read —
-    * never from a re-execution that nondeterministic inputs could
-    * change. */
   /** The shared prune step of the [[ivfPqSearch]]/[[ivfSqSearch]]
     * serving paths: pin the probe rows (localCheckpoint — the r12
     * determinism fix: the pushdown id set must come from the EXACT
@@ -4173,6 +4072,43 @@ object Graft {
       .filter(col("rnk") <= k)
   }
 
+  /** Steps (4)–(6) of [[ivfPqTopK]] against a built [[IvfPqIndex]]:
+    * probe selection ([[probeTopN]] — the CentroidTopNF32 kernel),
+    * ADC over ONLY the probed lists' codes (equi-join
+    * on the list id, never a flat scan), exact-cosine rerank of the
+    * per-query `shortlist`. `queries` carries (`qidCol`, `qvecCol`);
+    * `vectors` is the full-vector store (`index.idCol`, `vecCol`) the
+    * rerank re-joins by id — the codes-only index never stores vectors.
+    * A query whose id equals a corpus id is treated as that corpus row
+    * asking for neighbors: the row itself is excluded.
+    *
+    * Two physical regimes by query-batch size, identical results
+    * (IvfPqManyQuerySpec pins row-for-row parity; the switch probes
+    * `queries` with a LIMIT-bounded count, never a full scan):
+    *
+    *  - ≤ `broadcastQueries`: the probe rows (each carrying its ~KB
+    *    qlut) BROADCAST into the candidate join and the global
+    *    shortlist window shuffles the bounded n_q·nProbe·occupancy
+    *    candidate set — the right plan while n_q·nProbe·|qlut| fits an
+    *    executor.
+    *  - above it (batched retrieval, SemDeDup neighborhoods): probe
+    *    rows SHUFFLE-join the codes on list_id — qluts ride the
+    *    exchange, nothing query-sized is ever broadcast or collected —
+    *    and the shortlist cut is TWO-PHASE (the s12 discipline): rank
+    *    within (list_id, query_id) first, which the join output's
+    *    list_id hash partitioning already satisfies (a sort, ZERO new
+    *    Exchange — PlanPropertiesSpec), so the global window shuffles
+    *    n_q·nProbe·min(shortlist, occupancy) rows and occupancy — which
+    *    grows as √n/4 past the [[deriveNlist]] crossover — drops out of
+    *    the one unbounded shuffle.
+    *
+    * `pruneLists = true` (the [[ivfPqLoad]] serving path) is EAGER and
+    * BLOCKING at call time: the probe subplan is localCheckpoint-pinned
+    * and its distinct list ids collected (bounded by min(n_q·nProbe,
+    * nlist) ints) before this method returns, so the pushdown filter is
+    * derived from the exact probe rows the candidate join will read —
+    * never from a re-execution that nondeterministic inputs could
+    * change. */
   def ivfPqSearch(index: IvfPqIndex, queries: DataFrame, qidCol: String,
       qvecCol: String, vectors: DataFrame, vecCol: String, k: Int,
       nProbe: Int, shortlist: Int = 0,
@@ -4244,23 +4180,6 @@ object Graft {
       q0.select(col("query_id"), col("qe"), col("qn")), k, small)
   }
 
-  /** List-count derivation for every k-means-derived index (IVF, IVF-PQ,
-    * the kNN self-join blocks, SemDeDup's clusters): the smaller of the
-    * fixed-occupancy count `n / vectorsPerList` and the Faiss convention
-    * `sqrtFactor · √n` (Jégou et al.; Faiss guidelines use 4√n–16√n).
-    *
-    * Why two regimes: at small n, fixed occupancy keeps every list
-    * usefully populated (√n would over-split a 10⁴-vector corpus into
-    * starving lists). At large n, a count ∝ n makes the one full-corpus
-    * assignment pass O(n·nlist) = O(n²/occupancy) — the engine's last
-    * super-linear term (r8 verdict); capping at `sqrtFactor·√n` bounds
-    * assignment at O(n^1.5) while per-list occupancy grows as
-    * √n/sqrtFactor, which the PQ/ADC scan path absorbs linearly. The
-    * crossover sits at n = (vectorsPerList·sqrtFactor)² — 2.56M vectors
-    * at the defaults — so every committed fixture (and the 10×/30×/100×
-    * scale runs) resolves to the identical layout the fixed-occupancy
-    * derivation produced, while a 10⁹-vector corpus gets 4√n ≈ 126k
-    * lists instead of 2.5M and a 20× cheaper build. */
   /** The serving-shortlist sizing rule, measured at 1M and 5M
     * (SCALE.md r12 shortlist analysis + the r13 5M-decade row): the
     * ADC shortlist must cover a probed LIST'S OCCUPANCY, or recall
@@ -4305,6 +4224,23 @@ object Graft {
         math.ceil(nlist * spanFraction * slack).toLong)).toInt
   }
 
+  /** List-count derivation for every k-means-derived index (IVF, IVF-PQ,
+    * the kNN self-join blocks, SemDeDup's clusters): the smaller of the
+    * fixed-occupancy count `n / vectorsPerList` and the Faiss convention
+    * `sqrtFactor · √n` (Jégou et al.; Faiss guidelines use 4√n–16√n).
+    *
+    * Why two regimes: at small n, fixed occupancy keeps every list
+    * usefully populated (√n would over-split a 10⁴-vector corpus into
+    * starving lists). At large n, a count ∝ n makes the one full-corpus
+    * assignment pass O(n·nlist) = O(n²/occupancy) — the engine's last
+    * super-linear term (r8 verdict); capping at `sqrtFactor·√n` bounds
+    * assignment at O(n^1.5) while per-list occupancy grows as
+    * √n/sqrtFactor, which the PQ/ADC scan path absorbs linearly. The
+    * crossover sits at n = (vectorsPerList·sqrtFactor)² — 2.56M vectors
+    * at the defaults — so every committed fixture (and the 10×/30×/100×
+    * scale runs) resolves to the identical layout the fixed-occupancy
+    * derivation produced, while a 10⁹-vector corpus gets 4√n ≈ 126k
+    * lists instead of 2.5M and a 20× cheaper build. */
   def deriveNlist(n: Long, vectorsPerList: Int = 400,
       sqrtFactor: Double = 4.0, floor: Int = 1): Int = {
     require(n >= 0 && vectorsPerList > 0 && sqrtFactor > 0 && floor > 0,
@@ -4341,7 +4277,7 @@ object Graft {
     * Only widths [[hammingBandLayout]] can band at `radius` are
     * candidates (each band must live inside one 60-bit word);
     * words = 1 is always admissible because the single-word path bands
-    * by ceil-division at any radius. radius = 0 is an equality join at
+    * by an even split at any radius. radius = 0 is an equality join at
     * any width, so the narrow signature always wins. */
   def deriveHammingWords(n: Long, radius: Int = 3,
       collisionsPerItem: Double = 32.0, maxWords: Int = 4): Int = {
@@ -5542,7 +5478,7 @@ object Graft {
     * rows whose [[mediaAHash]] values differ in at most `radius` of the
     * 60 bits, found by exact pigeonhole banding ([[hammingPairs]] — the
     * d03 SimHash discipline applied to media bytes). The 60-bit hash
-    * bands by ceil-division, so every radius below 60 is supported.
+    * bands by an even split, so every radius below 60 is supported.
     *
     * `words = 0` (the default) DERIVES the signature width from the
     * corpus count ([[deriveHammingWords]] — one count job, the
@@ -5591,8 +5527,8 @@ object Graft {
     * m11-vs-m13: the wide signature wins from ~150 k docs on, i.e.
     * 60-bit up to n = 8·2¹⁵/4 = 65 536 docs, 120-bit past it). Every
     * committed fixture resolves to words = 1 — d03's exact pair set.
-    * Pin `words` to force a width. The 60-bit path bands by
-    * ceil-division, so any radius < 60 is supported there; the wide
+    * Pin `words` to force a width. The 60-bit path bands by an even
+    * split, so any radius < 60 is supported there; the wide
     * path's word-aligned radii are documented at
     * [[simhashWideNearDupPairs]]. */
   def simhashNearDupPairs(df: DataFrame, idCol: String, textCol: String,
@@ -5699,24 +5635,25 @@ object Graft {
   /** The one band-layout rule of the hamming near-dup join, and the only
     * place that decides which radii a signature of `words` 60-bit words
     * can band: band j of the radius+1 disjoint bands is (word, shift,
-    * mask). One word bands by ceil-division (width ⌈60/(radius+1)⌉ at
-    * shift j·width), so every radius below 60 is supported; wider
-    * signatures band at width 60·words/(radius+1), which must divide 60
-    * so every band lies inside one word. radius 0 needs no bands (an
-    * equality join on every word) and is supported at every width.
-    * None = the radius is not supported. */
+    * mask). The bits split evenly — the first bits mod (radius+1) bands
+    * take one bit more than the rest — so every band lies below bit 60
+    * of its word and no band is empty. One word bands at every radius
+    * below 60; wider signatures need radius+1 to divide the bits and the
+    * band width to divide 60, so every band lies inside one word.
+    * radius 0 needs no bands (an equality join on every word) and is
+    * supported at every width. None = the radius is not supported. */
   private[api] def hammingBandLayout(words: Int,
       radius: Int): Option[Seq[(Int, Int, Long)]] = {
     val bits = 60 * words
     val bands = radius + 1
     if (radius == 0) return Some(Nil)
     if (radius < 0 || radius >= bits) return None
-    val width = (bits + bands - 1) / bands
-    if (words > 1 && (bits % bands != 0 || 60 % width != 0)) None
+    val (width, extra) = (bits / bands, bits % bands)
+    if (words > 1 && (extra != 0 || 60 % width != 0)) None
     else Some((0 until bands).map { j =>
-      val at = j * width
-      val mask = (1L << width) - 1
-      if (words == 1) (0, at, mask) else (at / 60, at % 60, mask)
+      val at = j * width + math.min(j, extra)
+      val mask = (1L << (width + (if (j < extra) 1 else 0))) - 1
+      (at / 60, at % 60, mask)
     })
   }
 
@@ -5822,8 +5759,9 @@ object Graft {
     * the [[cosinePairsExact]] guard pattern) and the join REFUSES to run
     * when it exceeds `hotShingleGuardDf`: one web-scale stop-shingle
     * ("in the the") makes its self-join bucket alone O(df²) rows and can
-    * dominate the whole shuffle. */
-  /** Returns the admitted shingle table plus, when the guard pass ran
+    * dominate the whole shuffle.
+    *
+    * Returns the admitted shingle table plus, when the guard pass ran
     * (the default), the exact candidate volume Σ df·(df−1)/2 it
     * computed for free — [[candidateAggPartitions]] derives the pair
     * aggregation's width from it. */
@@ -5912,11 +5850,6 @@ object Graft {
     ngramJaccardPairsFromShingles(shingles(df, idCol, textCol, n), idCol,
       threshold, maxShingleDf, hotShingleGuardDf)
 
-  /** [[ngramJaccardPairs]] over a PRECOMPUTED distinct shingle table
-    * (id, s) — for sharing one materialized shingle build across the
-    * dedup family (see [[minhashLshPairsFromShingles]]). The df cap /
-    * hot-shingle tripwire still run here (they are one map+agg pass
-    * over the shared table, not a rebuild). */
   /** The 60-bit shingle join key: first 15 hex chars of md5(s), the
     * [[ngramNovelty]] width. The shingle equi-joins run entirely in
     * this hash space — the shuffle then carries 16-byte (id, h) rows
@@ -5931,6 +5864,11 @@ object Graft {
   private def shingleKey(c: Column): Column =
     graft.functions.TextExpressions.hexSliceLong(md5(c), 1, 15)
 
+  /** [[ngramJaccardPairs]] over a PRECOMPUTED distinct shingle table
+    * (id, s) — for sharing one materialized shingle build across the
+    * dedup family (see [[minhashLshPairsFromShingles]]). The df cap /
+    * hot-shingle tripwire still run here (they are one map+agg pass
+    * over the shared table, not a rebuild). */
   def ngramJaccardPairsFromShingles(shIn: DataFrame, idCol: String,
       threshold: Double = 0.5,
       maxShingleDf: Int = Int.MaxValue,

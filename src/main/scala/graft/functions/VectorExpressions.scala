@@ -7,17 +7,6 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType, LongType}
 
-/** Native Catalyst expression for the float-vector dot product: the hot
-  * inner loop of every similarity/dedup operator over embeddings.
-  *
-  * Semantics are EXACTLY the sequential fold
-  * `sum_i (double)a[i] * (double)b[i]` — the same order of operations as
-  * the `aggregate(zip_with(...))` HOF it replaces and as the DuckDB
-  * oracle's `list_sum(list_transform(list_zip(...)))`, so results stay
-  * bit-identical while the codegen'd loop runs on primitive arrays with
-  * zero per-element allocation (the HOF materializes a zipped struct
-  * array per row-pair, which dominated the d05/s01 profile).
-  */
 /** Element-wise float difference of two ARRAY<FLOAT> columns — the
   * residual step of residual IVF-PQ encoding (`x - centroid(list)`,
   * the Faiss IndexIVFPQ convention; see [[graft.api.Graft.ivfPqBuild]]).
@@ -72,6 +61,17 @@ object VecSubF32 {
   }
 }
 
+/** Native Catalyst expression for the float-vector dot product: the hot
+  * inner loop of every similarity/dedup operator over embeddings.
+  *
+  * Semantics are EXACTLY the sequential fold
+  * `sum_i (double)a[i] * (double)b[i]` — the same order of operations as
+  * the `aggregate(zip_with(...))` HOF it replaces and as the DuckDB
+  * oracle's `list_sum(list_transform(list_zip(...)))`, so results stay
+  * bit-identical while the codegen'd loop runs on primitive arrays with
+  * zero per-element allocation (the HOF materializes a zipped struct
+  * array per row-pair, which dominated the d05/s01 profile).
+  */
 case class DotProductF32(left: Expression, right: Expression)
     extends BinaryExpression {
 

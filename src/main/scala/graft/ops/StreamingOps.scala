@@ -12,18 +12,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, MapType, StringType, StructField, StructType}
 
-/** Streaming-surface proofs that run inside the batch correctness gate:
-  * each query publishes fixture rows through the embedded broker, runs a
-  * real Structured Streaming query over the `pubsub` source
-  * (Trigger.AvailableNow, memory sink), and returns a batch DataFrame the
-  * DuckDB oracle can reproduce with plain SQL over the same fixture —
-  * so the connector's source, sink, offsets, replay cache and ack flow
-  * are all inside the hash-checked path, not just unit tests.
-  *
-  * The embedded broker is in-process (the `endpoint` option would point at
-  * a real service on a cluster); publishing happens from executors via
-  * foreachPartition, the shape a distributed producer would have.
-  */
 /** Per-user running event counter on the Spark 4 arbitrary-state API:
   * typed ValueState survives across micro-batches; each batch emits the
   * per-key increment (see p10). */
@@ -45,15 +33,23 @@ class UserEventCounter
   }
 }
 
+/** Streaming-surface proofs that run inside the batch correctness gate:
+  * each query publishes fixture rows through the embedded broker, runs a
+  * real Structured Streaming query over the `pubsub` source
+  * (Trigger.AvailableNow, memory sink), and returns a batch DataFrame the
+  * DuckDB oracle can reproduce with plain SQL over the same fixture —
+  * so the connector's source, sink, offsets, replay cache and ack flow
+  * are all inside the hash-checked path, not just unit tests.
+  *
+  * The embedded broker is in-process (the `endpoint` option would point at
+  * a real service on a cluster); publishing happens from executors via
+  * foreachPartition, the shape a distributed producer would have.
+  */
 object StreamingOps {
 
   private val publishedBrokers = mutable.Map[(String, String, Int), String]()
   private val bucketedTables = mutable.Map[String, (String, String)]()
 
-  /** Scratch checkpoint dir for in-gate streams. Prefers tmpfs
-    * (/dev/shm): the offset/commit-log fsyncs per micro-batch are pure
-    * harness overhead locally — a cluster would point this at HDFS/S3,
-    * where the same fsyncs are the durability contract. */
   /** Remove a per-rep scratch directory once its contents have been
     * materialized (p16 — r9 review: temp probe output accumulated one
     * copy per bench/verify rep). */
@@ -63,6 +59,10 @@ object StreamingOps {
     ()
   }
 
+  /** Scratch checkpoint dir for in-gate streams. Prefers tmpfs
+    * (/dev/shm): the offset/commit-log fsyncs per micro-batch are pure
+    * harness overhead locally — a cluster would point this at HDFS/S3,
+    * where the same fsyncs are the durability contract. */
   private[ops] def tmpCheckpoint(prefix: String): String = {
     val shm = java.nio.file.Paths.get("/dev/shm")
     if (Files.isDirectory(shm) && Files.isWritable(shm))
@@ -255,6 +255,21 @@ object StreamingOps {
       .option("ack_deadline_seconds", "600")
       .load()
 
+  /** The gates' admission-capped reader: at most `cap` messages per
+    * micro-batch (max_messages_per_trigger), static partitioning, and
+    * [[sourceDF]]'s drain-sized ack deadline. */
+  private def cappedSourceDF(s: SparkSession, ep: String, sub: String,
+      cap: Long): DataFrame =
+    s.readStream.format("pubsub")
+      .option("project_id", "p")
+      .option("subscription", sub)
+      .option("endpoint", ep)
+      .option("max_messages_per_trigger", cap.toString)
+      .option("max_messages_per_partition", "50000")
+      .option("dynamic_partitioning", "false")
+      .option("ack_deadline_seconds", "600")
+      .load()
+
   /** Drain the stream into a memory sink synchronously; returns the sink
     * table.
     *
@@ -279,6 +294,124 @@ object StreamingOps {
     } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
     df.sparkSession.table(name)
   }
+
+  /** The saved-dir streaming ingest gate of p18 (IVF-PQ) and p19
+    * (IVF-SQ8), one body for both codecs. It seeds a saved index with
+    * the first 40 rows' codes, streams the REST through foreachBatch ->
+    * `append`, then checks three things a broken ingest cannot fake:
+    * (a) the grown codes are ROW-IDENTICAL to the batch build's over the
+    * full corpus (same frozen state + same deterministic encode =>
+    * multiset-equal — the p17 "incremental equals batch" oracle, at
+    * code level); (b) the SEED code files never changed (existing codes
+    * are never read or rewritten — per-append cost is O(batch), the
+    * scale property); (c) a full-coverage probe of the grown index
+    * returns the EXACT top-k, which DuckDB recomputes
+    * ([[SavedIngestOracle]]). `search` gets (loaded index, queries,
+    * vectors, shortlist). */
+  private def savedIngestGate[I](s: SparkSession, d: String, tag: String,
+      build: (DataFrame, Int) => I, enc: I => DataFrame,
+      withCodes: (I, DataFrame, Long) => I, save: (I, String) => Unit,
+      append: (String, DataFrame) => Unit, load: String => I,
+      search: (I, DataFrame, DataFrame, Int) => DataFrame): DataFrame = {
+    val (ep, sub) = publishEmbeddingsAll(s, d)
+    val emb = Tables.load(s, d, "embeddings")
+    val n = emb.count()
+    val cap = math.max(50L, (n + 3) / 4)
+    val nlist = math.max(2, graft.api.Graft.deriveNlist(n))
+    // iters = 1 (exactness oracle — see s17); the codes frame pins
+    // once so the seed write and both sides of (a) read the
+    // materialized codes instead of re-running the encode pass
+    val built = build(emb, nlist)
+    val codes = enc(built).localCheckpoint(true)
+    val dir = Files.createTempDirectory(s"graft-$tag-idx").toString
+    val seed = codes.filter(col("vec_id") < 40)
+    save(withCodes(built, seed, seed.count()), dir)
+    // snapshot the seed code files: appends may only ADD files
+    // (resolve the live generation — the save layout is
+    // generational since r14)
+    def codeFiles(): Map[String, Long] = {
+      def walk(f: java.io.File): Seq[java.io.File] =
+        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
+        else Seq(f)
+      walk(new java.io.File(
+        s"${graft.api.Graft.resolveIndexTree(s, dir)}/codes.parquet"))
+        .filter(_.getName.endsWith(".parquet"))
+        .map(f => f.getPath -> f.length()).toMap
+    }
+    val seedFiles = codeFiles()
+    val sizes =
+      new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val q = cappedSourceDF(s, ep, sub, cap)
+      .selectExpr(
+        "CAST(attributes['vec_id'] AS BIGINT) AS vec_id",
+        "transform(split(CAST(data AS STRING), ','), " +
+          "x -> CAST(x AS FLOAT)) AS embedding")
+      .filter(col("vec_id") >= 40)
+      .writeStream
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        sizes.add(batch.count())
+        append(dir, batch)
+      }
+      .option("checkpointLocation", tmpCheckpoint(s"graft-$tag"))
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination(300000)
+    val after = codeFiles()
+    val seedIntact = seedFiles.forall { case (p, len) =>
+      after.get(p).contains(len) }
+    val loaded = load(dir)
+    val nIndexed = enc(loaded).count()
+    import scala.jdk.CollectionConverters._
+    val sz = sizes.asScala.toSeq
+    require(nIndexed == n && sz.forall(_ <= cap),
+      s"$tag ingest broke: indexed $nIndexed of $n over batches $sz " +
+        s"(cap $cap)")
+    // (a) grown codes == batch-built codes, row for row: multiset
+    // equality via ONE tagged-union aggregation (sum of +1/-1 tags
+    // zero for every row group) — exact like the r15 two-way
+    // exceptAll but one shuffle + one action instead of two of each
+    val cols = codes.columns.toSeq
+    val grown = enc(loaded).drop("bucket")
+    val codesMatch = grown.select(cols.map(col): _*)
+      .withColumn("__t", lit(1L))
+      .unionAll(codes.withColumn("__t", lit(-1L)))
+      .groupBy(cols.map(col): _*).agg(sum("__t").as("__d"))
+      .filter(col("__d") =!= 0L).isEmpty
+    val queries = emb.filter(col("vec_id") < 40)
+      .select(col("vec_id").as("query_id"), col("embedding"))
+    val res = search(loaded, queries, emb, math.max(5, n.toInt))
+      .select(col("query_id"), col("neighbor_id"), col("rnk"),
+        round(col("cos"), 4).as("cos"))
+      .withColumn("codes_match", lit(codesMatch))
+      .withColumn("seed_intact", lit(seedIntact))
+      .withColumn("n_indexed", lit(nIndexed))
+      .orderBy("query_id", "rnk")
+    val rows = res.collect()
+    val out = s.createDataFrame(
+      java.util.Arrays.asList(rows: _*), res.schema)
+    deleteRecursively(new java.io.File(dir))
+    out
+  }
+
+  /** [[savedIngestGate]]'s oracle: the exact cosine top-5 of the first
+    * 40 embeddings over the whole table, plus the three gate flags. */
+  private val SavedIngestOracle =
+    "WITH nn AS (SELECT vec_id, embedding, " +
+      "sqrt(list_sum(list_transform(list_zip(embedding, embedding), " +
+      "x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))) AS nrm " +
+      "FROM embeddings), " +
+      "p AS (SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id, " +
+      "list_sum(list_transform(list_zip(a.embedding, b.embedding), " +
+      "x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE))) / " +
+      "(a.nrm * b.nrm) AS cos FROM nn a JOIN nn b " +
+      "ON a.vec_id < 40 AND a.vec_id <> b.vec_id), " +
+      "r AS (SELECT query_id, neighbor_id, cos, ROW_NUMBER() OVER " +
+      "(PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rnk " +
+      "FROM p) SELECT query_id, neighbor_id, " +
+      "CAST(rnk AS BIGINT) AS rnk, ROUND(cos, 4) AS cos, " +
+      "true AS codes_match, true AS seed_intact, " +
+      "(SELECT COUNT(*) FROM embeddings) AS n_indexed " +
+      "FROM r WHERE rnk <= 5 ORDER BY query_id, rnk"
 
   val defs: Seq[Q] = Seq(
 
@@ -728,15 +861,7 @@ object StreamingOps {
         // bench pay hundreds of micro-batch round-trips
         val cap = math.max(2500L, nEvents / 4)
         val outDir = Files.createTempDirectory("graft-p14").toString
-        val q = s.readStream.format("pubsub")
-          .option("project_id", "p")
-          .option("subscription", sub)
-          .option("endpoint", ep)
-          .option("max_messages_per_trigger", cap.toString)
-          .option("max_messages_per_partition", "50000")
-          .option("dynamic_partitioning", "false")
-          .option("ack_deadline_seconds", "600")
-          .load()
+        val q = cappedSourceDF(s, ep, sub, cap)
           .selectExpr("CAST(data AS STRING) AS event_type",
             "CAST(attributes['value'] AS DOUBLE) AS value")
           .writeStream
@@ -794,15 +919,7 @@ object StreamingOps {
             StructField("keep_id", LongType))))
           .write.bucketBy(8, "digest").sortBy("digest")
           .option("path", s"$idxDir/t").saveAsTable(idxTbl)
-        val q = s.readStream.format("pubsub")
-          .option("project_id", "p")
-          .option("subscription", sub)
-          .option("endpoint", ep)
-          .option("max_messages_per_trigger", cap.toString)
-          .option("max_messages_per_partition", "50000")
-          .option("dynamic_partitioning", "false")
-          .option("ack_deadline_seconds", "600")
-          .load()
+        val q = cappedSourceDF(s, ep, sub, cap)
           .selectExpr("CAST(attributes['doc_id'] AS BIGINT) AS doc_id",
             "CAST(data AS STRING) AS text")
           .writeStream
@@ -1024,15 +1141,7 @@ object StreamingOps {
             "vec_id")
           .localCheckpoint(true)
         val outDir = Files.createTempDirectory("graft-p16").toString
-        val q = s.readStream.format("pubsub")
-          .option("project_id", "p")
-          .option("subscription", sub)
-          .option("endpoint", ep)
-          .option("max_messages_per_trigger", "10")
-          .option("max_messages_per_partition", "50000")
-          .option("dynamic_partitioning", "false")
-          .option("ack_deadline_seconds", "600")
-          .load()
+        val q = cappedSourceDF(s, ep, sub, 10)
           .selectExpr(
             "CAST(attributes['vec_id'] AS BIGINT) AS query_id",
             "transform(split(CAST(data AS STRING), ','), " +
@@ -1115,15 +1224,7 @@ object StreamingOps {
           .option("path", s"$idxDir/t").saveAsTable(idxTbl)
         val sizes =
           new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-        val q = s.readStream.format("pubsub")
-          .option("project_id", "p")
-          .option("subscription", sub)
-          .option("endpoint", ep)
-          .option("max_messages_per_trigger", cap.toString)
-          .option("max_messages_per_partition", "50000")
-          .option("dynamic_partitioning", "false")
-          .option("ack_deadline_seconds", "600")
-          .load()
+        val q = cappedSourceDF(s, ep, sub, cap)
           .selectExpr(
             "CAST(attributes['vec_id'] AS BIGINT) AS vec_id",
             "transform(split(CAST(data AS STRING), ','), " +
@@ -1201,246 +1302,43 @@ object StreamingOps {
       // arriving batch against the FROZEN trained state (Faiss
       // `IndexIVFPQ.add`: quantizer + codebooks train once on
       // historical data; an append assigns + residual-encodes map-side
-      // and appends into the bucket partitions). The gate seeds a saved
-      // index with the first 40 rows' codes, streams the REST through
-      // foreachBatch -> Graft.ivfPqAppend, then checks three things a
-      // broken ingest cannot fake: (a) the grown codes are
-      // ROW-IDENTICAL to the batch build's over the full corpus (same
-      // frozen state + same deterministic encode => except() empty both
-      // ways — the p17 "incremental equals batch" oracle, at code
-      // level); (b) the SEED code files never changed (existing codes
-      // are never read or rewritten — per-append cost is O(batch),
-      // the scale property); (c) a full-coverage probe of the grown
-      // index returns the EXACT top-k, which DuckDB recomputes.
-      (s, d) => {
-        val (ep, sub) = publishEmbeddingsAll(s, d)
-        val emb = Tables.load(s, d, "embeddings")
-        val n = emb.count()
-        val cap = math.max(50L, (n + 3) / 4)
-        val nlist = math.max(2, graft.api.Graft.deriveNlist(n))
-        // iters = 1 (exactness oracle — see s17); the codes frame pins
-        // once so the seed write and both exceptAll sides read the
-        // materialized codes instead of re-running the encode pass
-        val built0 = graft.api.Graft.ivfPqBuild(emb, "vec_id",
+      // and appends into the bucket partitions). The gate itself is
+      // [[savedIngestGate]], shared with p19.
+      (s, d) => savedIngestGate[graft.api.Graft.IvfPqIndex](s, d, "p18",
+        build = (emb, nlist) => graft.api.Graft.ivfPqBuild(emb, "vec_id",
           "embedding", dim = 64, nlist = nlist, m = 8, ksub = 16,
-          iters = 1)
-        val built = built0.copy(enc = built0.enc.localCheckpoint(true))
-        val dir = Files.createTempDirectory("graft-p18-pq").toString
-        val seed = built.enc.filter(col("vec_id") < 40)
-        graft.api.Graft.ivfPqSave(
-          built.copy(enc = seed, rows = seed.count()), dir, buckets = 8)
-        // snapshot the seed code files: appends may only ADD files
-        // (resolve the live generation — the save layout is
-        // generational since r14)
-        def codeFiles(): Map[String, Long] = {
-          def walk(f: java.io.File): Seq[java.io.File] =
-            if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
-            else Seq(f)
-          walk(new java.io.File(
-            s"${graft.api.Graft.resolveIndexTree(s, dir)}/codes.parquet"))
-            .filter(_.getName.endsWith(".parquet"))
-            .map(f => f.getPath -> f.length()).toMap
-        }
-        val seedFiles = codeFiles()
-        val sizes =
-          new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-        val q = s.readStream.format("pubsub")
-          .option("project_id", "p")
-          .option("subscription", sub)
-          .option("endpoint", ep)
-          .option("max_messages_per_trigger", cap.toString)
-          .option("max_messages_per_partition", "50000")
-          .option("dynamic_partitioning", "false")
-          .option("ack_deadline_seconds", "600")
-          .load()
-          .selectExpr(
-            "CAST(attributes['vec_id'] AS BIGINT) AS vec_id",
-            "transform(split(CAST(data AS STRING), ','), " +
-              "x -> CAST(x AS FLOAT)) AS embedding")
-          .filter(col("vec_id") >= 40)
-          .writeStream
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            sizes.add(batch.count())
-            graft.api.Graft.ivfPqAppend(s, dir, batch, "embedding")
-            ()
-          }
-          .option("checkpointLocation", tmpCheckpoint("graft-p18"))
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination(300000)
-        val after = codeFiles()
-        val seedIntact = seedFiles.forall { case (p, len) =>
-          after.get(p).contains(len) }
-        val loaded = graft.api.Graft.ivfPqLoad(s, dir)
-        val nIndexed = loaded.enc.count()
-        import scala.jdk.CollectionConverters._
-        val sz = sizes.asScala.toSeq
-        require(nIndexed == n && sz.forall(_ <= cap),
-          s"p18 ingest broke: indexed $nIndexed of $n over batches $sz " +
-            s"(cap $cap)")
-        // (a) grown codes == batch-built codes, row for row: multiset
-        // equality via ONE tagged-union aggregation (sum of +1/-1 tags
-        // zero for every row group) — exact like the r15 two-way
-        // exceptAll but one shuffle + one action instead of two of each
-        val cols = built.enc.columns.toSeq
-        val grown = loaded.enc.drop("bucket")
-        val codesMatch = grown.select(cols.map(col): _*)
-          .withColumn("__t", lit(1L))
-          .unionAll(built.enc.withColumn("__t", lit(-1L)))
-          .groupBy(cols.map(col): _*).agg(sum("__t").as("__d"))
-          .filter(col("__d") =!= 0L).isEmpty
-        val queries = emb.filter(col("vec_id") < 40)
-          .select(col("vec_id").as("query_id"), col("embedding"))
-        val search = graft.api.Graft.ivfPqSearch(loaded, queries,
-          "query_id", "embedding", emb, "embedding", k = 5,
-          nProbe = loaded.nlist, shortlist = math.max(5, n.toInt))
-          .select(col("query_id"), col("neighbor_id"), col("rnk"),
-            round(col("cos"), 4).as("cos"))
-          .withColumn("codes_match", lit(codesMatch))
-          .withColumn("seed_intact", lit(seedIntact))
-          .withColumn("n_indexed", lit(nIndexed))
-          .orderBy("query_id", "rnk")
-        val rows = search.collect()
-        val out = s.createDataFrame(
-          java.util.Arrays.asList(rows: _*), search.schema)
-        deleteRecursively(new java.io.File(dir))
-        out
-      },
-      Some("WITH nn AS (SELECT vec_id, embedding, " +
-        "sqrt(list_sum(list_transform(list_zip(embedding, embedding), " +
-        "x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))) AS nrm " +
-        "FROM embeddings), " +
-        "p AS (SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id, " +
-        "list_sum(list_transform(list_zip(a.embedding, b.embedding), " +
-        "x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE))) / " +
-        "(a.nrm * b.nrm) AS cos FROM nn a JOIN nn b " +
-        "ON a.vec_id < 40 AND a.vec_id <> b.vec_id), " +
-        "r AS (SELECT query_id, neighbor_id, cos, ROW_NUMBER() OVER " +
-        "(PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rnk " +
-        "FROM p) SELECT query_id, neighbor_id, " +
-        "CAST(rnk AS BIGINT) AS rnk, ROUND(cos, 4) AS cos, " +
-        "true AS codes_match, true AS seed_intact, " +
-        "(SELECT COUNT(*) FROM embeddings) AS n_indexed " +
-        "FROM r WHERE rnk <= 5 ORDER BY query_id, rnk")),
+          iters = 1),
+        enc = _.enc, withCodes = (i, enc, rows) =>
+          i.copy(enc = enc, rows = rows),
+        save = graft.api.Graft.ivfPqSave(_, _, buckets = 8),
+        append = graft.api.Graft.ivfPqAppend(s, _, _, "embedding"),
+        load = graft.api.Graft.ivfPqLoad(s, _),
+        search = (i, queries, emb, shortlist) =>
+          graft.api.Graft.ivfPqSearch(i, queries, "query_id", "embedding",
+            emb, "embedding", k = 5, nProbe = i.nlist,
+            shortlist = shortlist)),
+      Some(SavedIngestOracle)),
 
     Q("p19_stream_sq_ingest",
       // SQ-CODED streaming ingest (r14 verdict item 2) — p18 for the
       // SAVED IVF-SQ8 layout, the TRAINING-FREE ingest path (the more
       // common one: SQ8's encode has no codebooks, so a frozen-state
       // append is the pure Faiss `IndexIVFScalarQuantizer.add` — only
-      // the coarse quantizer is frozen state at all). The gate seeds a
-      // saved index with the first 40 rows' codes, streams the REST
-      // through foreachBatch -> Graft.ivfSqAppend, then pins p18's
-      // three properties a broken ingest cannot fake: (a) grown codes
-      // ROW-IDENTICAL to the batch build's over the full corpus
-      // (exceptAll empty both ways); (b) SEED code files byte-intact
-      // (appends only ADD files — per-append cost O(batch)); (c) a
-      // full-coverage probe of the grown index returns the EXACT
-      // top-k, which DuckDB recomputes.
-      (s, d) => {
-        val (ep, sub) = publishEmbeddingsAll(s, d)
-        val emb = Tables.load(s, d, "embeddings")
-        val n = emb.count()
-        val cap = math.max(50L, (n + 3) / 4)
-        val nlist = math.max(2, graft.api.Graft.deriveNlist(n))
-        // iters = 1 (exactness oracle, the s17/p18 convention); pin the
-        // codes once so the seed write and both exceptAll sides read
-        // the materialized encode
-        val built0 = graft.api.Graft.ivfSqBuild(emb, "vec_id",
-          "embedding", nlist = nlist, iters = 1)
-        val built = built0.copy(enc = built0.enc.localCheckpoint(true))
-        val dir = Files.createTempDirectory("graft-p19-sq").toString
-        val seed = built.enc.filter(col("vec_id") < 40)
-        graft.api.Graft.ivfSqSave(
-          built.copy(enc = seed, rows = seed.count()), dir, buckets = 8)
-        def codeFiles(): Map[String, Long] = {
-          def walk(f: java.io.File): Seq[java.io.File] =
-            if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
-            else Seq(f)
-          walk(new java.io.File(
-            s"${graft.api.Graft.resolveIndexTree(s, dir)}/codes.parquet"))
-            .filter(_.getName.endsWith(".parquet"))
-            .map(f => f.getPath -> f.length()).toMap
-        }
-        val seedFiles = codeFiles()
-        val sizes =
-          new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-        val q = s.readStream.format("pubsub")
-          .option("project_id", "p")
-          .option("subscription", sub)
-          .option("endpoint", ep)
-          .option("max_messages_per_trigger", cap.toString)
-          .option("max_messages_per_partition", "50000")
-          .option("dynamic_partitioning", "false")
-          .option("ack_deadline_seconds", "600")
-          .load()
-          .selectExpr(
-            "CAST(attributes['vec_id'] AS BIGINT) AS vec_id",
-            "transform(split(CAST(data AS STRING), ','), " +
-              "x -> CAST(x AS FLOAT)) AS embedding")
-          .filter(col("vec_id") >= 40)
-          .writeStream
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            sizes.add(batch.count())
-            graft.api.Graft.ivfSqAppend(s, dir, batch, "embedding")
-            ()
-          }
-          .option("checkpointLocation", tmpCheckpoint("graft-p19"))
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination(300000)
-        val after = codeFiles()
-        val seedIntact = seedFiles.forall { case (p, len) =>
-          after.get(p).contains(len) }
-        val loaded = graft.api.Graft.ivfSqLoad(s, dir)
-        val nIndexed = loaded.enc.count()
-        import scala.jdk.CollectionConverters._
-        val sz = sizes.asScala.toSeq
-        require(nIndexed == n && sz.forall(_ <= cap),
-          s"p19 ingest broke: indexed $nIndexed of $n over batches $sz " +
-            s"(cap $cap)")
-        // (a) grown codes == batch-built codes, row for row: multiset
-        // equality via ONE tagged-union aggregation (the p18 shape)
-        val cols = built.enc.columns.toSeq
-        val grown = loaded.enc.drop("bucket")
-        val codesMatch = grown.select(cols.map(col): _*)
-          .withColumn("__t", lit(1L))
-          .unionAll(built.enc.withColumn("__t", lit(-1L)))
-          .groupBy(cols.map(col): _*).agg(sum("__t").as("__d"))
-          .filter(col("__d") =!= 0L).isEmpty
-        val queries = emb.filter(col("vec_id") < 40)
-          .select(col("vec_id").as("query_id"), col("embedding"))
-        val search = graft.api.Graft.ivfSqSearch(loaded, queries,
-          "query_id", "embedding", emb, "embedding", k = 5,
-          nProbe = loaded.nlist, shortlist = math.max(5, n.toInt))
-          .select(col("query_id"), col("neighbor_id"), col("rnk"),
-            round(col("cos"), 4).as("cos"))
-          .withColumn("codes_match", lit(codesMatch))
-          .withColumn("seed_intact", lit(seedIntact))
-          .withColumn("n_indexed", lit(nIndexed))
-          .orderBy("query_id", "rnk")
-        val rows = search.collect()
-        val out = s.createDataFrame(
-          java.util.Arrays.asList(rows: _*), search.schema)
-        deleteRecursively(new java.io.File(dir))
-        out
-      },
-      Some("WITH nn AS (SELECT vec_id, embedding, " +
-        "sqrt(list_sum(list_transform(list_zip(embedding, embedding), " +
-        "x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))) AS nrm " +
-        "FROM embeddings), " +
-        "p AS (SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id, " +
-        "list_sum(list_transform(list_zip(a.embedding, b.embedding), " +
-        "x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE))) / " +
-        "(a.nrm * b.nrm) AS cos FROM nn a JOIN nn b " +
-        "ON a.vec_id < 40 AND a.vec_id <> b.vec_id), " +
-        "r AS (SELECT query_id, neighbor_id, cos, ROW_NUMBER() OVER " +
-        "(PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rnk " +
-        "FROM p) SELECT query_id, neighbor_id, " +
-        "CAST(rnk AS BIGINT) AS rnk, ROUND(cos, 4) AS cos, " +
-        "true AS codes_match, true AS seed_intact, " +
-        "(SELECT COUNT(*) FROM embeddings) AS n_indexed " +
-        "FROM r WHERE rnk <= 5 ORDER BY query_id, rnk")),
+      // the coarse quantizer is frozen state at all). Same gate, same
+      // three properties as p18.
+      (s, d) => savedIngestGate[graft.api.Graft.IvfSqIndex](s, d, "p19",
+        build = (emb, nlist) => graft.api.Graft.ivfSqBuild(emb, "vec_id",
+          "embedding", nlist = nlist, iters = 1),
+        enc = _.enc, withCodes = (i, enc, rows) =>
+          i.copy(enc = enc, rows = rows),
+        save = graft.api.Graft.ivfSqSave(_, _, buckets = 8),
+        append = graft.api.Graft.ivfSqAppend(s, _, _, "embedding"),
+        load = graft.api.Graft.ivfSqLoad(s, _),
+        search = (i, queries, emb, shortlist) =>
+          graft.api.Graft.ivfSqSearch(i, queries, "query_id", "embedding",
+            emb, "embedding", k = 5, nProbe = i.nlist,
+            shortlist = shortlist)),
+      Some(SavedIngestOracle)),
 
     Q("p20_pq_autopilot",
       // The saved-layout AUTOPILOT end-to-end (r14 verdict item 1):
@@ -1507,15 +1405,7 @@ object StreamingOps {
         // maintenance tick retrained
         gens.add(new org.apache.hadoop.fs.Path(
           graft.api.Graft.resolveIndexTree(s, dir)).getName)
-        val q = s.readStream.format("pubsub")
-          .option("project_id", "p")
-          .option("subscription", sub)
-          .option("endpoint", ep)
-          .option("max_messages_per_trigger", cap.toString)
-          .option("max_messages_per_partition", "50000")
-          .option("dynamic_partitioning", "false")
-          .option("ack_deadline_seconds", "600")
-          .load()
+        val q = cappedSourceDF(s, ep, sub, cap)
           .selectExpr(
             "CAST(attributes['vec_id'] AS BIGINT) AS vec_id",
             "transform(split(CAST(data AS STRING), ','), " +

@@ -60,4 +60,18 @@ class MainScopeSpec extends AnyFunSuite with Matchers {
       case (p, src) if src.contains("GRAFT_TIMING") => p.toString
     } shouldBe empty
   }
+
+  test("no scaladoc block in src/main opens on the line right after " +
+    "another block closes, which would leave the upper one attached to " +
+    "no definition") {
+    sources should not be empty
+    val stacked = sources.flatMap { case (p, src) =>
+      val lines = src.split("\n", -1)
+      (1 until lines.length).collect {
+        case i if lines(i).trim.startsWith("/**") &&
+          lines(i - 1).trim.endsWith("*/") => s"$p:${i + 1}"
+      }
+    }
+    stacked shouldBe empty
+  }
 }

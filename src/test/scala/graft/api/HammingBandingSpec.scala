@@ -12,7 +12,10 @@ import org.scalatest.matchers.should.Matchers
   * before they shared one implementation, kept here as reference code:
   *  - `ceilBands`: the 60-bit `ahashNearDupPairs` / `simhashNearDupPairs`
   *    split, radius+1 bands of ⌈60/(radius+1)⌉ bits at shift j·width,
-  *    any radius below 60;
+  *    any radius below 60. Where radius+1 does not divide 60 it put a
+  *    band at shift ≥ 60, which is 0 for every 60-bit signature and so
+  *    made every pair a candidate; the one-word layout now splits evenly
+  *    and matches it only where radius+1 divides 60;
   *  - `alignedBands`: the wide `simhashWideNearDupPairs` /
   *    `ahashWideNearDupPairs` split, radius 0 as an equality join, else
   *    bands of 60·words/(radius+1) bits that must divide 60.
@@ -64,8 +67,10 @@ class HammingBandingSpec extends AnyFunSuite with Matchers {
     "accepted, with the same (word, shift, mask) per band") {
     for (words <- Seq(1, 2, 4); radius <- 0 until 60 * words)
       withClue(s"words=$words radius=$radius: ") {
-        Graft.hammingBandLayout(words, radius) shouldBe
-          oracle(words, radius)
+        if (words > 1 || 60 % (radius + 1) == 0)
+          Graft.hammingBandLayout(words, radius) shouldBe
+            oracle(words, radius)
+        else Graft.hammingBandLayout(words, radius) should not be empty
       }
     // the one widened case: ahashWideNearDupPairs(words = 1) used the
     // aligned split, and now bands like the 60-bit op it hashes like
@@ -77,6 +82,24 @@ class HammingBandingSpec extends AnyFunSuite with Matchers {
       Graft.hammingBandLayout(1, r) shouldBe alignedBands(1, r))
     Graft.hammingBandLayout(2, 120) shouldBe None
     Graft.hammingBandLayout(1, -1) shouldBe None
+  }
+
+  test("one word splits its 60 bits evenly at every radius: disjoint " +
+    "bands covering bits 0-59, all below shift 60, widths within 1") {
+    for (radius <- 1 until 60) withClue(s"radius=$radius: ") {
+      val bands = Graft.hammingBandLayout(1, radius).get
+      bands should have size (radius + 1)
+      val spans = bands.map { case (word, shift, mask) =>
+        word shouldBe 0
+        shift should be < 60
+        val width = java.lang.Long.bitCount(mask)
+        mask shouldBe (1L << width) - 1
+        shift until shift + width
+      }
+      spans.flatten.sorted shouldBe (0 until 60)
+      val widths = spans.map(_.size)
+      (widths.max - widths.min) should be <= 1
+    }
   }
 
   test("an unsupported radius fails by op name and lists the supported " +
